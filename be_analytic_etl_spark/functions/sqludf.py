@@ -22,22 +22,30 @@ from pyspark.sql import SparkSession
 
 from be_analytic_etl_spark.operators.textstats import WS_PLUS_SQLEXPR
 
-# Single-element transform(array(x), v -> body) is the expression-level
-# let (see functions.let / dedup._portable_minhash_sql): bind the
-# stripped string once instead of inlining the regexp per reference.
-_BR_BODY = (
-    "element_at(transform(array(regexp_replace(trim(s), '[^0-9.,]', '')), "
-    "stripped -> try_cast("
-    "CASE WHEN contains(stripped, ',') "
-    "THEN translate(translate(stripped, '.', ''), ',', '.') "
-    "WHEN length(stripped) - length(translate(stripped, '.', '')) >= 2 "
-    "THEN translate(stripped, '.', '') "
-    "ELSE stripped END AS DOUBLE)), 1)"
-)
+
+def br_number_to_double_sql(arg: str) -> str:
+    """``br_number_to_double`` as SQL text over the SQL expression ``arg``.
+
+    The one text form of the parse: it is the body of the SQL UDF below
+    and the month-column parse of ``sources.ingest``. A single-element
+    transform(array(x), v -> body) is the expression-level let (see
+    functions.let / dedup._portable_minhash_sql): it binds the stripped
+    string once instead of inlining the regexp per reference, so ``arg``
+    appears once."""
+    return (
+        f"element_at(transform(array(regexp_replace(trim({arg}), '[^0-9.,]', '')), "
+        "stripped -> try_cast("
+        "CASE WHEN contains(stripped, ',') "
+        "THEN translate(translate(stripped, '.', ''), ',', '.') "
+        "WHEN length(stripped) - length(translate(stripped, '.', '')) >= 2 "
+        "THEN translate(stripped, '.', '') "
+        "ELSE stripped END AS DOUBLE)), 1)"
+    )
+
 
 #: name -> (argument signature, return type, body SQL referencing the args)
 SQL_UDFS: dict[str, tuple[str, str, str]] = {
-    "br_number_to_double": ("s STRING", "DOUBLE", _BR_BODY),
+    "br_number_to_double": ("s STRING", "DOUBLE", br_number_to_double_sql("s")),
     "strip_trailing_zeros": (
         "s STRING",
         "STRING",

@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from be_analytic_etl_spark.functions.sqltext import quote_ident
 from be_analytic_etl_spark.operators.textstats import (
     PORTABLE_P,
     WS_PLUS_SQLEXPR,
@@ -154,7 +155,7 @@ def minhash_signature(
     from be_analytic_etl_spark.functions import let
 
     if portable and isinstance(col, str):
-        return F.expr(_portable_minhash_sql(col, num_hashes, shingle_n))
+        return F.expr(_portable_minhash_sql(quote_ident(col), num_hashes, shingle_n))
 
     shingles = word_ngrams(col, shingle_n)
     if portable:
@@ -220,7 +221,7 @@ def band_buckets(
         # Whole banding tree as one parsed SQL expression (see
         # _portable_minhash_sql); the signature let-binds so the per-band
         # lambda slices ONE evaluated array.
-        sig_sql = _portable_minhash_sql(text_col, num_hashes, shingle_n)
+        sig_sql = _portable_minhash_sql(quote_ident(text_col), num_hashes, shingle_n)
         bucket = (
             f"concat_ws(',', slice(sg, b * {rows_per_band} + 1, {rows_per_band}))"
         )

@@ -12,6 +12,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from be_analytic_etl_spark.functions.rounding import stable_round
+from be_analytic_etl_spark.functions.sqltext import quote_ident
 
 #: Explicit whitespace class, byte-identical in Java regex (Spark) and
 #: RE2 (DuckDB). Java's ``\s`` is ``[ \t\n\x0B\f\r]`` while RE2's omits
@@ -132,9 +133,9 @@ def stopword_ratio(col: Column | str, stopwords: list[str] | None = None) -> Col
 
 
 def _tokenize_sqltext(c: str) -> str:
-    """SQL text twin of ``tokenize`` (same two references to the trimmed
-    input; dedup._tokenize_sql mirrors this — kept separate because
-    dedup imports from this module)."""
+    """SQL text twin of ``tokenize`` over the SQL expression ``c`` (same
+    two references to the trimmed input; dedup._tokenize_sql mirrors this
+    — kept separate because dedup imports from this module)."""
     t = f"trim(coalesce({c}, ''))"
     return (
         f"CASE WHEN {t} = '' THEN CAST(array() AS ARRAY<STRING>) "
@@ -142,14 +143,16 @@ def _tokenize_sqltext(c: str) -> str:
     )
 
 
-def _quality_score_sql(c: str) -> str:
-    """``quality_score`` as ONE SQL string (same expression tree, same
+def _quality_score_sql(col: str) -> str:
+    """``quality_score`` of the column NAMED ``col`` (backtick-quoted
+    here) as ONE SQL string (same expression tree, same
     IEEE operation order — transcribed term by term from the Column
     form below). Parsed in a single py4j round trip instead of the
     ~60-call Column chain: quality_score feeds the 14-query ``_q6``
     family plus a dozen direct call sites, and the Column build cost
     ~0.3 s per plan (cProfile, r14). Double literals carry the ``D``
     suffix so they parse as DOUBLE, not DECIMAL."""
+    c = quote_ident(col)
     toks = _tokenize_sqltext(c)
     cc = f"coalesce({c}, '')"
     sw = ",".join(f"'{s.lower()}'" for s in STOPWORDS)
@@ -233,7 +236,7 @@ def lang_id(col: Column | str, default: str = "und") -> Column:
     py4j per build); a Column falls back to the composed form
     (identical tree/values)."""
     if isinstance(col, str):
-        toks = _tokenize_sqltext(col)
+        toks = _tokenize_sqltext(quote_ident(col))
         langs = sorted(LANG_MARKERS)
         score = {
             lang: (

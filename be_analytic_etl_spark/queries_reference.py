@@ -275,7 +275,7 @@ register(
 
 
 # ---------------------------------------------------------------------------
-# Ingest E2E (P5+P6+P7+P8+P9+P10+P11 and R1-R4 as ONE chain): a synthetic
+# Ingest E2E (P5+P6+P7+P8+P9+P10 and R1-R4 as ONE chain): a synthetic
 # ANATEL-shaped wide file — preamble metadata rows, a marker header row
 # ('GRUPO ECONÔMICO'), month columns labelled 'YYYY-MM-DD HH:MM:SS', BR-
 # locale value strings, an embedded metadata row and an all-null row — is

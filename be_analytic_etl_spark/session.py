@@ -11,7 +11,9 @@ cluster. Defaults below are chosen so the same code runs unchanged on
 - UTC session timezone so date semantics match the DuckDB oracle;
 - ANSI off: casts/parses return NULL on malformed input, matching the
   reference's ``errors='coerce'`` semantics
-  (``/root/reference/main.py:521-525``).
+  (``/root/reference/main.py:521-525``);
+- driver heap sized from the memory the process can use (``driver_memory``),
+  not a fixed figure larger than small hosts.
 """
 
 from __future__ import annotations
@@ -25,6 +27,47 @@ from pyspark.sql import SparkSession
 # not a fixed cost — safe to set high for cluster runs. Tests override to
 # the local core count via SPARK_GRAFT_CPUS.
 _DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+#: Ceiling of the derived driver heap, in MiB.
+_MAX_DRIVER_MEM_MB = 24 * 1024
+
+
+def driver_memory() -> str:
+    """``spark.driver.memory``: ``$SPARK_GRAFT_DRIVER_MEM`` when set, else
+    half the memory this process can use, capped at 24g.
+
+    In local mode the driver JVM also hosts the executors, and the
+    Python driver and workers need the rest. The usable memory is the
+    cgroup limit (v2 ``memory.max``, v1 ``memory.limit_in_bytes``) when
+    one is set, else ``MemAvailable``; when neither can be read, the cap.
+    """
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    usable = _usable_memory_bytes()
+    if usable is None:
+        return f"{_MAX_DRIVER_MEM_MB}m"
+    return f"{max(512, min(_MAX_DRIVER_MEM_MB, usable // 2 // 2**20))}m"
+
+
+def _usable_memory_bytes() -> int | None:
+    for path in ("/sys/fs/cgroup/memory.max", "/sys/fs/cgroup/memory/memory.limit_in_bytes"):
+        try:
+            with open(path) as f:
+                raw = f.read().strip()
+        except OSError:
+            continue
+        # "max" (v2) or a near-2^63 page-rounded value (v1) means no limit
+        if raw.isdigit() and int(raw) < 2**60:
+            return int(raw)
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemAvailable:"):
+                    return int(line.split()[1]) * 1024
+    except OSError:
+        pass
+    return None
 
 
 def get_spark(app_name: str = "be-analytic-etl-spark", master: str | None = None) -> SparkSession:
@@ -71,7 +114,7 @@ def get_spark(app_name: str = "be-analytic-etl-spark", master: str | None = None
         .config("spark.sql.ansi.enabled", "false")
         # Arrow for the few pandas-interop paths (ODS bridge, pandas UDFs).
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", driver_memory())
         # Long-lived sessions run many queries back-to-back (bench, driver
         # rounds): the UI status store retains per-execution metrics and the
         # heap fills over a suite, degrading the tail. Headless engine — no

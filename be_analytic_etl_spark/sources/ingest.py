@@ -10,23 +10,39 @@ Re-expresses the reference's extract/transform chain
     -> drop all-null rows                         (main.py:254)      P8
     -> first-two-column rename                    (main.py:286-291)  P9
     -> date-column-name normalization             (main.py:398-428)  P10
-    -> decimal-string tidy                        (main.py:431-479)  P11
     -> unpivot wide->long                         (main.py:482-518)  R1
     -> month parse, value parse (BR locale), service tag
                                                   (main.py:520-582)  R2-R4
 
+The decimal-string tidy (main.py:431-479, P11) runs only on the
+pass-through branch, where cells stay strings: stripping trailing zeros
+from a digit string never changes the double it parses to.
+
 Scale notes:
-- Each raw file is small (a spreadsheet), so header discovery does one
-  cheap action per file; the *fleet* of files is processed as independent
-  lazy plans unioned on the fixed long schema (SURVEY §7.4.4: unpivot
-  FIRST, then union — per-file month columns differ, the long schema
-  doesn't).
-- All value cleaning is native column expressions (codegen); the only
-  pandas bridge is ODS parsing, which has no Spark source (SURVEY §7.3).
+- Each raw file is small (a spreadsheet). Building a file's plan runs
+  exactly ONE Spark job (the ordered header lookup) and a fixed number of
+  py4j calls, however many columns the file has. Plans are analyzed as
+  they are built (Spark SQL, SIGMOD 2015), so that build cost is paid on
+  the driver per file and again by every consumer of the plan:
+  * the CSV read takes an explicit all-string schema as wide as the
+    widest line up to the header row, measured on the driver from the
+    bytes the charset probe reads; there is no inference pass, and a
+    narrow first line cannot cut the table to its width;
+  * the metadata-row and blank-row filters are one SQL expression over
+    ``concat_ws`` of the row: no per-column OR chain (whose depth grew
+    with the column count until the analyzer overflowed its stack);
+  * rename, month-label normalization, BR-number parse and the unpivot
+    are one ``selectExpr`` (a ``stack`` generator) built as text.
+- The *fleet* of files is processed as independent lazy plans unioned on
+  the fixed long schema (SURVEY §7.4.4: unpivot FIRST, then union —
+  per-file month columns differ, the long schema doesn't).
+- All value cleaning is native SQL expressions (codegen); the only pandas
+  bridge is ODS parsing, which has no Spark source (SURVEY §7.3).
 """
 
 from __future__ import annotations
 
+import csv
 import datetime as _dt
 import io
 import re
@@ -34,10 +50,9 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from be_analytic_etl_spark.functions import (
-    br_number_to_double,
-    strip_trailing_zeros,
-)
+from be_analytic_etl_spark.functions import strip_trailing_zeros
+from be_analytic_etl_spark.functions.sqltext import quote_ident, sql_string
+from be_analytic_etl_spark.functions.sqludf import br_number_to_double_sql
 
 #: Metadata phrases marking preamble rows to drop (main.py:240-243).
 METADATA_PATTERNS = [
@@ -55,6 +70,18 @@ HEADER_MARKERS = ["GRUPO ECONÔMICO", "GRUPO_ECON"]
 #: Encodings tried for CSV ingest, in order (main.py:315).
 CSV_ENCODINGS = ["utf-8", "latin-1", "iso-8859-1", "cp1252"]
 
+#: Probed encoding -> the charset name Spark's CSV reader accepts (Spark
+#: 4.1 takes only iso-8859-1, us-ascii, utf-8, utf-16* and utf-32). cp1252
+#: reads as ISO-8859-1, as in the reference, whose probe tries latin-1
+#: (which never fails) first.
+SPARK_CHARSETS = {
+    "utf-8": "UTF-8",
+    "latin-1": "ISO-8859-1",
+    "iso-8859-1": "ISO-8859-1",
+    "cp1252": "ISO-8859-1",
+}
+
+_PROBE_BYTES = 4096
 _ROWNUM = "__rownum"
 
 
@@ -63,12 +90,38 @@ def read_headerless_csv(
 ) -> DataFrame:
     """All-string headerless CSV read with encoding fallback.
 
-    Spark reads one charset per load, so we probe encodings with a cheap
-    driver-side read of the first KB (SURVEY §7.4.6) and then issue a single
-    correctly-configured distributed read.
+    Spark reads one charset per load, so the encoding is probed with a
+    cheap driver-side read of the file head (SURVEY §7.4.6), mapped to
+    Spark's name for it, and a single correctly-configured distributed
+    read is issued. The schema is explicit: ``_c0 .. _c{w-1}`` strings,
+    ``w`` the widest line up to and including the header row, measured in
+    the same driver-side pass. Shorter rows are null-padded. ``encoding``
+    takes a Python codec or a Spark charset name.
     """
-    enc = encoding or probe_encoding(path)
-    return spark.read.csv(path, sep=sep, header=False, inferSchema=False, encoding=enc)
+    with open(path, "rb") as f:
+        enc = encoding or _probe(f.read(_PROBE_BYTES), CSV_ENCODINGS)
+        f.seek(0)
+        lines = io.TextIOWrapper(f, encoding=enc, errors="replace")
+        width = _header_width(lines, sep, HEADER_MARKERS)
+    schema = ", ".join(f"_c{i} STRING" for i in range(width))
+    return spark.read.schema(schema).csv(
+        path, sep=sep, header=False, encoding=SPARK_CHARSETS.get(enc.lower(), enc)
+    )
+
+
+def _header_width(lines, sep: str, markers: list[str]) -> int:
+    """Field count of the widest line up to and including the first line
+    with a cell holding a header marker (every line when none does). Each
+    line splits on its own, as Spark's line-by-line CSV parse does."""
+    upper_markers = [m.upper() for m in markers]
+    width = 1
+    for line in lines:
+        line = line.rstrip("\r\n")
+        cells = next(csv.reader([line], delimiter=sep), []) if len(sep) == 1 else line.split(sep)
+        width = max(width, len(cells))
+        if any(m in c.upper() for c in cells for m in upper_markers):
+            break
+    return width
 
 
 def read_typed_csv(
@@ -89,23 +142,29 @@ def read_typed_csv(
 
 
 def probe_encoding(path: str, candidates: list[str] | None = None) -> str:
-    """Pick the first encoding that decodes the file head cleanly.
+    """Pick the first encoding that decodes the file head cleanly (the
+    reference's probe order, ``CSV_ENCODINGS``). ``SPARK_CHARSETS`` maps
+    the result to the name Spark's reader takes."""
+    with open(path, "rb") as f:
+        return _probe(f.read(_PROBE_BYTES), candidates or CSV_ENCODINGS)
 
-    A multi-byte sequence cut by the 4 KiB probe window is not evidence
-    against the encoding (UTF-8 code points span up to 4 bytes): a decode
-    error confined to the last 3 bytes of the window is treated as a clean
+
+def _probe(head: bytes, candidates: list[str]) -> str:
+    """First of ``candidates`` that decodes ``head`` cleanly.
+
+    A multi-byte sequence cut by the probe window is not evidence against
+    the encoding (UTF-8 code points span up to 4 bytes): a decode error
+    confined to the last 3 bytes of a full window is treated as a clean
     decode, so a valid UTF-8 file can't fall through to latin-1 (which
     never fails) and come back mojibake'd.
     """
-    head = open(path, "rb").read(4096)
-    for enc in candidates or CSV_ENCODINGS:
+    for enc in candidates:
         try:
             head.decode(enc)
             return enc
         except UnicodeDecodeError as e:
-            if len(head) == 4096 and e.start >= len(head) - 3:
+            if len(head) == _PROBE_BYTES and e.start >= len(head) - 3:
                 return enc
-            continue
     return "utf-8"
 
 
@@ -195,30 +254,41 @@ def read_ods(spark: SparkSession, path_or_bytes) -> DataFrame:
     return spark.createDataFrame(padded, schema=schema)
 
 
-def _with_rownum(df: DataFrame) -> DataFrame:
-    # Order-stable within a single-file read; used only for per-file header
-    # slicing where the file fits few partitions.
-    return df.withColumn(_ROWNUM, F.monotonically_increasing_id())
+def _row_text_sql(cols: list[str], sep_sql: str) -> str:
+    """SQL text: the row's non-null cells joined by ``sep_sql``."""
+    return f"concat_ws({sep_sql}, {', '.join(quote_ident(c) for c in cols)})"
 
 
-def discover_header(df: DataFrame, markers: list[str] | None = None) -> tuple[DataFrame, list[str]]:
-    """P5+P6: find the header row by marker, promote its values to column
-    names, return (data rows below the header, promoted names)."""
-    markers = markers or HEADER_MARKERS
+def _has_any_sql(cols: list[str], needles: list[str]) -> str:
+    """SQL predicate: some cell contains one of ``needles``
+    (case-insensitive, null-safe). One RLIKE of the escaped needles over
+    the upper-cased row joined by char(1), which no needle contains, so a
+    match never spans two cells."""
+    alternation = "|".join(re.escape(n.upper()) for n in needles)
+    return f"upper({_row_text_sql(cols, 'char(1)')}) RLIKE {sql_string(alternation)}"
+
+
+def _not_blank_sql(cols: list[str]) -> str:
+    """SQL predicate: some cell holds more than spaces."""
+    return "trim(" + _row_text_sql(cols, "''") + ") <> ''"
+
+
+def _find_header(df: DataFrame, markers: list[str]) -> tuple[DataFrame, list]:
+    """(rows below the header row, the header row's cells): ONE ordered
+    action. ``take`` scans partitions in order, so the first row with a
+    marker cell is the minimum row number. No marker: every row, and a
+    header of nulls."""
     cols = df.columns
-    dfn = _with_rownum(df)
+    dfn = df.selectExpr("*", f"monotonically_increasing_id() AS {_ROWNUM}")
+    hdr = dfn.filter(_has_any_sql(cols, markers)).first()
+    if hdr is None:
+        return df, [None] * len(cols)
+    return dfn.filter(f"{_ROWNUM} > {hdr[_ROWNUM]}").drop(_ROWNUM), list(hdr)[: len(cols)]
 
-    concat_upper = F.upper(F.concat_ws(" ", *[F.coalesce(F.col(c), F.lit("")) for c in cols]))
-    cond = F.lit(False)
-    for m in markers:
-        cond = cond | concat_upper.contains(m.upper())
-    hdr_row = dfn.filter(cond).agg(F.min(_ROWNUM).alias("m")).first()["m"]
-    if hdr_row is None:
-        hdr_row = -1  # default: first row is already the header? reference defaults to 0
-        header_vals = [None] * len(cols)
-    else:
-        header_vals = list(dfn.filter(F.col(_ROWNUM) == hdr_row).first()[: len(cols)])
 
+def _header_names(header_vals: list) -> list[str]:
+    """Promoted column names: stripped cell text, ``col_{i}`` for blank
+    cells, ``_2``/``_3``... suffixes for repeats."""
     names, seen = [], set()
     for i, v in enumerate(header_vals):
         name = str(v).strip() if v is not None and str(v).strip() else f"col_{i}"
@@ -229,55 +299,61 @@ def discover_header(df: DataFrame, markers: list[str] | None = None) -> tuple[Da
             name = f"{base}_{k}"
         seen.add(name)
         names.append(name)
+    return names
 
-    data = dfn.filter(F.col(_ROWNUM) > hdr_row).drop(_ROWNUM) if hdr_row >= 0 else df
+
+def discover_header(df: DataFrame, markers: list[str] | None = None) -> tuple[DataFrame, list[str]]:
+    """P5+P6: find the header row by marker, promote its values to column
+    names, return (data rows below the header, promoted names)."""
+    data, header = _find_header(df, markers or HEADER_MARKERS)
+    names = _header_names(header)
     return data.toDF(*names), names
 
 
 def remove_metadata_rows(df: DataFrame, patterns: list[str] | None = None) -> DataFrame:
     """P7: drop any row where ANY column contains a metadata phrase
     (case-insensitive, null-safe)."""
-    patterns = patterns or METADATA_PATTERNS
-    cond = F.lit(False)
-    for c in df.columns:
-        u = F.upper(F.col(c))
-        for p in patterns:
-            cond = cond | F.coalesce(u.contains(p.upper()), F.lit(False))
-    return df.filter(~cond)
+    return df.filter(f"NOT {_has_any_sql(df.columns, patterns or METADATA_PATTERNS)}")
 
 
 def drop_all_null_rows(df: DataFrame) -> DataFrame:
     """P8: pandas dropna(how='all') twin; empty strings count as null here
     because raw ingest is all-string."""
-    any_value = F.lit(False)
-    for c in df.columns:
-        any_value = any_value | (F.coalesce(F.trim(F.col(c)), F.lit("")) != "")
-    return df.filter(any_value)
+    return df.filter(_not_blank_sql(df.columns))
 
 
 _DATE_COL_FULL = re.compile(r"^\d{4}-\d{2}-\d{2} \d{2}:\d{2}:\d{2}$")
 _DATE_COL_YM = re.compile(r"^\d{4}-\d{2}$")
 
 
+def _month_label(name: str) -> str:
+    """'YYYY-MM-DD HH:MM:SS' -> 'YYYY-MM'; any other label unchanged."""
+    cs = name.strip()
+    if _DATE_COL_FULL.match(cs):
+        return _dt.datetime.strptime(cs, "%Y-%m-%d %H:%M:%S").strftime("%Y-%m")
+    return name
+
+
 def normalize_date_column_names(df: DataFrame) -> DataFrame:
     """P10: rename 'YYYY-MM-DD HH:MM:SS' column labels to 'YYYY-MM' (schema
     op on the driver, not a data op)."""
-    new_names = []
-    for c in df.columns:
-        cs = c.strip()
-        if _DATE_COL_FULL.match(cs):
-            new_names.append(_dt.datetime.strptime(cs, "%Y-%m-%d %H:%M:%S").strftime("%Y-%m"))
-        else:
-            new_names.append(c)
-    return df.toDF(*new_names)
+    return df.toDF(*[_month_label(c) for c in df.columns])
+
+
+_ID_COLUMNS = {"GRUPO_ECONOMICO", "VARIAVEL", "OPERADORA"}
+
+
+def _is_id(name: str) -> bool:
+    return name.upper() in _ID_COLUMNS
+
+
+def _is_month(name: str) -> bool:
+    return _DATE_COL_YM.match(name.strip()) is not None
 
 
 def classify_columns(columns: list[str]) -> tuple[list[str], list[str]]:
     """R1 column classification: id columns vs month ('YYYY-MM') columns."""
-    id_candidates = {"GRUPO_ECONOMICO", "VARIAVEL", "OPERADORA"}
-    id_cols = [c for c in columns if c.upper() in id_candidates]
-    date_cols = [c for c in columns if _DATE_COL_YM.match(c.strip())]
-    return id_cols, date_cols
+    return [c for c in columns if _is_id(c)], [c for c in columns if _is_month(c)]
 
 
 def tidy_decimal_strings(df: DataFrame, skip_cols: list[str]) -> DataFrame:
@@ -293,6 +369,27 @@ def tidy_decimal_strings(df: DataFrame, skip_cols: list[str]) -> DataFrame:
 LONG_SCHEMA_COLS = ["GRUPO_ECONOMICO", "VARIAVEL", "OPERADORA", "REFERENCIA_MES", "VALOR", "SERVICO"]
 
 
+def _long_select(cols: list[str], names: list[str], service: str) -> list[str] | None:
+    """The R1-R4 projection as ``selectExpr`` text over physical columns
+    ``cols`` whose logical names are ``names`` (position by position), or
+    None when there is no id or no month column. A ``stack`` generator
+    unpivots the month columns; each arm is the month as a date and the
+    cell parsed once through the BR-number expression."""
+    ids = [(c, n) for c, n in zip(cols, names) if _is_id(n)]
+    months = [(c, n) for c, n in zip(cols, names) if _is_month(n)]
+    if not ids or not months:
+        return None
+    arms = ", ".join(
+        f"to_date({sql_string(n)}, 'yyyy-MM'), {br_number_to_double_sql(quote_ident(c))}"
+        for c, n in months
+    )
+    return [
+        *[f"{quote_ident(c)} AS {quote_ident(n)}" for c, n in ids],
+        f"stack({len(months)}, {arms}) AS (REFERENCIA_MES, VALOR)",
+        f"{sql_string(service)} AS SERVICO",
+    ]
+
+
 def to_long(df: DataFrame, service: str) -> DataFrame:
     """R1-R4: unpivot month columns into (REFERENCIA_MES, VALOR), parse the
     month to DateType and the value through the Brazilian-number normalizer,
@@ -305,55 +402,43 @@ def to_long(df: DataFrame, service: str) -> DataFrame:
     that agree on the remaining columns. Files without OPERADORA null-fill
     it at union time (``unionByName(allowMissingColumns=True)``).
 
-    Values parse BEFORE the unpivot: each month column runs the BR-number
-    expression once in a narrow Project, and the Expand then fans out plain
-    double columns. Parsing after the unpivot would make every Expand
-    branch carry the whole regex tree (duplicated work), and the combined
-    Expand x parse x subexpression-elimination expression tree is big
-    enough to trip a Spark codegen bug (invalid generated parameter name
-    when mutable state compacts to arrays -> interpreted fallback).
-    Identical per-cell semantics either way."""
-    id_cols, date_cols = classify_columns(df.columns)
-    if not id_cols or not date_cols:
+    Values parse inside the unpivot's ``stack`` arms: each month cell runs
+    the BR-number expression once per row, the same work as parsing in a
+    narrow projection before an ``unpivot`` (whose Expand would otherwise
+    carry the whole regex tree in every branch), and the whole step is one
+    parsed expression list instead of a Column tree per month."""
+    select = _long_select(df.columns, df.columns, service)
+    if select is None:
         return df.withColumn("SERVICO", F.lit(service))
-    parsed = df.select(
-        *[F.col(c) for c in id_cols],
-        *[br_number_to_double(F.col(c)).alias(c) for c in date_cols],
-    )
-    long_df = parsed.unpivot(
-        ids=id_cols,
-        values=date_cols,
-        variableColumnName="REFERENCIA_MES",
-        valueColumnName="VALOR",
-    )
-    return long_df.select(
-        *[F.col(c) for c in id_cols],
-        F.to_date(F.col("REFERENCIA_MES"), "yyyy-MM").alias("REFERENCIA_MES"),
-        F.col("VALOR"),
-        F.lit(service).alias("SERVICO"),
-    )
+    return df.selectExpr(*select)
 
 
 def transform_wide(raw: DataFrame, service: str) -> DataFrame:
-    """The full P5-P11 + R1-R4 transform chain over an already-read raw
-    frame: discover header -> drop metadata/null rows -> positional rename
-    -> date-label normalize -> decimal tidy -> unpivot long. Shared by
+    """The full P5-P10 + R1-R4 transform chain over an already-read raw
+    frame: discover header -> drop metadata/blank rows -> positional
+    rename -> date-label normalize -> unpivot long. Shared by
     ``ingest_wide_file`` (production) and the ``ingest_e2e`` registered
     oracle query (synthetic fixture) so the oracle checks EXACTLY the
-    production chain."""
-    data, names = discover_header(raw)
-    data = remove_metadata_rows(data)
-    data = drop_all_null_rows(data)
+    production chain.
+
+    One Spark job (the header lookup) and a fixed number of py4j calls:
+    the row filter is one expression, and the rename (P9) and label
+    normalization (P10) are name edits on the driver that land in the
+    one long projection. Only the pass-through branch (no id or month
+    column) renames the frame and tidies decimal strings (P11)."""
+    data, header = _find_header(raw, HEADER_MARKERS)
+    cols = raw.columns
+    names = _header_names(header)
+    data = data.filter(f"{_not_blank_sql(cols)} AND NOT {_has_any_sql(cols, METADATA_PATTERNS)}")
     # P9: first two columns are (group, variable)
-    renames = {}
-    if len(data.columns) >= 2:
-        renames[data.columns[0]] = "GRUPO_ECONOMICO"
-        renames[data.columns[1]] = "VARIAVEL"
-    data = data.withColumnsRenamed(renames)
-    data = normalize_date_column_names(data)
-    id_cols, _ = classify_columns(data.columns)
-    data = tidy_decimal_strings(data, skip_cols=id_cols)
-    return to_long(data, service)
+    if len(names) >= 2:
+        names[:2] = ["GRUPO_ECONOMICO", "VARIAVEL"]
+    names = [_month_label(n) for n in names]
+    select = _long_select(cols, names, service)
+    if select is not None:
+        return data.selectExpr(*select)
+    id_cols, _ = classify_columns(names)
+    return to_long(tidy_decimal_strings(data.toDF(*names), skip_cols=id_cols), service)
 
 
 def ingest_wide_file(

@@ -34,6 +34,8 @@ def spark():
     """
     from pyspark.sql import SparkSession
 
+    from be_analytic_etl_spark.session import driver_memory
+
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "8")
     # Python workers import this package by path (see session.get_spark).
     pkg_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -48,7 +50,7 @@ def spark():
         .config("spark.sql.shuffle.partitions", cpus)
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.ui.retainedExecutions", "4")
         .getOrCreate()

@@ -18,6 +18,8 @@ from be_analytic_etl_spark.operators.consolidate import (
 from be_analytic_etl_spark.sources.ingest import (
     filter_manifest,
     ingest_wide_file,
+    probe_encoding,
+    read_headerless_csv,
 )
 
 FILE_A = """ÍNDICE DE DESEMPENHO NO ATENDIMENTO\t\t\t
@@ -31,8 +33,12 @@ TIM\tIDA\tND\t15.50
 FONTE: ANATEL\t\t\t
 """
 
+# Written in latin-1 with non-ASCII text (the preamble and the header
+# marker), so the probe picks latin-1 and the read must name it to Spark
+# as ISO-8859-1.
 FILE_B = """ANATEL - dados\t\t\t
-GRUPO_ECON\tVARIAVEL\t2020-02\t2020-03
+SERVIÇO: SCM\t\t\t
+GRUPO ECONÔMICO\tVARIAVEL\t2020-02\t2020-03
 CLARO\tIDA\t91\t92,5
 VIVO\tIDA\t2.000\t1.999,9
 CLARO\tIDA\t91\t92,5
@@ -65,6 +71,115 @@ def test_ingest_single_file(spark, wide_files):
     assert df.count() == 6
     svc = {r["SERVICO"] for r in df.collect()}
     assert svc == {"SMP"}
+
+
+def test_ingest_latin1_file(spark, wide_files):
+    """A non-UTF-8 file: the probe picks latin-1 (the reference's order),
+    Spark 4.1 accepts it only as ISO-8859-1, and the accented header
+    marker is found after decoding."""
+    _, path_b = wide_files
+    assert probe_encoding(path_b) == "latin-1"
+    assert read_headerless_csv(spark, path_b).collect()[1][0] == "SERVIÇO: SCM"
+    rows = sorted(
+        (r["GRUPO_ECONOMICO"], str(r["REFERENCIA_MES"]), r["VALOR"])
+        for r in ingest_wide_file(spark, path_b, service="SCM").collect()
+    )
+    assert rows == [
+        ("CLARO", "2020-02-01", 91.0),
+        ("CLARO", "2020-02-01", 91.0),
+        ("CLARO", "2020-03-01", 92.5),
+        ("CLARO", "2020-03-01", 92.5),
+        ("VIVO", "2020-02-01", 2.0),
+        ("VIVO", "2020-03-01", 1999.9),
+    ]
+
+
+def _long_rows(spark, path, service="SMP"):
+    return sorted(tuple(r) for r in ingest_wide_file(spark, str(path), service).collect())
+
+
+def test_narrow_first_line_keeps_every_column(spark, tmp_path):
+    """A one-cell title line must not set the table's width: the schema
+    is as wide as the widest line up to the header row."""
+    body = (
+        "GRUPO_ECON\tVARIAVEL\t2020-01\t2020-02\n"
+        "CLARO\tIDA\t1,5\t2,5\n"
+        "VIVO\tIDA\t3\t4\n"
+    )
+    narrow = tmp_path / "narrow.csv"
+    narrow.write_text("ÍNDICE DE DESEMPENHO NO ATENDIMENTO\n" + body, encoding="utf-8")
+    padded = tmp_path / "padded.csv"
+    padded.write_text("ÍNDICE DE DESEMPENHO NO ATENDIMENTO\t\t\t\n" + body, encoding="utf-8")
+    got = _long_rows(spark, narrow)
+    assert got == _long_rows(spark, padded)
+    assert [(g, str(m), v) for g, _, m, v, _ in got] == [
+        ("CLARO", "2020-01-01", 1.5),
+        ("CLARO", "2020-02-01", 2.5),
+        ("VIVO", "2020-01-01", 3.0),
+        ("VIVO", "2020-02-01", 4.0),
+    ]
+
+
+def _wide_file(tmp_path, n_months: int) -> str:
+    months = [f"{2010 + i // 12}-{i % 12 + 1:02d}" for i in range(n_months)]
+    lines = [
+        "SERVIÇO: SMP" + "\t" * (n_months + 1),
+        "GRUPO ECONÔMICO\tVARIAVEL\t" + "\t".join(months),
+        "CLARO\tIDA\t" + "\t".join(f"{i},5" for i in range(n_months)),
+        "FONTE: ANATEL" + "\t" * (n_months + 1),
+    ]
+    p = tmp_path / f"wide_{n_months}.csv"
+    p.write_text("\n".join(lines) + "\n", encoding="utf-8")
+    return str(p)
+
+
+def test_120_column_file(spark, tmp_path):
+    """The row filters are one flat expression, not an OR chain that grows
+    with the column count (which overflowed the analyzer's stack)."""
+    rows = ingest_wide_file(spark, _wide_file(tmp_path, 118), service="SMP").collect()
+    assert len(rows) == 118
+    assert sorted(r["VALOR"] for r in rows) == [i + 0.5 for i in range(118)]
+
+
+def test_ingest_builds_with_one_spark_job(spark, wide_files):
+    """Building a file's plan runs exactly one Spark job: the ordered
+    header lookup (no schema-inference read, no second header action)."""
+    path_a, _ = wide_files
+    sc = spark.sparkContext
+    group = "test_ingest_builds_with_one_spark_job"
+    sc.setJobGroup(group, "build ingest_wide_file")
+    try:
+        ingest_wide_file(spark, path_a, service="SMP")
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+
+
+def test_ingest_build_calls_do_not_grow_with_width(spark, tmp_path):
+    """The plan is built from SQL text, so a 118-month file costs the
+    driver the same number of py4j calls as a 4-month one."""
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    calls = []
+
+    def counting(command, *args, **kwargs):
+        if not command.startswith("m\n"):  # object releases follow GC, not the build
+            calls.append(command)
+        return send(command, *args, **kwargs)
+
+    paths = {n: _wide_file(tmp_path, n) for n in (4, 118)}
+    ingest_wide_file(spark, paths[4], service="SMP")  # warm lazily resolved classes
+    counts = {}
+    client.send_command = counting
+    try:
+        for n, path in paths.items():
+            calls.clear()
+            ingest_wide_file(spark, path, service="SMP")
+            counts[n] = len(calls)
+    finally:
+        del client.send_command
+    assert counts[4] == counts[118], counts
 
 
 def test_consolidate_and_finalize(spark, wide_files):

@@ -131,6 +131,43 @@ def test_br_number_parse_roundtrip(spark, nums):
         assert r["got"] == r["want"], (r["i"], r["got"], r["want"])
 
 
+#: FIXTURES.md §3 value-string corpus (the reference's parse and tidy cases).
+BR_CORPUS = [
+    "1.234,56", "1234,56", "1.234.56", "1234.56", "1234", "R$ 1.234,56",
+    " 15,5 ", "", "nan", "NaN", "-", "--", "---", "ND", "N/D", "abc",
+    "15.00", "15.50", "15.0",
+]
+
+
+@given(
+    values=st.lists(
+        st.one_of(
+            st.sampled_from(BR_CORPUS),
+            # digits.digits with trailing zeros: the only strings the tidy edits
+            st.from_regex(r"[0-9]{1,20}\.[0-9]{0,12}0{1,6}", fullmatch=True),
+            st.from_regex(r"[0-9]{1,20}(\.[0-9]{1,8})?", fullmatch=True),
+        ),
+        min_size=1,
+        max_size=30,
+    )
+)
+@settings(**SETTINGS)
+def test_trailing_zero_tidy_never_changes_the_parsed_double(spark, values):
+    """br_number_to_double(strip_trailing_zeros(s)) == br_number_to_double(s):
+    the tidy only drops zeros after a decimal point, which leaves the
+    decimal value, and so its correctly rounded double, unchanged. Ingest
+    therefore parses month cells without the tidy step."""
+    from be_analytic_etl_spark.functions import br_number_to_double, strip_trailing_zeros
+
+    df = spark.createDataFrame(list(enumerate(values)), "i long, s string")
+    got = df.select(
+        "s",
+        br_number_to_double(strip_trailing_zeros("s")).alias("tidied"),
+        br_number_to_double("s").alias("raw"),
+    ).collect()
+    assert [(r["s"], r["tidied"]) for r in got] == [(r["s"], r["raw"]) for r in got]
+
+
 @st.composite
 def interval_case(draw):
     pts = draw(

@@ -53,7 +53,7 @@ def main() -> None:
     from pyspark.sql import SparkSession
 
     from be_analytic_etl_spark.registry import QUERIES
-    from be_analytic_etl_spark.session import cached_scope
+    from be_analytic_etl_spark.session import cached_scope, driver_memory
 
     names = sys.argv[1:] or DEFAULT_QUERIES
     unknown = [n for n in names if n not in QUERIES]
@@ -65,7 +65,7 @@ def main() -> None:
             f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
         )
         .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )

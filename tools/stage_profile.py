@@ -53,7 +53,7 @@ def main() -> None:
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.ansi.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", "24g")
+        .config("spark.driver.memory", S.driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.eventLog.enabled", "true")
         .config("spark.eventLog.dir", f"file:{LOG_DIR}")

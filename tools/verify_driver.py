@@ -17,6 +17,8 @@ os.chdir("/root/repo")
 import duckdb
 from pyspark.sql import SparkSession
 
+from be_analytic_etl_spark.session import driver_memory
+
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
 ONLY = set(sys.argv[2:])
 
@@ -75,7 +77,7 @@ def main():
     spark = (
         SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
         .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory", "24g")
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
