@@ -20,7 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
-from be_analytic_etl_spark.operators.textstats import WS_PLUS_SQLEXPR
+from be_analytic_etl_spark.operators.textstats import _tokenize_sqltext
 
 
 def br_number_to_double_sql(arg: str) -> str:
@@ -74,9 +74,7 @@ SQL_UDFS: dict[str, tuple[str, str, str]] = {
     "token_count": (
         "s STRING",
         "INT",
-        r"size(CASE WHEN trim(coalesce(s, '')) = '' "
-        r"THEN CAST(array() AS ARRAY<STRING>) "
-        rf"ELSE split(trim(coalesce(s, '')), '{WS_PLUS_SQLEXPR}') END)",
+        f"size({_tokenize_sqltext('s')})",
     ),
 }
 

@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 from be_analytic_etl_spark.functions.sqltext import quote_ident
 from be_analytic_etl_spark.operators.textstats import (
     PORTABLE_P,
-    WS_PLUS_SQLEXPR,
+    _tokenize_sqltext,
     normalize_text,
     portable_base_hash,
     tokenize,
@@ -89,16 +89,6 @@ def fast_hash64(col: Column, seed: Column) -> Column:
     return F.xxhash64(col, seed)
 
 
-def _tokenize_sql(c: str) -> str:
-    """SQL twin of textstats.tokenize (same two references to the trimmed
-    input, matching the Column form's tree)."""
-    t = f"trim(coalesce({c}, ''))"
-    return (
-        f"CASE WHEN {t} = '' THEN CAST(array() AS ARRAY<STRING>) "
-        rf"ELSE split({t}, '{WS_PLUS_SQLEXPR}') END"
-    )
-
-
 def _word_ngrams_sql(c: str, n: int) -> str:
     """SQL twin of textstats.word_ngrams (toks let-bound the same way)."""
     body = (
@@ -107,7 +97,7 @@ def _word_ngrams_sql(c: str, n: int) -> str:
         f"ELSE transform(sequence(0, greatest(size(toks) - {n}, 0)), "
         f"i -> concat_ws(' ', slice(toks, i + 1, {n}))) END)"
     )
-    return f"element_at(transform(array({_tokenize_sql(c)}), toks -> {body}), 1)"
+    return f"element_at(transform(array({_tokenize_sqltext(c)}), toks -> {body}), 1)"
 
 
 def _portable_minhash_sql(c: str, num_hashes: int, shingle_n: int) -> str:

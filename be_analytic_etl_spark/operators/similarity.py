@@ -240,17 +240,17 @@ def cosine_pairs_above(
     left side ``panes`` times. Output is identical — panes is pure
     physical parallelism, invisible to the oracle.
 
-    ``max_block`` is the embedding-pathology flood guard
-    (tools/vector_probe.py — the candidate_pairs/simhash ``max_bucket``
-    pattern in vector space): an encoder bug emitting one constant
-    vector collapses EVERY row into one IVF cell and the within-block
-    self-join goes C(n, 2) — 5e17 pairs at 1e9 vectors. With the cap
-    set, blocks larger than ``max_block`` are skipped outright (a
-    constant-embedding corpus is upstream poison, not semantics; real
-    cells sit orders of magnitude below any sane cap). Opt-in and
-    default-off: registered queries keep the uncapped oracle-paired
-    semantics, pinned unchanged on the clean corpus in
-    tests/test_extensions.py.
+    ``max_block`` is the embedding-pathology flood guard (the
+    candidate_pairs/simhash ``max_bucket`` pattern in vector space): an
+    encoder bug emitting one constant vector collapses EVERY row into
+    one IVF cell and the within-block self-join goes C(n, 2) — 5e17
+    pairs at 1e9 vectors. With the cap set, blocks larger than
+    ``max_block`` are skipped outright (a constant-embedding corpus is
+    upstream poison, not semantics; real cells sit orders of magnitude
+    below any sane cap). Opt-in and default-off: registered queries keep
+    the uncapped oracle-paired semantics, pinned unchanged on the clean
+    corpus by
+    tests/test_extensions.py::test_cosine_pairs_max_block_flood_guard.
     """
     # Per-vector norm computed once before the pair join (not 2 more folds
     # per pair inside cosine()) — bit-identical, 3x less pair compute.

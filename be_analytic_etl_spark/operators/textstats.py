@@ -134,8 +134,8 @@ def stopword_ratio(col: Column | str, stopwords: list[str] | None = None) -> Col
 
 def _tokenize_sqltext(c: str) -> str:
     """SQL text twin of ``tokenize`` over the SQL expression ``c`` (same
-    two references to the trimmed input; dedup._tokenize_sql mirrors this
-    — kept separate because dedup imports from this module)."""
+    two references to the trimmed input). The one Spark SQL text of the
+    split: dedup's n-gram text and the ``token_count`` SQL UDF build on it."""
     t = f"trim(coalesce({c}, ''))"
     return (
         f"CASE WHEN {t} = '' THEN CAST(array() AS ARRAY<STRING>) "

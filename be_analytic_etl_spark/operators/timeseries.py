@@ -42,19 +42,19 @@ def gapfill(
     ``mark_observed`` names a boolean column flagging real vs synthesized
     rows (None to omit).
 
-    ``clamp_bounds=(lo, hi)`` is the timestamp-pathology guard
-    (tools/time_probe.py): the spine is ``sequence(min, max)`` PER KEY,
-    so a single parser-drifted row — an epoch-zero default or a
-    far-future overflow — stretches that key's spine by decades
-    (~20k synthesized rows per poisoned key for an epoch-zero date,
-    ~2.9M for a year-9999 one; at 10^8 keys with drift that is a
-    corpus-dwarfing explosion). With clamp set, rows outside
+    ``clamp_bounds=(lo, hi)`` is the timestamp-pathology guard: the spine is
+    ``sequence(min, max)`` PER KEY, so a single parser-drifted row — an
+    epoch-zero default or a far-future overflow — stretches that key's
+    spine by decades (~20k synthesized rows per poisoned key for an
+    epoch-zero date, ~2.9M for a year-9999 one; at 10^8 keys with drift
+    that is a corpus-dwarfing explosion). With clamp set, rows outside
     [lo, hi) are DROPPED before bounds and spine — drifted timestamps
     are upstream poison, not data — so every key's spine stays inside
-    the declared calendar window. Opt-in and default-off: the
-    registered ext_gapfill query keeps the unclamped oracle-paired
-    semantics; pinned equal to the clean-corpus result on a poisoned
-    corpus in tests/test_timeseries.py.
+    the declared calendar window. Opt-in and default-off: the registered
+    ext_gapfill query keeps the unclamped oracle-paired semantics;
+    pinned equal to the clean-corpus result on a poisoned corpus by
+    tests/test_timeseries.py::
+    test_gapfill_clamp_bounds_neutralizes_drifted_timestamps.
     """
     from pyspark.sql import Window
 

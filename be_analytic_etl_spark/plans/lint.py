@@ -415,7 +415,7 @@ BNL_ALLOWLIST: dict[str, str] = {
     "rho frame the Durbin-Levinson recursion runs on",
     "ext_anova_two_way": "scalar-fold: three single-row moment frames "
     "(grand, lang-marginal, source-marginal) crossJoined",
-    # -- round-13 registrations (staged + audited r12, promoted r13)
+    # -- round-13 queries
     "binseg2_changepoint": "grid: calendar-bounded (t1 < t2) prefix-pair "
     "frame (D^2/2 control-plane pairs, the Mann-Kendall bounded-BNL "
     "shape) + a single-row total fold",

@@ -37,13 +37,20 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 # --- shared DuckDB SQL fragments -------------------------------------------
 
-#: tokenize() twin: whitespace split of trimmed text; blank -> empty list.
-#: Whitespace is the explicit WS_PLUS class, not \s — RE2's \s omits
-#: vertical tab while Java's includes it (ADVICE r11 #2).
-_TOKS = (
-    "CASE WHEN trim(coalesce(text, '')) = '' THEN CAST([] AS VARCHAR[]) "
-    f"ELSE string_split_regex(trim(coalesce(text, '')), '{T.WS_PLUS}') END"
-)
+def _toks_sql(c: str) -> str:
+    r"""tokenize() twin over the SQL expression ``c``: whitespace split of
+    the trimmed text; blank -> empty list. Whitespace is the explicit
+    WS_PLUS class, not \s — RE2's \s omits vertical tab while Java's
+    includes it."""
+    t = f"trim(coalesce({c}, ''))"
+    return (
+        f"CASE WHEN {t} = '' THEN CAST([] AS VARCHAR[]) "
+        f"ELSE string_split_regex({t}, '{T.WS_PLUS}') END"
+    )
+
+
+#: tokenize() twin over the documents' ``text`` column.
+_TOKS = _toks_sql("text")
 
 
 def _grams_sql(toks: str, n: int = 3) -> str:

@@ -1,7 +1,5 @@
-"""Round-11 registry merges: the four standing merge-candidate pairs
-named by the capacity policy (registry.py, VERDICT r10 ask #1), each
-collapsed into ONE query with the union readout so the registry frees
-four slots before the r12 freshness wall:
+"""Round-11 registry merges: four pairs of near-duplicate queries, each
+collapsed into ONE query with the union readout:
 
 - ``ext_tdigest_panel``  = ext_tdigest_quantiles + ext_tdigest_read —
   one row per digest cluster (the full write-path summary) widened with

@@ -39,7 +39,7 @@ from be_analytic_etl_spark.functions.rounding import (
     stable_round_sql,
 )
 from be_analytic_etl_spark.operators import textstats as T
-from be_analytic_etl_spark.queries_extensions import _t
+from be_analytic_etl_spark.queries_extensions import _t, _toks_sql
 from be_analytic_etl_spark.registry import register
 
 # ---------------------------------------------------------------------------
@@ -77,14 +77,6 @@ def q_ext_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _name_toks_sql(c: str) -> str:
-    t = f"trim(coalesce({c}, ''))"
-    return (
-        f"CASE WHEN {t} = '' THEN CAST([] AS VARCHAR[]) "
-        f"ELSE string_split_regex({t}, '{T.WS_PLUS}') END"
-    )
-
-
 def _entity_resolution_oracle() -> str:
     return f"""
     WITH RECURSIVE
@@ -96,7 +88,7 @@ def _entity_resolution_oracle() -> str:
         -- the ER flood guard (operators/entity.py MAX_NAME_LEN):
         -- oversized non-names never block, staying singleton entities
         SELECT id, name, length(name) AS ln,
-               {_name_toks_sql('name')} AS toks
+               {_toks_sql('name')} AS toks
         FROM vocab
         WHERE length(name) <= {_ER_MAX_NAME_LEN}
     ),
@@ -411,111 +403,3 @@ def _anova_two_way_oracle() -> str:
 
 
 register("ext_anova_two_way", q_ext_anova_two_way, _anova_two_way_oracle())
-
-
-# ---------------------------------------------------------------------------
-# STAGED merge panels (registry capacity policy step 1, prepared per
-# VERDICT r11 ask #6): the next two retire/merge pairs, implemented and
-# oracle-twinned but NOT registered — r13 can reclaim two window slots
-# by swapping these in (register the panel, retire the pair) without
-# rework if the 288-query ceiling binds. Pinned row-for-row against
-# their parents in tests/test_round12_merges.py, oracle-checked there
-# too (the full dress rehearsal for registration).
-
-
-def distinct_sketch_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """kmins + windowed-HLL distinct-count readouts as ONE tagged frame
-    (merge candidate for ext_kmins_distinct + ext_windowed_hll): both
-    estimate distinct users per scope with a different mergeable sketch,
-    so one panel shows them side by side — `sketch='kmins'` rows are the
-    per-event-type (+ ALL) k-mins estimates, `sketch='whll_daily'` rows
-    the per-(day, type) HLL estimates."""
-    from be_analytic_etl_spark.queries_round5 import q_ext_windowed_hll
-    from be_analytic_etl_spark.queries_round8 import q_ext_kmins_distinct
-
-    km = q_ext_kmins_distinct(spark, sf_dir).select(
-        F.lit("kmins").alias("sketch"),
-        F.lit(None).cast("timestamp").alias("day"),
-        F.col("scope").cast("string").alias("scope"),
-        F.col("kmins_est").cast("double").alias("estimate"),
-        F.col("n_rows").cast("long").alias("aux"),
-    )
-    wh = q_ext_windowed_hll(spark, sf_dir).select(
-        F.lit("whll_daily").alias("sketch"),
-        F.col("day").cast("timestamp").alias("day"),
-        F.col("event_type").cast("string").alias("scope"),
-        F.col("hll_estimate").cast("double").alias("estimate"),
-        F.col("n_registers_used").cast("long").alias("aux"),
-    )
-    return km.unionByName(wh)
-
-
-def distinct_sketch_panel_oracle() -> str:
-    from be_analytic_etl_spark.queries_round5 import _windowed_hll_oracle
-    from be_analytic_etl_spark.queries_round8 import _kmins_oracle
-
-    return f"""
-    SELECT 'kmins' AS sketch, CAST(NULL AS TIMESTAMP) AS day,
-           CAST(scope AS VARCHAR) AS scope,
-           CAST(kmins_est AS DOUBLE) AS estimate,
-           CAST(n_rows AS BIGINT) AS aux
-    FROM ({_kmins_oracle()}) __k
-    UNION ALL
-    SELECT 'whll_daily', CAST(day AS TIMESTAMP),
-           CAST(event_type AS VARCHAR),
-           CAST(hll_estimate AS DOUBLE),
-           CAST(n_registers_used AS BIGINT)
-    FROM ({_windowed_hll_oracle()}) __w
-    """
-
-
-def zorder_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Z-order write + skipping readouts as ONE tagged frame (merge
-    candidate for ext_zorder + ext_zorder_skipping): `leg='zwrite'` rows
-    carry the interleaved-key bucket profile (n, sum, min, max of the
-    Morton key per hash bucket), `leg='zskip'` rows the range-layout
-    min/max tightness stats + probe-touch flags."""
-    from be_analytic_etl_spark.queries_extensions import q_ext_zorder
-    from be_analytic_etl_spark.queries_round5 import q_ext_zorder_skipping
-
-    zw = q_ext_zorder(spark, sf_dir).select(
-        F.lit("zwrite").alias("leg"),
-        F.col("zbucket").cast("long").alias("bucket"),
-        F.col("n").cast("long").alias("n_rows"),
-        F.col("zsum").cast("long").alias("v1"),
-        F.col("zmin").cast("long").alias("v2"),
-        F.col("zmax").cast("long").alias("v3"),
-        F.lit(None).cast("long").alias("v4"),
-        F.lit(None).cast("boolean").alias("touches_probe"),
-    )
-    zs = q_ext_zorder_skipping(spark, sf_dir).select(
-        F.lit("zskip").alias("leg"),
-        F.col("bucket").cast("long").alias("bucket"),
-        F.col("n_rows").cast("long").alias("n_rows"),
-        F.col("min_x").cast("long").alias("v1"),
-        F.col("max_x").cast("long").alias("v2"),
-        F.col("min_y").cast("long").alias("v3"),
-        F.col("max_y").cast("long").alias("v4"),
-        F.col("touches_probe").cast("boolean").alias("touches_probe"),
-    )
-    return zw.unionByName(zs)
-
-
-def zorder_panel_oracle() -> str:
-    from be_analytic_etl_spark.queries_extensions import _zorder_oracle
-    from be_analytic_etl_spark.queries_round5 import _zorder_skip_oracle
-
-    return f"""
-    SELECT 'zwrite' AS leg, CAST(zbucket AS BIGINT) AS bucket,
-           CAST(n AS BIGINT) AS n_rows,
-           CAST(zsum AS BIGINT) AS v1, CAST(zmin AS BIGINT) AS v2,
-           CAST(zmax AS BIGINT) AS v3, CAST(NULL AS BIGINT) AS v4,
-           CAST(NULL AS BOOLEAN) AS touches_probe
-    FROM ({_zorder_oracle()}) __zw
-    UNION ALL
-    SELECT 'zskip', CAST(bucket AS BIGINT), CAST(n_rows AS BIGINT),
-           CAST(min_x AS BIGINT), CAST(max_x AS BIGINT),
-           CAST(min_y AS BIGINT), CAST(max_y AS BIGINT),
-           touches_probe
-    FROM ({_zorder_skip_oracle()}) __zs
-    """

@@ -3,9 +3,8 @@ as a named (PySpark query, DuckDB oracle SQL) pair.
 
 ``QUERIES[name](spark, sf_dir) -> DataFrame`` and ``ORACLE_SQL[name]`` is
 the ANSI-SQL twin DuckDB runs on the same parquet tables. Names in both
-results are aligned column-for-column (the driver sorts columns by name
-before hashing). Queries without an oracle entry are non-SQL-expressible
-and get the driver's weaker rows-only check.
+results are aligned column-for-column (the compare sorts columns by name
+before hashing). Both dicts keep registration order: the imports below.
 """
 
 from __future__ import annotations
@@ -25,10 +24,9 @@ ORACLE_SQL: dict[str, str] = {}
 
 def register(name: str, fn: Callable[[SparkSession, str], DataFrame], sql: str | None) -> None:
     # Duplicate names are a hard error: a silent overwrite would shadow
-    # a driver-proven query with a different implementation while its
-    # green history kept reporting the OLD semantics (caught live in
-    # round 9 — three new queries collided with r5/r7 names and
-    # silently replaced them).
+    # an oracle-checked query with a different implementation while its
+    # history kept reporting the OLD semantics (three queries once
+    # collided with older names and silently replaced them).
     if name in QUERIES:
         raise ValueError(f"query {name!r} is already registered")
     QUERIES[name] = fn
@@ -62,136 +60,3 @@ from be_analytic_etl_spark import queries_round11c  # noqa: E402,F401
 from be_analytic_etl_spark import queries_round11d  # noqa: E402,F401
 from be_analytic_etl_spark import queries_round12  # noqa: E402,F401
 from be_analytic_etl_spark import queries_round13  # noqa: E402,F401
-
-# ---------------------------------------------------------------------------
-# Driver-window ordering. The round driver verifies the FIRST 50 registered
-# queries against the DuckDB oracle; everything after the window is only
-# locally gated (tests/test_registry_oracle.py). This block is GENERATED:
-# run `python tools/rotate_window.py --apply` after a round's
-# CORRECTNESS_r{N}.json lands — never hand-edit. Round-13 rotation
-# (from CORRECTNESS_r01-r12; round 12 left 276/276 ever-checked green,
-# zero reds): the 3 round-13 registrations first (two_proportion_panel
-# / binseg2_changepoint / fdr_bh_panel — STAGED and value-checked in
-# r12, see queries_round13_candidates.py), then the oldest greens —
-# the full 44-member r7 cohort sitting exactly at the 5-round
-# staleness boundary (jdbc_roundtrip, br_number_parse, classify_extract,
-# date_roundtrip, pattern_row_filter, scalar_math, ext_strip_zeros and
-# peers) plus the 3 oldest r8 greens (sessionize,
-# late_shipment_priority, nation_trade_flow). The SS2 core is
-# NOT forced this round (checked r12; its 2-round cadence re-enters it
-# at r14). Every new window member was pre-proven against
-# tools/verify_driver.py at sf0.001 AND sf0.01 AND sf0.1 (strict 17g)
-# plus the SIX degenerate-corpus gates (1-row / empty / NULL-poisoned /
-# NaN-poisoned / tied-language / adversarial-strings) before the window
-# froze. The rotation tool FAILS if any registered query would exceed
-# 5 rounds unchecked, and hard-fails past the 288-query capacity
-# ceiling.
-_DRIVER_WINDOW_PRIORITY = [
-    "two_proportion_panel",
-    "binseg2_changepoint",
-    "fdr_bh_panel",
-    "jdbc_roundtrip",
-    "topk_revenue",
-    "semi_anti_customers",
-    "br_number_parse",
-    "classify_extract",
-    "pattern_row_filter",
-    "date_roundtrip",
-    "scalar_math",
-    "pricing_summary",
-    "star_join_broadcast",
-    "fact_join_revenue",
-    "region_revenue",
-    "rollup_revenue",
-    "topn_per_group",
-    "sliding_window",
-    "events_enrich",
-    "tumbling_window",
-    "ext_token_stats",
-    "ext_bpe_fingerprint",
-    "ext_lang_id",
-    "ext_exact_dedup",
-    "ext_minhash_sig",
-    "ext_minhash_lsh_neardup",
-    "ext_ngram_jaccard",
-    "ext_cosine_topk",
-    "ext_cosine_neardup",
-    "ext_ivf_ann",
-    "ext_strip_zeros",
-    "ext_multimodal_meta",
-    "ext_first_per_key",
-    "ext_reliability_bins",
-    "ext_calibration_ece",
-    "ext_cohens_kappa",
-    "ext_heavy_hitters",
-    "ext_robust_stats",
-    "ext_substring_dedup",
-    "ext_welch_ttest",
-    "ext_ks_test",
-    "ext_chi2_independence",
-    "ext_mutual_information",
-    "ext_spearman_corr",
-    "ext_hill_tail",
-    "ext_gpd_tail",
-    "ext_jensen_shannon",
-    "sessionize",
-    "late_shipment_priority",
-    "nation_trade_flow",
-]
-
-# ---------------------------------------------------------------------------
-# REGISTRY CAPACITY POLICY (round 10; VERDICT r9 ask #3).
-#
-# The driver checks 50 queries per round; the SS2 core re-enters every
-# 2 rounds (6 checks / 2 rounds = 3 slots/round average); every other
-# query must be re-checked within MAX_STALE_ROUNDS = 5 rounds. The
-# sustainable ceiling is therefore (50 - 3) * 6 + 6 = 288 registered
-# queries — NOT the naive 50 * 6 = 300, which ignores the core
-# cadence. This is both derived and MEASURED: the self-organizing
-# steady-state simulation in tests/test_rotation.py::
-# test_capacity_ceiling_is_exact is stable at N = 288 and violates the
-# freshness invariant at N = 289; the forward simulation from the real
-# correctness history (test_real_history_trajectory_is_sustainable)
-# proves the current registry rotates indefinitely at zero growth.
-# tools/rotate_window.py hard-fails (before --apply) past the ceiling.
-#
-# Policy at the ceiling, in order of preference:
-#   1. RETIRE/MERGE near-duplicate read-path queries — each merged
-#      pair frees one slot. EXECUTED in round 11 (VERDICT r10 ask #1):
-#      ext_tdigest_quantiles + ext_tdigest_read -> ext_tdigest_panel,
-#      ext_simhash + ext_simhash_neardup -> ext_simhash_panel,
-#      ext_hll_distinct + ext_hll_union -> ext_hll_panel,
-#      ext_pipeline + ext_pipeline_spec -> ext_pipeline_e2e
-#      (queries_round11.py; parents kept as unregistered helpers pinned
-#      by tests/test_round11_merges.py + test_pipeline_composer.py).
-#      Next merge candidates if the ceiling binds again: the kmins /
-#      windowed-HLL distinct pair, the zorder write/skipping pair.
-#   2. SLOW GROWTH: prefer extending an existing query's readout
-#      (extra columns) over registering a sibling query.
-#   3. NEVER weaken an invariant: MAX_STALE_ROUNDS stays 5 (the judge
-#      gate), WINDOW stays 50 (the driver contract), the core cadence
-#      stays 2 (round-4 judge ruling). A policy that quietly relaxes
-#      verification to fit more queries is worse than fewer queries.
-#
-# Per-round window plan stays mechanical (r5-r10 precedent): new
-# queries rank first (never-checked), the SS2 core force-enters on its
-# cadence, remaining slots take the oldest greens; the freshness gate
-# aborts the apply if any query would exceed 5 rounds unchecked.
-# Every addition must pass the three-SF verify sweep
-# (tools/verify_driver.py at sf0.001/sf0.01/sf0.1, strict 17g) BEFORE
-# the window freezes — several divergence classes only trigger at
-# sf0.01+ data magnitudes (SCALE.md). Check new names against the live
-# registry FIRST — register() hard-errors on duplicates.
-
-
-def _reorder_for_driver_window() -> None:
-    prioritized = [n for n in _DRIVER_WINDOW_PRIORITY if n in QUERIES]
-    in_priority = set(prioritized)
-    order = prioritized + [n for n in QUERIES if n not in in_priority]
-    for d in (QUERIES, ORACLE_SQL):
-        snapshot = dict(d)
-        d.clear()
-        d.update({n: snapshot[n] for n in order if n in snapshot})
-
-
-_reorder_for_driver_window()

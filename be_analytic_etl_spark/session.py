@@ -160,15 +160,17 @@ def cached_scope(spark: SparkSession):
 
     On exit, any RDD persisted during the block (and not persisted before
     it) is unpersisted — pre-existing caches are untouched. This INCLUDES
-    ``localCheckpoint`` storage created inside the block (r13 advice
-    item 5: the eager checkpoints in the t-digest/DSIR/heavy-hitter
-    builders are otherwise exempt from every cleanup path, so a
-    long-lived session — a bench loop, a notebook — accumulates
-    unreleasable blocks run over run). A checkpointed plan's lineage is
-    truncated, so its frame is NOT recomputable after release — which is
-    exactly why the scope contract requires producing AND consuming the
-    result inside the block; a post-scope action on a frame checkpointed
-    inside the scope was never supported.
+    ``localCheckpoint`` storage created inside the block (the eager
+    checkpoints in the t-digest/DSIR/heavy-hitter builders are otherwise
+    exempt from every cleanup path, so a long-lived session — a bench
+    loop, a notebook — accumulates unreleasable blocks run over run).
+
+    A checkpointed plan's lineage is truncated, so its frame is NOT
+    recomputable after release: any action after the scope on a frame
+    that was ``localCheckpoint``-ed inside it raises
+    ``[CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND] Checkpoint block ... not found``
+    (Spark 4.1). Hence the contract: produce AND consume the result
+    inside the block.
     """
     before = persistent_rdd_ids(spark)
     try:

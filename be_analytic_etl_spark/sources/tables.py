@@ -10,19 +10,24 @@ TIMESTAMP, so both engines see identical microsecond values).
 
 from __future__ import annotations
 
+import math
+import os
+import re
+import stat
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-#: Lazy-plan memo: (applicationId, sf_dir, name, spread) -> DataFrame.
+#: Lazy-plan memo: (applicationId, sf_dir, name, spread, files) -> DataFrame.
 #: A DataFrame is an analyzed LOGICAL PLAN, not data — reusing it skips
 #: the per-call file listing + parquet footer/schema read + plan
 #: (re)analysis that every ``spark.read.parquet`` pays on the driver
 #: (optimization guide §7.3: driver metadata work). No results or blocks
 #: are cached; every action on the memoized frame still recomputes from
 #: the parquet files. Keyed by applicationId so a restarted session
-#: never sees another JVM's plan objects, and by the source file's
-#: (mtime_ns, size) so a rewritten file invalidates the entry.
+#: never sees another JVM's plan objects, and by ``_table_files`` so a
+#: rewritten file invalidates the entry.
 _TABLE_MEMO: dict[tuple, DataFrame] = {}
 
 
@@ -37,77 +42,75 @@ def load_table(
     a no-op; the shuffle it costs here is proportional to the small input,
     while the compute it parallelizes is the dominant term.
     """
-    import os as _os
-
-    # The (mtime_ns, size) stat guards against a table file rewritten at
-    # the same path within one application: the memoized plan snapshots
-    # the parquet file index, so serving it over a changed file would
-    # read stale/deleted data (r13 advice item 3). Stat of one path is
-    # ~1 us — negligible next to the listing+footer read the memo skips.
-    try:
-        st = _os.stat(f"{sf_dir}/{name}.parquet")
-        stat_sig = (st.st_mtime_ns, st.st_size)
-    except OSError:
-        stat_sig = None
-    key = (spark.sparkContext.applicationId, sf_dir, name, spread, stat_sig)
-    if _os.environ.get("SPARK_GRAFT_TABLE_MEMO", "1") != "0":
-        hit = _TABLE_MEMO.get(key)
-        if hit is not None:
-            return hit
+    path = f"{sf_dir}/{name}.parquet"
+    # The memoized plan snapshots the parquet file index, so serving it
+    # over a file rewritten at the same path would read stale/deleted
+    # data: the key carries every data file's (mtime_ns, size).
+    files = _table_files(path)
+    key = (spark.sparkContext.applicationId, sf_dir, name, spread, files)
+    hit = _TABLE_MEMO.get(key)
+    if hit is not None:
+        return hit
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/events.parquet")
+        df = spark.read.parquet(path)
         if dict(df.dtypes).get("ts") == "bigint":
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     else:
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        df = spark.read.parquet(path)
     if spread:
         target = spark.sparkContext.defaultParallelism
-        if _scan_partition_estimate(spark, f"{sf_dir}/{name}.parquet") < target:
+        if _scan_partition_estimate(spark, files) < target:
             df = df.repartition(target)
-    if _os.environ.get("SPARK_GRAFT_TABLE_MEMO", "1") != "0":
-        if len(_TABLE_MEMO) > 256:  # tests churn tmp dirs; don't grow unbounded
-            _TABLE_MEMO.clear()
-        _TABLE_MEMO[key] = df
+    if len(_TABLE_MEMO) > 256:  # tests churn tmp dirs; don't grow unbounded
+        _TABLE_MEMO.clear()
+    _TABLE_MEMO[key] = df
     return df
 
 
-def _scan_partition_estimate(spark: SparkSession, path: str) -> int:
+def _table_files(path: str) -> tuple[tuple[str, int, int], ...] | None:
+    """``(relative name, mtime_ns, size)`` of each data file of a table:
+    one ``stat`` for a single-file table; for a directory table a
+    recursive walk over its part files, skipping ``.``/``_`` entries
+    (``_SUCCESS``, ``.crc``) as Spark does, so a nested/hive-partitioned
+    layout counts too. ``None`` if the path is not a local file or
+    directory (a pre-split cluster input)."""
+    try:
+        st = os.stat(path)
+        if stat.S_ISREG(st.st_mode):
+            return (("", st.st_mtime_ns, st.st_size),)
+        if not stat.S_ISDIR(st.st_mode):
+            return None
+        files = []
+        for root, dirs, names in os.walk(path):
+            dirs[:] = sorted(d for d in dirs if not d.startswith((".", "_")))
+            for f in sorted(names):
+                if not f.startswith((".", "_")):
+                    full = os.path.join(root, f)
+                    st = os.stat(full)
+                    files.append(
+                        (os.path.relpath(full, path), st.st_mtime_ns, st.st_size)
+                    )
+        return tuple(files)
+    except OSError:
+        return None
+
+
+def _scan_partition_estimate(spark: SparkSession, files: tuple | None) -> int:
     """Estimate the scan's task count with Spark's own maxSplitBytes
     arithmetic: ``bytes / min(maxPartitionBytes, max(openCostInBytes,
     bytes / defaultParallelism))`` (FilePartition packing, SPARK-24914) —
     so the estimate tracks actual scan parallelism instead of the
     conservative bytes/maxPartitionBytes floor, which under-counted
     splittable mid-size files and triggered repartitions the real scan
-    does not need (r13 advice item 4). Replaces the old
-    ``df.rdd.getNumPartitions()`` probe, which converted the plan to an RDD
-    on the driver (~0.1 s of py4j + conversion per call, paid by every
-    documents/embeddings query). Falls back to a huge count (no repartition)
-    if the path isn't a local file/dir — pre-split cluster inputs need no
-    spreading."""
-    import math
-    import os as _os
-    import re
-
-    try:
-        if _os.path.isfile(path):
-            bytes_ = _os.path.getsize(path)
-        elif _os.path.isdir(path):
-            # Recursive walk: a nested/hive-partitioned layout would
-            # otherwise sum 0 bytes and force a repartition shuffle on
-            # every load (r13 advice item 4).
-            bytes_ = 0
-            for root, dirs, files in _os.walk(path):
-                dirs[:] = [d for d in dirs if not d.startswith((".", "_"))]
-                bytes_ += sum(
-                    _os.path.getsize(_os.path.join(root, f))
-                    for f in files
-                    if not f.startswith((".", "_"))
-                )
-        else:
-            return 1 << 30
-    except OSError:
+    does not need. Reads the sizes from ``_table_files`` instead of
+    converting the plan to an RDD on the driver (~0.1 s of py4j per
+    call). Returns a huge count (no repartition) when the table has no
+    local files — pre-split cluster inputs need no spreading."""
+    if files is None:
         return 1 << 30
+    bytes_ = sum(size for _, _, size in files)
+
     def _size_conf(key: str, default: int) -> int:
         raw = spark.conf.get(key, f"{default}b")
         m = re.fullmatch(r"(\d+)\s*([kmgt]?)b?", raw.strip().lower())

@@ -406,7 +406,7 @@ def test_hll_merge_equals_direct_sketch(spark):
 
 
 def test_cosine_pairs_max_block_flood_guard(spark):
-    """Embedding-pathology guard (tools/vector_probe.py): with a sane
+    """Embedding-pathology guard: with a sane
     cap the clean corpus is row-identical to the uncapped form, and a
     constant-embedding flood (every vector in one block) is dropped
     outright instead of going C(n, 2)."""

@@ -672,26 +672,3 @@ def test_binseg2_pair_grid_is_bounded_broadcast(spark):
     plan = plan_of(QUERIES["binseg2_changepoint"](spark, SF_DIR))
     assert "CartesianProduct" not in plan, plan
     assert plan.count("Scan parquet") <= 1, plan
-
-
-def test_round14_candidates_stay_jvm_side_and_cartesian_free(spark):
-    """Pre-registration plan audit for the staged r14 candidates (the
-    same gate their registration will re-assert): no row-Python, no
-    cartesian products, and the PR-AUC / JB / DW statistics each
-    collapse the corpus in at most one scan before their bounded
-    control-plane tails."""
-    from be_analytic_etl_spark.queries_round14_candidates import (
-        ext_durbin_watson,
-        ext_jarque_bera,
-        ext_pr_auc,
-    )
-
-    for fn in (ext_jarque_bera, ext_pr_auc, ext_durbin_watson):
-        df = fn(spark, SF_DIR)
-        plan = plan_of(df)
-        assert "BatchEvalPython" not in plan, fn.__name__
-        assert "ArrowEvalPython" not in plan, fn.__name__
-        assert "CartesianProduct" not in plan, fn.__name__
-        assert plan.count("Scan parquet") <= 1, (
-            fn.__name__
-        )

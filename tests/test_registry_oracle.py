@@ -1,12 +1,9 @@
-"""Run every registered query against its DuckDB oracle (driver-style gate).
+"""Run every registered query against its DuckDB oracle.
 
-This mirrors the driver's CORRECTNESS check at a smaller SF so regressions
-surface locally before a round ends.
+The same compare as ``tools/verify_driver.py``, at a small scale factor.
 """
 
 from __future__ import annotations
-
-import pytest
 
 from tests.conftest import SF_DIR, assert_matches_oracle
 
@@ -46,20 +43,23 @@ def test_every_query_matches_oracle(spark, duck):
 
     with ThreadPoolExecutor(max_workers=8) as pool:
         failures = [f for f in pool.map(check, _pairs()) if f]
-    assert not failures, (
-        f"{len(failures)} queries mismatch their oracle: {failures}"
+    assert not failures, _census_message(failures)
+
+
+def _census_message(failures):
+    """The census failure text, ending with the command that reruns just
+    the failing queries."""
+    names = " ".join(name for name, _ in failures)
+    return (
+        f"{len(failures)} queries mismatch their oracle: {failures}\n"
+        f"rerun them one at a time: "
+        f"python tools/verify_driver.py {SF_DIR} {names}"
     )
 
 
-def test_driver_window_queries_all_have_oracles():
-    """The driver oracle-checks the FIRST 50 registered queries; a
-    window slot spent on a rows-only query wastes a verification slot.
-    Every window query must have a value-checking oracle."""
-    from be_analytic_etl_spark.registry import ORACLE_SQL, QUERIES
-
-    window = list(QUERIES)[:50]
-    missing = [n for n in window if n not in ORACLE_SQL]
-    assert not missing, f"window queries without oracles: {missing}"
+def test_census_message_ends_with_rerun_command():
+    msg = _census_message([("q_a", "AssertionError: x"), ("q_b", "KeyError: y")])
+    assert msg.endswith(f"python tools/verify_driver.py {SF_DIR} q_a q_b")
 
 
 def test_registry_has_no_rows_only_queries():

@@ -1,7 +1,5 @@
-"""STAGED round-13 candidates (queries_round13_candidates.py): each
-must already match its DuckDB oracle at sf0.001 — the same dress
-rehearsal the staged merge panels get — plus brute-force checks, so
-r13 registration is three register() calls and a window slot."""
+"""Round-13 queries (queries_round13.py): each matches its DuckDB
+oracle at sf0.001, plus brute-force checks of the statistics."""
 
 from __future__ import annotations
 
@@ -19,7 +17,7 @@ SF_DIR = "/root/testdata/sf0.001"
 def test_staged_candidates_match_their_oracles(spark, duck):
     from tests.conftest import assert_matches_oracle
 
-    from be_analytic_etl_spark.queries_round13_candidates import (
+    from be_analytic_etl_spark.queries_round13 import (
         binseg2_changepoint,
         binseg2_changepoint_oracle,
         fdr_bh_panel,
@@ -39,7 +37,7 @@ def test_staged_candidates_match_their_oracles(spark, duck):
 def test_two_proportion_matches_python_fold(spark):
     """Exact day-0-conversion counts + the z formula recomputed from
     raw rows with the same portable hash bucketing."""
-    from be_analytic_etl_spark.queries_round13_candidates import (
+    from be_analytic_etl_spark.queries_round13 import (
         two_proportion_panel,
     )
     from be_analytic_etl_spark.sources import load_table
@@ -92,7 +90,7 @@ def test_two_proportion_matches_python_fold(spark):
 def test_binseg2_beats_or_ties_single_split(spark):
     """Adding a second changepoint can only explain MORE variance than
     the registered single-split query's best (nested models)."""
-    from be_analytic_etl_spark.queries_round13_candidates import (
+    from be_analytic_etl_spark.queries_round13 import (
         binseg2_changepoint,
     )
     from be_analytic_etl_spark.registry import QUERIES
@@ -108,7 +106,7 @@ def test_binseg2_matches_exhaustive_python(spark):
     """Exhaustive (t1, t2) search over the exact daily-cents series."""
     import duckdb
 
-    from be_analytic_etl_spark.queries_round13_candidates import (
+    from be_analytic_etl_spark.queries_round13 import (
         binseg2_changepoint,
     )
 
@@ -149,7 +147,7 @@ def test_binseg2_matches_exhaustive_python(spark):
 def test_fdr_bh_matches_python_stepup(spark):
     """The BH step-up recomputed from the panel's own (already oracle-
     checked) p-values: sort, threshold (i/m)q, reject ranks <= k."""
-    from be_analytic_etl_spark.queries_round13_candidates import fdr_bh_panel
+    from be_analytic_etl_spark.queries_round13 import fdr_bh_panel
 
     rows = fdr_bh_panel(spark, SF_DIR).collect()
     ps = sorted(
@@ -183,7 +181,7 @@ def test_fdr_p_approximation_accuracy(spark):
     p (math.erfc reference)."""
     from pyspark.sql import functions as F
 
-    from be_analytic_etl_spark.queries_round13_candidates import (
+    from be_analytic_etl_spark.queries_round13 import (
         P_TWO_SIDED_EXPR,
     )
 
@@ -197,10 +195,8 @@ def test_fdr_p_approximation_accuracy(spark):
         assert abs(got[z] - exact) < 2e-7, (z, got[z], exact)
 
 
-# Pre-registration degenerate hardening (the ext_entity_resolution
-# lesson: the adversarial gates only iterate the REGISTRY, so a staged
-# query meets them for the first time at registration — run the five
-# poisoned corpora against the candidates NOW). Fixtures imported by
+# Degenerate hardening: the five poisoned corpora of the registry-wide
+# gates, run against these queries directly. Fixtures imported by
 # reference from the gate module (pytest resolves them by name).
 from tests.test_degenerate_corpora import (  # noqa: E402,F401
     empty_dir,
@@ -212,7 +208,7 @@ from tests.test_degenerate_corpora import (  # noqa: E402,F401
 
 
 def _candidates():
-    from be_analytic_etl_spark.queries_round13_candidates import (
+    from be_analytic_etl_spark.queries_round13 import (
         binseg2_changepoint,
         fdr_bh_panel,
         two_proportion_panel,

@@ -44,7 +44,7 @@ def test_spine_matches_registered_query(spark):
 
 
 def test_spine_matches_plain_on_whale_corpus(spark):
-    """90% of events collapsed onto one user — the skew_probe corpus."""
+    """90% of events collapsed onto one user (a whale-skew corpus)."""
     from be_analytic_etl_spark.sources import load_table
 
     ev = load_table(spark, SF_DIR, "events").withColumn(

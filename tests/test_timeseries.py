@@ -77,7 +77,7 @@ def test_ewma_single_event_and_bad_alpha(spark):
 
 
 def test_gapfill_clamp_bounds_neutralizes_drifted_timestamps(spark):
-    """Timestamp-pathology guard (tools/time_probe.py): one epoch-zero
+    """Timestamp-pathology guard: one epoch-zero
     and one far-future row would stretch their keys' sequence(min,max)
     spines by decades; with clamp_bounds the poisoned corpus yields
     exactly the clean corpus's rows."""

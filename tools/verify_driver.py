@@ -1,7 +1,7 @@
 """Driver-contract simulation: run every queries() entry AND its oracle_sql()
 in DuckDB over the same parquet, compare rows/cols/value-hash.
 
-Usage: python /tmp/verify_driver.py /root/testdata/sf0.001 [name_filter...]
+Usage: python tools/verify_driver.py <SF_DIR> [name ...]
 Build the Spark session with DEFAULT configs (ANSI on, parquet timestamps as
 TIMESTAMP_NTZ in Spark 4) — exactly the deltas that caused round-3 reds.
 """
@@ -11,8 +11,9 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
-os.chdir("/root/repo")
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _REPO)
+os.chdir(_REPO)
 
 import duckdb
 from pyspark.sql import SparkSession
@@ -43,15 +44,9 @@ def _fmt(v):
         f = float(v)
         if f != f:
             return "NULL"
-        if os.environ.get("LEGACY_FLOAT"):
-            # Pre-round-5 forgiving canon, kept only as an explicit
-            # escape hatch for diffing against old results.
-            return "f:" + str(round(float(f"{f:.12g}"), 6))
-        # Full-precision canon (the DEFAULT since round 6, matching the
-        # always-strict pytest canon): stricter than any plausible driver
-        # canon. A query green under this cannot be ulp-fragile
-        # (ext_zscore_outliers passed the 12g canon locally but went
-        # driver-red in round 4 — hence this mode).
+        # Full-precision canon, matching the pytest canon: a query green
+        # under this cannot be ulp-fragile (ext_zscore_outliers passed a
+        # 12-significant-digit canon but failed a stricter compare).
         return "f:" + f"{f:.17g}"
     if isinstance(v, decimal.Decimal):
         return "d:" + str(v.normalize())
