@@ -116,8 +116,7 @@ def ewma_last(
     Scale: ONE shuffle on the key; per-key state is that key's value
     array (events-per-key bounded — same envelope as any per-key
     sessionization). For unbounded histories, pre-aggregate per coarse
-    time bucket first or switch to the streaming twin
-    (``applyInPandasWithState`` carrying one scalar per key).
+    time bucket first.
 
     Returns ``(key_col, n_events, ewma)``.
     """

@@ -981,10 +981,10 @@ register(
     FROM documents
     """,
 )
-# streaming.stream_dedup_first (applyInPandasWithState). Batch semantics:
-# the winner per key is min(ts, event_id); the streaming operator converges
-# to exactly this on a bounded in-watermark stream (asserted in
-# tests/test_streaming.py).
+
+
+# First event per user: the winner per key is min(ts, event_id), with
+# event_id breaking ties on ts so the pick is deterministic.
 def q_ext_first_per_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 

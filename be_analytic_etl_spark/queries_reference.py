@@ -999,8 +999,8 @@ register(
 
 
 # ---------------------------------------------------------------------------
-# Sessionization (gap-based) — batch twin of the streaming operator:
-# session = cumulative sum of "gap > 30 min" flags per user.
+# Sessionization (gap-based): session = cumulative sum of "gap > 30 min"
+# flags per user.
 # Scale: one shuffle on user_id; window sort is per-user (bounded).
 def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
@@ -1058,8 +1058,8 @@ register(
 
 
 # ---------------------------------------------------------------------------
-# Sliding-window aggregation (batch twin of streaming.stream_sliding_agg):
-# 1h windows sliding every 30min — every event belongs to exactly 2 windows.
+# Sliding-window aggregation: 1h windows sliding every 30min — every event
+# belongs to exactly 2 windows.
 # Spark's F.window expands each row into its window set in ONE pass (an
 # Expand, no self-join); the DuckDB oracle states the same expansion
 # explicitly (floor to the slide grid, k in 0..1).
@@ -1104,18 +1104,15 @@ register(
 
 
 # ---------------------------------------------------------------------------
-# Stream-static enrichment (batch twin of streaming.stream_enrich): events
-# left-join a broadcast user dimension derived from customer, aggregated by
-# segment. The join side that would be static in the stream broadcasts —
+# Dimension enrichment: events left-join a broadcast user dimension derived
+# from customer, aggregated by segment. The small dimension broadcasts —
 # no shuffle of the event side.
 def q_events_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
     dim = _t(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), F.col("c_mktsegment").alias("segment")
     )
-    from be_analytic_etl_spark.streaming import stream_enrich
-
-    enriched = stream_enrich(ev, dim)
+    enriched = ev.join(F.broadcast(dim), "user_id", "left")
     return enriched.groupBy(
         F.coalesce(F.col("segment"), F.lit("UNKNOWN")).alias("segment")
     ).agg(
@@ -1143,7 +1140,7 @@ register(
 
 
 # ---------------------------------------------------------------------------
-# Tumbling-window aggregation (batch twin of streaming windowed agg).
+# Tumbling-window aggregation: events per (hour, event_type).
 def q_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
     return ev.groupBy(
@@ -1543,9 +1540,8 @@ register(
 
 
 # ---------------------------------------------------------------------------
-# Click->purchase attribution, batch twin of
-# streaming.stream_attribution_join — composed from the bucketized
-# range_join operator (clicks become 30-minute intervals; purchases are
+# Click->purchase attribution, composed from the bucketized range_join
+# operator (clicks become 30-minute intervals; purchases are
 # the points), so the batch path is also nested-loop-free.
 def q_click_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     from be_analytic_etl_spark.operators.rangejoin import range_join
@@ -1766,11 +1762,10 @@ register(
 
 
 # ---------------------------------------------------------------------------
-# Native session_window in BATCH: Spark's mergeable gap-session operator
-# (same one the streaming job uses) aggregated per (user, session) — the
-# oracle derives identical sessions relationally (lag-gap flag + running
-# sum), proving the two formulations equivalent. Session end = last event
-# + gap, per session_window semantics.
+# Native session_window: Spark's mergeable gap-session operator
+# aggregated per (user, session) — the oracle derives identical sessions
+# relationally (lag-gap flag + running sum), proving the two formulations
+# equivalent. Session end = last event + gap, per session_window semantics.
 def q_session_window_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
     return (

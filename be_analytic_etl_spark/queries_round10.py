@@ -517,10 +517,8 @@ _HB_BINS = 10
 
 def hellinger_from_cells(cells: DataFrame) -> DataFrame:
     """Per-language Bhattacharyya/Hellinger from a ``(lang, __b, __c)``
-    cell frame — factored so the STREAMED lang x decile substrate
-    (streaming.stream_lang_bins, complete mode) feeds the identical
-    readout as the batch query (the seasonal/HL twin discipline;
-    pinned bit-identical in tests/test_streaming.py)."""
+    cell frame: the registered query builds the lang x decile cells,
+    then calls this readout."""
     gb = cells.groupBy("__b").agg(F.sum("__c").cast("long").alias("__g"))
     nl = cells.groupBy("lang").agg(F.sum("__c").cast("long").alias("__nl"))
     tot = cells.agg(F.sum("__c").cast("long").alias("__n"))
@@ -1015,10 +1013,8 @@ register("ext_wasserstein", q_ext_wasserstein, _wasserstein_oracle())
 
 def hl_from_daily(daily: DataFrame) -> DataFrame:
     """Hodges-Lehmann weekend-vs-weekday shift from a ``(day, c)`` daily
-    frame — factored so the STREAMED daily substrate
-    (streaming.stream_daily_cents, complete mode) feeds the identical
-    code path as the batch query (the seasonal_from_daily / psi twin
-    discipline; pinned bit-identical in tests/test_streaming.py)."""
+    frame: the registered query collapses the events to one row per day,
+    then calls this."""
     dow = F.expr("weekday(day)").cast("int")
     wk = daily.filter(dow >= 5).select(F.col("c").alias("__cx"))
     wd = daily.filter(dow < 5).select(F.col("c").alias("__cy"))
@@ -1098,8 +1094,8 @@ register("ext_hodges_lehmann", q_ext_hodges_lehmann, _hl_oracle())
 
 
 def siegel_from_daily(daily: DataFrame) -> DataFrame:
-    """Siegel repeated-medians slope from a ``(day, c)`` daily frame —
-    factored for the streaming twin (see hl_from_daily)."""
+    """Siegel repeated-medians slope from a ``(day, c)`` daily frame
+    (see hl_from_daily)."""
     a = daily.select(F.col("day").alias("da"), F.col("c").alias("ca"))
     b = daily.select(F.col("day").alias("db"), F.col("c").alias("cb"))
     slope = (F.col("cb") - F.col("ca")).cast("double") / F.datediff(

@@ -85,15 +85,9 @@ def q_ext_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def funnel_from_events(ev: DataFrame) -> DataFrame:
-    """The funnel fold over a (user_id, ts, event_type) frame — shared
-    by the registered batch query and the streaming twin's readout
-    (tests/test_streaming.py), so the two surfaces cannot drift. The
-    streamed substrate is the distinct step-event frame
-    (streaming/jobs.py stream_funnel_events): the 7-day window
-    re-anchors on the user's EARLIEST view, so a late-arriving earlier
-    view can resurrect any previously-out-of-window click — no
-    fixed-size per-user summary is sufficient, and the exact
-    event-time multiset IS the minimal streamable state."""
+    """The funnel fold over a (user_id, ts, event_type) frame: each step
+    strictly after the previous one, all within the 7-day window
+    anchored on the user's EARLIEST view."""
     s1 = (
         ev.filter(F.col("event_type") == _FUNNEL_STEPS[0])
         .groupBy("user_id")

@@ -212,11 +212,8 @@ def q_ext_growth_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def growth_accounting_from_ud(ud: DataFrame) -> DataFrame:
-    """The DAU-decomposition fold over a distinct (user_id, day) frame —
-    shared by the registered batch query and the streaming twin's
-    readout (tests/test_streaming.py): the streamed substrate
-    (streaming/jobs.py stream_user_day) maintains exactly this frame
-    incrementally, so the two surfaces cannot drift."""
+    """The DAU-decomposition fold over a distinct (user_id, day) frame,
+    which the registered query derives from the events."""
     w = Window.partitionBy("user_id").orderBy("day")
     lagged = ud.select(
         "user_id",

@@ -77,10 +77,7 @@ def q_ext_survival_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def survival_from_user_day(ud: DataFrame) -> DataFrame:
     """The KM/Nelson-Aalen fold over a (user_id, __d) presence frame —
-    the SAME substrate the growth-accounting streaming twin maintains
-    (streaming/jobs.py stream_user_day), so streamed lifecycle state
-    feeds survival and DAU decomposition alike; pinned bit-identical in
-    tests/test_streaming.py."""
+    the same (user, day) substrate the growth-accounting query folds."""
     pu = ud.groupBy("user_id").agg(
         F.min("__d").alias("__f"), F.max("__d").alias("__l")
     )
@@ -193,10 +190,8 @@ def q_ext_inter_arrival(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def inter_arrival_hist_from_gaps(gaps: DataFrame) -> DataFrame:
-    """Spectrum readout over a ``__s`` (gap seconds) frame — shared by
-    the batch query above and the streaming twin
-    (streaming/jobs.stream_user_gaps), so the two stay bit-identical by
-    construction whenever the gap multisets agree."""
+    """Spectrum readout over a ``__s`` (gap seconds) frame, which the
+    query above derives from consecutive events per user."""
     # bit-length bucket: 0 for sub-second gaps, else length(bin(s)) —
     # the HLL rank trick, integer-exact in both engines.
     bucket = (

@@ -366,10 +366,8 @@ register("ext_mann_whitney", q_ext_mann_whitney, _mw_oracle())
 
 
 def seasonal_from_daily(daily: DataFrame) -> DataFrame:
-    """The decomposition over ANY (day, c) frame — factored so the
-    streaming twin (stream_daily_cents' complete-mode sink) feeds the
-    SAME code as the batch query (the r8 psi_from_binned discipline;
-    tests/test_streaming.py pins batch/stream bit-identity)."""
+    """The decomposition over ANY (day, c) frame: the registered query
+    collapses the events to one row per day, then calls this."""
     w7 = Window.orderBy("day").rowsBetween(-3, 3)
     d1 = daily.select(
         "day",
@@ -866,8 +864,8 @@ register("ext_brier_decomp", q_ext_brier_decomp, _brier_oracle())
 
 
 def runs_from_daily(daily: DataFrame) -> DataFrame:
-    """The runs test over ANY (day, c) frame — factored for the
-    streaming twin, like ``seasonal_from_daily`` above."""
+    """The runs test over ANY (day, c) frame, like
+    ``seasonal_from_daily`` above."""
     w = Window.orderBy("c")
     wall = Window.partitionBy()
     cum = daily.select(

@@ -22,7 +22,7 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLE_SQL: dict[str, str] = {}
 
 
-def register(name: str, fn: Callable[[SparkSession, str], DataFrame], sql: str | None) -> None:
+def register(name: str, fn: Callable[[SparkSession, str], DataFrame], sql: str) -> None:
     # Duplicate names are a hard error: a silent overwrite would shadow
     # an oracle-checked query with a different implementation while its
     # history kept reporting the OLD semantics (three queries once
@@ -30,8 +30,7 @@ def register(name: str, fn: Callable[[SparkSession, str], DataFrame], sql: str |
     if name in QUERIES:
         raise ValueError(f"query {name!r} is already registered")
     QUERIES[name] = fn
-    if sql is not None:
-        ORACLE_SQL[name] = sql
+    ORACLE_SQL[name] = sql
 
 
 register("flagship_mom_pivot", flagship_orders, flagship_orders_oracle_sql())

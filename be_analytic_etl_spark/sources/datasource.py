@@ -32,12 +32,7 @@ import re
 import urllib.request
 from collections.abc import Iterator
 
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceReader,
-    InputPartition,
-    SimpleDataSourceStreamReader,
-)
+from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
 #: The reference's encoding probe order (main.py:371-389).
 DEFAULT_ENCODINGS = ("utf-8", "latin-1", "cp1252", "utf-16")
@@ -87,9 +82,6 @@ class RestTsvDataSource(DataSource):
     def reader(self, schema) -> "RestTsvReader":
         return RestTsvReader(self.options)
 
-    def simpleStreamReader(self, schema) -> "RestTsvStreamReader":  # noqa: N802
-        return RestTsvStreamReader(self.options)
-
 
 class RestTsvReader(DataSourceReader):
     def __init__(self, options: dict) -> None:
@@ -117,68 +109,6 @@ class RestTsvReader(DataSourceReader):
         # see _split_records)
         for i, line in enumerate(_split_records(text)):
             yield (url, i, line)
-
-
-class RestTsvStreamReader(SimpleDataSourceStreamReader):
-    """Streaming tail of ONE line-oriented resource.
-
-    The offset is ``{"pos": <lines consumed>}``; each micro-batch re-reads
-    the resource and emits only lines past the committed position — the
-    poll-a-growing-feed shape (paginated REST export, append-only log
-    file). ``readBetweenOffsets`` replays any [start, end) slice exactly,
-    which is what gives the stream its exactly-once contract on recovery:
-    a line's (line_no) identity never changes because the feed is
-    append-only.
-
-    SimpleDataSourceStreamReader reads on the DRIVER by design (Spark
-    prefetches and ships record batches to executors) — appropriate here
-    because one polled feed is driver-bounded control traffic; a
-    many-partition firehose would implement the executor-side
-    ``DataSourceStreamReader`` instead.
-    """
-
-    def __init__(self, options: dict) -> None:
-        url = (options.get("url") or "").strip()
-        if not url:
-            raise ValueError("rest_tsv streaming requires option 'url'")
-        self._url = url
-        encs = options.get("encodings")
-        self._encodings = (
-            tuple(e.strip() for e in encs.split(",") if e.strip())
-            if encs
-            else DEFAULT_ENCODINGS
-        )
-
-    def initialOffset(self) -> dict:  # noqa: N802 (API name)
-        return {"pos": 0}
-
-    def _lines(self) -> list[str]:
-        with urllib.request.urlopen(self._url, timeout=60) as resp:
-            raw = resp.read()
-        text = _decode_with_fallback(raw, self._encodings)
-        lines = _split_records(text)
-        # Only NEWLINE-TERMINATED lines are consumable: a non-atomic
-        # append can expose a partial trailing line, and committing it
-        # would both ingest truncated content and break replay (the same
-        # offset would later resolve to different text).
-        if text and not text.endswith(("\n", "\r")):
-            lines = lines[:-1]
-        return lines
-
-    def read(self, start: dict) -> tuple[Iterator[tuple], dict]:
-        lines = self._lines()
-        pos = int(start.get("pos", 0))
-        end = {"pos": max(pos, len(lines))}
-        rows = iter(
-            [(self._url, i, lines[i]) for i in range(pos, len(lines))]
-        )
-        return rows, end
-
-    def readBetweenOffsets(self, start: dict, end: dict) -> Iterator[tuple]:
-        lines = self._lines()
-        lo, hi = int(start.get("pos", 0)), int(end.get("pos", 0))
-        hi = min(hi, len(lines))
-        return iter([(self._url, i, lines[i]) for i in range(lo, hi)])
 
 
 def register_rest_tsv(spark) -> None:

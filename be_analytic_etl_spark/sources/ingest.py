@@ -302,26 +302,6 @@ def _header_names(header_vals: list) -> list[str]:
     return names
 
 
-def discover_header(df: DataFrame, markers: list[str] | None = None) -> tuple[DataFrame, list[str]]:
-    """P5+P6: find the header row by marker, promote its values to column
-    names, return (data rows below the header, promoted names)."""
-    data, header = _find_header(df, markers or HEADER_MARKERS)
-    names = _header_names(header)
-    return data.toDF(*names), names
-
-
-def remove_metadata_rows(df: DataFrame, patterns: list[str] | None = None) -> DataFrame:
-    """P7: drop any row where ANY column contains a metadata phrase
-    (case-insensitive, null-safe)."""
-    return df.filter(f"NOT {_has_any_sql(df.columns, patterns or METADATA_PATTERNS)}")
-
-
-def drop_all_null_rows(df: DataFrame) -> DataFrame:
-    """P8: pandas dropna(how='all') twin; empty strings count as null here
-    because raw ingest is all-string."""
-    return df.filter(_not_blank_sql(df.columns))
-
-
 _DATE_COL_FULL = re.compile(r"^\d{4}-\d{2}-\d{2} \d{2}:\d{2}:\d{2}$")
 _DATE_COL_YM = re.compile(r"^\d{4}-\d{2}$")
 
@@ -332,12 +312,6 @@ def _month_label(name: str) -> str:
     if _DATE_COL_FULL.match(cs):
         return _dt.datetime.strptime(cs, "%Y-%m-%d %H:%M:%S").strftime("%Y-%m")
     return name
-
-
-def normalize_date_column_names(df: DataFrame) -> DataFrame:
-    """P10: rename 'YYYY-MM-DD HH:MM:SS' column labels to 'YYYY-MM' (schema
-    op on the driver, not a data op)."""
-    return df.toDF(*[_month_label(c) for c in df.columns])
 
 
 _ID_COLUMNS = {"GRUPO_ECONOMICO", "VARIAVEL", "OPERADORA"}

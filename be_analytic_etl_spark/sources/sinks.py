@@ -368,9 +368,9 @@ def compact_parquet(
     rewrite itself is one read + one round-robin repartition + one write,
     fully distributed. Returns the target file count.
 
-    Streaming sinks and hourly ingest partitions are the usual callers —
-    run compaction on closed partitions, then swap directories
-    atomically at the metastore/manifest layer (out of scope here).
+    Hourly ingest partitions are the usual callers — run compaction on
+    closed partitions, then swap directories atomically at the
+    metastore/manifest layer (out of scope here).
     """
     files = list_parquet_files(spark, src_path)
     total = sum(b for _, b in files)

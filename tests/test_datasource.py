@@ -50,40 +50,3 @@ def test_rest_tsv_requires_urls(spark):
     with pytest.raises(Exception):
         spark.read.format("rest_tsv").load().collect()
 
-
-def test_rest_tsv_stream_tails_appends(spark, tmp_path):
-    """simpleStreamReader: offset = lines consumed; appended lines arrive
-    in the next run from the same checkpoint, already-consumed lines do
-    not repeat (the append-only-feed exactly-once contract)."""
-    feed = tmp_path / "feed.tsv"
-    feed.write_bytes(b"a\t1\nb\t2\n")
-    ckpt = str(tmp_path / "ckpt")
-    out = str(tmp_path / "out")
-    register_rest_tsv(spark)
-
-    def run_once():
-        # file sink (not memory): the point is checkpointed offset
-        # recovery across restarts, which memory sinks don't support
-        q = (
-            spark.readStream.format("rest_tsv")
-            .option("url", f"file://{feed}")
-            .load()
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        assert not q.isActive
-        return {(r.line_no, r.line) for r in spark.read.parquet(out).collect()}
-
-    first = run_once()
-    assert first == {(0, "a\t1"), (1, "b\t2")}
-
-    feed.write_bytes(b"a\t1\nb\t2\nc\t3\n")  # append one line
-    second = run_once()
-    # second run emitted ONLY the appended line; sink now holds all three
-    assert second == {(0, "a\t1"), (1, "b\t2"), (2, "c\t3")}
-    # ... and exactly three rows (a replayed prefix would duplicate 0/1)
-    assert spark.read.parquet(out).count() == 3

@@ -11,7 +11,7 @@ from tests.conftest import SF_DIR, assert_matches_oracle
 def _pairs():
     from be_analytic_etl_spark.registry import ORACLE_SQL, QUERIES
 
-    return sorted((name, QUERIES[name], ORACLE_SQL.get(name)) for name in QUERIES)
+    return sorted((name, QUERIES[name], ORACLE_SQL[name]) for name in QUERIES)
 
 
 def test_every_query_matches_oracle(spark, duck):
@@ -28,10 +28,6 @@ def test_every_query_matches_oracle(spark, duck):
         name, fn, sql = pair
         try:
             df = fn(spark, SF_DIR)
-            if sql is None:
-                # rows-only check for non-SQL-expressible ops
-                assert df.count() >= 0
-                return None
             cur = duck.cursor()
             try:
                 assert_matches_oracle(df, cur, sql)
@@ -63,12 +59,14 @@ def test_census_message_ends_with_rerun_command():
 
 
 def test_registry_has_no_rows_only_queries():
-    """EVERY registered query is value-checked — grouped PAVA, the one
-    historic exception, gained a closed-form-equality oracle in round 6
-    (ext_isotonic_trend emits the minimax fit + a PAVA-agreement flag).
-    A registration that forgets its oracle should fail here, not
-    silently downgrade to the driver's weaker rows-only check."""
+    """EVERY registered query is value-checked: each name has non-empty
+    oracle SQL text. A registration that passes ``None`` or an empty
+    string as its oracle fails here, by name, rather than as an opaque
+    error inside the census."""
     from be_analytic_etl_spark.registry import ORACLE_SQL, QUERIES
 
-    rows_only = [n for n in QUERIES if n not in ORACLE_SQL]
+    rows_only = [
+        n for n in QUERIES
+        if not isinstance(ORACLE_SQL.get(n), str) or not ORACLE_SQL[n].strip()
+    ]
     assert rows_only == [], rows_only

@@ -194,49 +194,3 @@ def test_fdr_p_approximation_accuracy(spark):
         exact = math.erfc(z / math.sqrt(2.0))
         assert abs(got[z] - exact) < 2e-7, (z, got[z], exact)
 
-
-# Degenerate hardening: the five poisoned corpora of the registry-wide
-# gates, run against these queries directly. Fixtures imported by
-# reference from the gate module (pytest resolves them by name).
-from tests.test_degenerate_corpora import (  # noqa: E402,F401
-    empty_dir,
-    nan_poisoned_dir,
-    null_poisoned_dir,
-    one_row_dir,
-    string_poisoned_dir,
-)
-
-
-def _candidates():
-    from be_analytic_etl_spark.queries_round13 import (
-        binseg2_changepoint,
-        fdr_bh_panel,
-        two_proportion_panel,
-    )
-
-    return [two_proportion_panel, binseg2_changepoint, fdr_bh_panel]
-
-
-def test_candidates_survive_one_row(spark, one_row_dir):
-    for fn in _candidates():
-        assert fn(spark, one_row_dir).collect() is not None
-
-
-def test_candidates_survive_empty(spark, empty_dir):
-    for fn in _candidates():
-        assert fn(spark, empty_dir).collect() is not None
-
-
-def test_candidates_survive_null_poisoned(spark, null_poisoned_dir):
-    for fn in _candidates():
-        assert fn(spark, null_poisoned_dir).collect() is not None
-
-
-def test_candidates_survive_nan_poisoned(spark, nan_poisoned_dir):
-    for fn in _candidates():
-        assert fn(spark, nan_poisoned_dir).collect() is not None
-
-
-def test_candidates_survive_string_poisoned(spark, string_poisoned_dir):
-    for fn in _candidates():
-        assert fn(spark, string_poisoned_dir).collect() is not None

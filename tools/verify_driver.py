@@ -6,7 +6,6 @@ Build the Spark session with DEFAULT configs (ANSI on, parquet timestamps as
 TIMESTAMP_NTZ in Spark 4) — exactly the deltas that caused round-3 reds.
 """
 import hashlib
-import math
 import os
 import sys
 import time
@@ -102,11 +101,7 @@ def main():
             sdf = fn(spark, SF_DIR)
             pdf = sdf.toPandas()
             scols, srows = list(pdf.columns), [tuple(r) for r in pdf.itertuples(index=False)]
-            sql = oracles.get(name)
-            if sql is None:
-                print(f"{name}: ROWS_ONLY rows={len(srows)} ({time.time()-t0:.1f}s)", flush=True)
-                continue
-            odf = con.execute(sql).df()
+            odf = con.execute(oracles[name]).df()
             ocols = list(odf.columns)
             ores = [tuple(r) for r in odf.itertuples(index=False)]
             sc, sh = canon(scols, srows)
