@@ -18,6 +18,14 @@ the input persisted so both passes see one partitioning. With
 ``order_cols`` it first ``repartitionByRange + sortWithinPartitions`` so
 the dense id follows the global sort order (range partitioning gives
 globally ordered partitions).
+
+Small-input path: when Spark estimates the union within
+``spark.sql.autoBroadcastJoinThreshold`` (``session.fits_one_task``),
+``consolidate`` coalesces it to one partition before ``dropDuplicates`` and
+``finalize`` sorts that partition and numbers it with
+``monotonically_increasing_id() + 1``: no exchange, no range sample, no
+persist and no count job, so consolidate+finalize builds with zero Spark
+jobs. Setting the threshold to ``-1`` restores the distributed plan above.
 """
 
 from __future__ import annotations
@@ -26,6 +34,8 @@ from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from be_analytic_etl_spark.session import fits_one_task, single_task_if_small
 
 #: Final rename map (main.py:673-692). VARIAVEL becomes *servico* (the
 #: indicator name) and the file-level SERVICO tag becomes *tipo_servico*.
@@ -48,8 +58,9 @@ def union_by_name(dfs: list[DataFrame]) -> DataFrame:
 
 
 def consolidate(dfs: list[DataFrame]) -> DataFrame:
-    """R5+R6: union then exact-duplicate removal (one shuffle on all cols)."""
-    return union_by_name(dfs).dropDuplicates()
+    """R5+R6: union then exact-duplicate removal (one shuffle on all cols,
+    none when the union is small enough for one task)."""
+    return single_task_if_small(union_by_name(dfs)).dropDuplicates()
 
 
 def add_dense_id(
@@ -121,11 +132,21 @@ def finalize(df: DataFrame, dense_id: bool = True) -> DataFrame:
     Renames happen in ONE positional select — sequential renaming would
     collide case-insensitively (VARIAVEL->servico then SERVICO->tipo_servico
     would see two 'servico' columns).
+
+    A dense id over an input that fits one task is the sorted partition's
+    row number (``monotonically_increasing_id`` counts from 0 in partition
+    0); a larger input takes ``add_dense_id``.
     """
     out = df.select(*[F.col(c).alias(FINAL_RENAMES.get(c, c)) for c in df.columns])
     if dense_id:
         order_cols = [c for c in ("tipo_servico", "grupo_economico", "servico", "mes_referencia") if c in out.columns]
-        out = add_dense_id(out, order_cols=order_cols or None)
+        if fits_one_task(out):
+            out = out.coalesce(1)
+            if order_cols:
+                out = out.sortWithinPartitions(*order_cols)
+            out = out.withColumn("id", F.monotonically_increasing_id() + 1)
+        else:
+            out = add_dense_id(out, order_cols=order_cols or None)
     else:
         out = out.withColumn("id", F.monotonically_increasing_id())
     ordered = [c for c in PREFERRED_ORDER if c in out.columns]

@@ -14,11 +14,20 @@ Re-expresses the reference's ``consolidacao_de_metricas`` PostgreSQL view
          -> project date_format(time,'yyyy-MM'), sort DESC       (README.md:156,213)
 
 Scale notes (100 TB design review):
-- Two shuffles total: one hash-partition on (time, group) for the first
-  aggregate, one on (group) for the window; the final per-time aggregate
-  reuses partial (map-side) aggregation. The window partitions by *group*
-  — cardinality = number of economic groups/priorities, so at huge scale
-  the window input is already tiny (|groups| x |months| rows after agg #1).
+- Small input, one task: when Spark estimates the input within
+  ``spark.sql.autoBroadcastJoinThreshold`` (``session.fits_one_task``) it
+  is coalesced to one partition, and the aggregates, the window and the
+  sort run in that one task with no exchange. ``create_consolidacao_view``
+  registers the fact gated the same way. ``-1`` switches the gate off.
+- Above the threshold, the distributed plan: a hash-partition on
+  (time, group) for the first aggregate, one on (group) for the window
+  and one on (time) for the final per-time aggregate, which reuses partial
+  (map-side) aggregation. The window partitions by *group* — cardinality =
+  number of economic groups/priorities, so at huge scale the window input
+  is already tiny (|groups| x |months| rows after agg #1).
+- On both paths the month-level result (one row per month) is coalesced
+  to one partition before the final sort (``COALESCE(1)`` hint in the SQL
+  text), so the sort needs no range exchange and no sample job.
 - The pivot is conditional aggregation in a single groupBy pass (one
   shuffle), not ``df.groupBy().pivot()``'s two-pass value discovery —
   pivot values are declared, matching the reference's static CASE list.
@@ -31,6 +40,9 @@ from collections.abc import Mapping
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from be_analytic_etl_spark.session import single_task_if_small
+from be_analytic_etl_spark.sources.tables import load_table
 
 
 def _nullif(c: Column, v: Column) -> Column:
@@ -78,7 +90,7 @@ def mom_variation_pivot(
     """
     cur, prev, taxa = "valor_atual", "valor_anterior", "taxa_var"
 
-    monthly = df.groupBy(time_col, group_col).agg(
+    monthly = single_task_if_small(df).groupBy(time_col, group_col).agg(
         (
             F.sum(F.col(value_col).cast(value_decimal)).cast("double")
             / F.count(value_col)
@@ -125,7 +137,7 @@ def mom_variation_pivot(
     ordered_cols = [out_time_col, out_avg_col] + [
         c for name in pivot.values() for c in (name, f"{name}_diff")
     ]
-    return result.select(*ordered_cols).orderBy(F.col(out_time_col).desc())
+    return result.select(*ordered_cols).coalesce(1).orderBy(F.col(out_time_col).desc())
 
 
 #: Economic groups pivoted by the reference view (README.md:167-182).
@@ -199,7 +211,7 @@ WITH monthly AS (
     FROM lagged
     WHERE valor_anterior IS NOT NULL AND valor_anterior <> 0
 )
-SELECT date_format(mes_ref, 'yyyy-MM') AS mes,
+SELECT /*+ COALESCE(1) */ date_format(mes_ref, 'yyyy-MM') AS mes,
        ROUND(AVG(taxa_var), 1) AS taxa_media,
        {pivot_sql}
 FROM taxas
@@ -214,8 +226,9 @@ def create_consolidacao_view(spark, fact: DataFrame) -> DataFrame:
     """Register ``fact`` as ``be_analytic_table`` and create the
     ``consolidacao_de_metricas`` temp view from the SQL text — the
     spark.sql twin of ``consolidacao_de_metricas()`` (equivalence asserted
-    in tests/test_flagship.py)."""
-    fact.createOrReplaceTempView("be_analytic_table")
+    in tests/test_flagship.py). A fact that fits one task is registered
+    coalesced to one partition, as ``mom_variation_pivot`` gates its input."""
+    single_task_if_small(fact).createOrReplaceTempView("be_analytic_table")
     spark.sql(
         "CREATE OR REPLACE TEMPORARY VIEW consolidacao_de_metricas AS "
         + consolidacao_view_sql()
@@ -237,7 +250,7 @@ def flagship_orders(spark, sf_dir: str) -> DataFrame:
     """Flagship analog on the driver's ``orders`` table: MoM variation of
     AVG(o_totalprice) per o_orderpriority — the exact operator chain of the
     reference view with ``orders`` standing in for ``be_analytic_table``."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = load_table(spark, sf_dir, "orders")
     monthly = orders.withColumn("__mes", F.date_trunc("month", F.col("o_orderdate")))
     return mom_variation_pivot(
         monthly,

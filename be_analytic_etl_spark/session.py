@@ -13,7 +13,10 @@ cluster. Defaults below are chosen so the same code runs unchanged on
   reference's ``errors='coerce'`` semantics
   (``/root/reference/main.py:521-525``);
 - driver heap sized from the memory the process can use (``driver_memory``),
-  not a fixed figure larger than small hosts.
+  not a fixed figure larger than small hosts;
+- small inputs run in one task (``single_task_if_small``): an input Spark
+  estimates within the broadcast threshold is coalesced to one partition,
+  so its aggregates, windows and sorts plan no exchange.
 """
 
 from __future__ import annotations
@@ -21,7 +24,7 @@ from __future__ import annotations
 import os
 from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # Shuffle partitions: with AQE coalescing enabled this is an upper bound,
 # not a fixed cost — safe to set high for cluster runs. Tests override to
@@ -130,6 +133,29 @@ def get_spark(app_name: str = "be-analytic-etl-spark", master: str | None = None
     else:
         builder = builder.master(f"local[{cpus}]")
     return builder.getOrCreate()
+
+
+def fits_one_task(df: DataFrame) -> bool:
+    """Whether Spark's size estimate of ``df`` is within
+    ``spark.sql.autoBroadcastJoinThreshold``.
+
+    The estimate is the optimized plan's ``sizeInBytes``, the figure the
+    planner itself compares with the threshold before it broadcasts a join
+    side: what Spark would ship whole to every task is small enough to
+    process in one. A non-positive threshold (``-1``) answers False for
+    every input, so the distributed plans come back everywhere."""
+    threshold = df.sparkSession._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    return threshold > 0 and df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes() <= threshold
+
+
+def single_task_if_small(df: DataFrame) -> DataFrame:
+    """``df.coalesce(1)`` when ``fits_one_task(df)``, else ``df``.
+
+    One partition satisfies every clustered or ordered distribution, so
+    the aggregates, windows and sorts above it plan no exchange, no range
+    sample and no extra job: for a small input the driver's per-job cost
+    outweighs whatever the spread would save."""
+    return df.coalesce(1) if fits_one_task(df) else df
 
 
 def stop_spark() -> None:

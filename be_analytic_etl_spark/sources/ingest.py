@@ -31,8 +31,10 @@ Scale notes:
   * the metadata-row and blank-row filters are one SQL expression over
     ``concat_ws`` of the row: no per-column OR chain (whose depth grew
     with the column count until the analyzer overflowed its stack);
-  * rename, month-label normalization, BR-number parse and the unpivot
-    are one ``selectExpr`` (a ``stack`` generator) built as text.
+  * rename, month-label normalization, the unpivot and the BR-number
+    parse are one SQL statement (``UNPIVOT INCLUDE NULLS``, planned as an
+    Expand whose size estimate carries the month fan-out), and the parse
+    applies once, to the unpivoted value column.
 - The *fleet* of files is processed as independent lazy plans unioned on
   the fixed long schema (SURVEY §7.4.4: unpivot FIRST, then union —
   per-file month columns differ, the long schema doesn't).
@@ -343,25 +345,44 @@ def tidy_decimal_strings(df: DataFrame, skip_cols: list[str]) -> DataFrame:
 LONG_SCHEMA_COLS = ["GRUPO_ECONOMICO", "VARIAVEL", "OPERADORA", "REFERENCIA_MES", "VALOR", "SERVICO"]
 
 
-def _long_select(cols: list[str], names: list[str], service: str) -> list[str] | None:
-    """The R1-R4 projection as ``selectExpr`` text over physical columns
-    ``cols`` whose logical names are ``names`` (position by position), or
-    None when there is no id or no month column. A ``stack`` generator
-    unpivots the month columns; each arm is the month as a date and the
-    cell parsed once through the BR-number expression."""
+def _to_long_sql(
+    df: DataFrame, cols: list[str], names: list[str], service: str
+) -> DataFrame | None:
+    """The R1-R4 step over ``df``, whose columns ``cols`` have the logical
+    names ``names`` (position by position), as one SQL statement; None
+    when there is no id or no month column.
+
+    ``UNPIVOT INCLUDE NULLS`` turns the raw month cells into one string
+    column (NULL cells kept), and the month label and the BR-number parse
+    apply once, to that column. Spark plans the unpivot as an Expand,
+    whose size estimate is the input's times the month count, so a size
+    gate downstream (``session.fits_one_task``) sees the long table's
+    fan-out. The statement is one string, so building it costs the same
+    py4j calls for 4 months as for 100."""
     ids = [(c, n) for c, n in zip(cols, names) if _is_id(n)]
     months = [(c, n) for c, n in zip(cols, names) if _is_month(n)]
     if not ids or not months:
         return None
-    arms = ", ".join(
-        f"to_date({sql_string(n)}, 'yyyy-MM'), {br_number_to_double_sql(quote_ident(c))}"
-        for c, n in months
+    inner = ", ".join(
+        [f"{quote_ident(c)} AS {quote_ident(n)}" for c, n in ids]
+        + [f"CAST({quote_ident(c)} AS STRING) AS {quote_ident(c)}" for c, _ in months]
     )
-    return [
-        *[f"{quote_ident(c)} AS {quote_ident(n)}" for c, n in ids],
-        f"stack({len(months)}, {arms}) AS (REFERENCIA_MES, VALOR)",
-        f"{sql_string(service)} AS SERVICO",
-    ]
+    arms = ", ".join(f"{quote_ident(c)} AS {quote_ident(n)}" for c, n in months)
+    head = (
+        f"SELECT {', '.join(quote_ident(n) for _, n in ids)}, "
+        "to_date(__mes, 'yyyy-MM') AS REFERENCIA_MES, "
+        f"{br_number_to_double_sql('__raw')} AS VALOR, "
+        f"{sql_string(service)} AS SERVICO "
+        f"FROM (SELECT {inner} FROM "
+    )
+    tail = f") UNPIVOT INCLUDE NULLS (__raw FOR __mes IN ({arms}))"
+    # spark.sql str.formats the text to fill {t}: escape every other brace
+    text = _format_escape(head) + "{t}" + _format_escape(tail)
+    return df.sparkSession.sql(text, t=df)
+
+
+def _format_escape(text: str) -> str:
+    return text.replace("{", "{{").replace("}", "}}")
 
 
 def to_long(df: DataFrame, service: str) -> DataFrame:
@@ -376,15 +397,13 @@ def to_long(df: DataFrame, service: str) -> DataFrame:
     that agree on the remaining columns. Files without OPERADORA null-fill
     it at union time (``unionByName(allowMissingColumns=True)``).
 
-    Values parse inside the unpivot's ``stack`` arms: each month cell runs
-    the BR-number expression once per row, the same work as parsing in a
-    narrow projection before an ``unpivot`` (whose Expand would otherwise
-    carry the whole regex tree in every branch), and the whole step is one
-    parsed expression list instead of a Column tree per month."""
-    select = _long_select(df.columns, df.columns, service)
-    if select is None:
+    The raw cells are unpivoted first and parsed after, so the plan holds
+    one copy of the BR-number expression, not one per month."""
+    cols = df.columns
+    long = _to_long_sql(df, cols, cols, service)
+    if long is None:
         return df.withColumn("SERVICO", F.lit(service))
-    return df.selectExpr(*select)
+    return long
 
 
 def transform_wide(raw: DataFrame, service: str) -> DataFrame:
@@ -398,7 +417,7 @@ def transform_wide(raw: DataFrame, service: str) -> DataFrame:
     One Spark job (the header lookup) and a fixed number of py4j calls:
     the row filter is one expression, and the rename (P9) and label
     normalization (P10) are name edits on the driver that land in the
-    one long projection. Only the pass-through branch (no id or month
+    one unpivot statement. Only the pass-through branch (no id or month
     column) renames the frame and tidies decimal strings (P11)."""
     data, header = _find_header(raw, HEADER_MARKERS)
     cols = raw.columns
@@ -408,9 +427,9 @@ def transform_wide(raw: DataFrame, service: str) -> DataFrame:
     if len(names) >= 2:
         names[:2] = ["GRUPO_ECONOMICO", "VARIAVEL"]
     names = [_month_label(n) for n in names]
-    select = _long_select(cols, names, service)
-    if select is not None:
-        return data.selectExpr(*select)
+    long = _to_long_sql(data, cols, names, service)
+    if long is not None:
+        return long
     id_cols, _ = classify_columns(names)
     return to_long(tidy_decimal_strings(data.toDF(*names), skip_cols=id_cols), service)
 

@@ -12,6 +12,7 @@ reproduces the driver's view so that class of bug fails locally first.
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 import duckdb
 import pytest
@@ -160,9 +161,19 @@ def assert_matches_oracle(spark_df, duck_con, sql, check_schema_names=True):
     assert not mismatches, f"value mismatch (first 3): {mismatches[:3]}"
 
 
-def rows_key(rows, columns):
-    """Back-compat shim for tests that canonicalize raw Row lists."""
-    import pandas as pd
+def executed_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
 
-    pdf = pd.DataFrame([tuple(r) for r in rows], columns=list(columns))
-    return _canon_pdf(pdf)
+
+@contextmanager
+def broadcast_threshold(spark, value: str):
+    """``spark.sql.autoBroadcastJoinThreshold`` set to ``value`` inside the
+    block. The size gate (``session.fits_one_task``) reads it, so ``"-1"``
+    builds the distributed plans for every input."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)

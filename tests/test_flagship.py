@@ -4,7 +4,12 @@ from __future__ import annotations
 
 import datetime
 
-from tests.conftest import SF_DIR, assert_matches_oracle
+from tests.conftest import (
+    SF_DIR,
+    assert_matches_oracle,
+    broadcast_threshold,
+    executed_plan,
+)
 
 from be_analytic_etl_spark.plans.flagship import (
     consolidacao_de_metricas,
@@ -82,6 +87,52 @@ def test_sql_view_equals_dataframe_plan(spark):
     sql_out = create_consolidacao_view(spark, fact)
     assert df_out.columns == sql_out.columns
     assert sorted(map(tuple, df_out.collect())) == sorted(map(tuple, sql_out.collect()))
+
+
+def _synthetic_ida_parquet(spark, tmp_path):
+    """The synthetic fact read back from parquet, so that Spark's size
+    estimate is the file's (a frame built from Python rows estimates at
+    ``spark.sql.defaultSizeInBytes`` and always takes the distributed plan)."""
+    path = str(tmp_path / "ida_fact.parquet")
+    _synthetic_ida_fact(spark).write.parquet(path)
+    return spark.read.parquet(path)
+
+
+def test_small_inputs_plan_no_exchange(spark, tmp_path):
+    """Inputs within the broadcast threshold run in one task: the view's
+    DataFrame chain, its SQL text and flagship_orders plan no Exchange."""
+    fact = _synthetic_ida_parquet(spark, tmp_path)
+    for out in (
+        consolidacao_de_metricas(fact),
+        create_consolidacao_view(spark, fact),
+        flagship_orders(spark, SF_DIR),
+    ):
+        plan = executed_plan(out)
+        assert "Exchange" not in plan, plan
+
+
+def test_distributed_path_gives_the_same_rows(spark, duck, tmp_path):
+    """Threshold -1 switches the size gate off: the view (both forms) and
+    flagship_orders plan their hash exchanges again, the final sort still
+    needs no range exchange, and every row equals the single-task path's."""
+    fact = _synthetic_ida_parquet(spark, tmp_path)
+    single = [
+        consolidacao_de_metricas(fact).collect(),
+        create_consolidacao_view(spark, fact).collect(),
+        flagship_orders(spark, SF_DIR).collect(),
+    ]
+    with broadcast_threshold(spark, "-1"):
+        outs = [
+            consolidacao_de_metricas(fact),
+            create_consolidacao_view(spark, fact),
+            flagship_orders(spark, SF_DIR),
+        ]
+        for out in outs:
+            plan = executed_plan(out)
+            assert "Exchange hashpartitioning" in plan, plan
+            assert "rangepartitioning" not in plan, plan
+        assert [out.collect() for out in outs] == single
+        assert_matches_oracle(outs[2], duck, flagship_orders_oracle_sql())
 
 
 def test_flagship_oracle_normalizes_negative_zero(spark, tmp_path):

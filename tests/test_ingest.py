@@ -6,8 +6,11 @@ parse, consolidation, final schema, and the flagship view on the result.
 from __future__ import annotations
 
 import datetime
+import os
 
 import pytest
+
+from tests.conftest import broadcast_threshold, executed_plan
 
 from be_analytic_etl_spark.operators.consolidate import (
     FINAL_RENAMES,
@@ -15,12 +18,16 @@ from be_analytic_etl_spark.operators.consolidate import (
     consolidate,
     finalize,
 )
+from be_analytic_etl_spark.plans.flagship import create_consolidacao_view
+from be_analytic_etl_spark.session import fits_one_task
 from be_analytic_etl_spark.sources.ingest import (
     filter_manifest,
     ingest_wide_file,
     probe_encoding,
     read_headerless_csv,
+    read_typed_csv,
 )
+from be_analytic_etl_spark.sources.sinks import write_csv
 
 FILE_A = """ÍNDICE DE DESEMPENHO NO ATENDIMENTO\t\t\t
 SERVIÇO: SMP\t\t\t
@@ -120,15 +127,20 @@ def test_narrow_first_line_keeps_every_column(spark, tmp_path):
     ]
 
 
-def _wide_file(tmp_path, n_months: int) -> str:
+def _wide_file(tmp_path, n_months: int, n_groups: int = 1) -> str:
     months = [f"{2010 + i // 12}-{i % 12 + 1:02d}" for i in range(n_months)]
     lines = [
         "SERVIÇO: SMP" + "\t" * (n_months + 1),
         "GRUPO ECONÔMICO\tVARIAVEL\t" + "\t".join(months),
-        "CLARO\tIDA\t" + "\t".join(f"{i},5" for i in range(n_months)),
+        *(
+            ("CLARO" if g == 0 else f"GRUPO {g}")
+            + "\tIDA\t"
+            + "\t".join(f"{i},5" for i in range(n_months))
+            for g in range(n_groups)
+        ),
         "FONTE: ANATEL" + "\t" * (n_months + 1),
     ]
-    p = tmp_path / f"wide_{n_months}.csv"
+    p = tmp_path / f"wide_{n_months}x{n_groups}.csv"
     p.write_text("\n".join(lines) + "\n", encoding="utf-8")
     return str(p)
 
@@ -182,11 +194,20 @@ def test_ingest_build_calls_do_not_grow_with_width(spark, tmp_path):
     assert counts[4] == counts[118], counts
 
 
-def test_consolidate_and_finalize(spark, wide_files):
+def _fleet_fact(spark, wide_files):
     path_a, path_b = wide_files
-    df_a = ingest_wide_file(spark, path_a, service="SMP")
-    df_b = ingest_wide_file(spark, path_b, service="SCM")
-    fact = finalize(consolidate([df_a, df_b]))
+    return finalize(
+        consolidate(
+            [
+                ingest_wide_file(spark, path_a, service="SMP"),
+                ingest_wide_file(spark, path_b, service="SCM"),
+            ]
+        )
+    )
+
+
+def test_consolidate_and_finalize(spark, wide_files):
+    fact = _fleet_fact(spark, wide_files)
     assert fact.columns[:6] == ["id", "grupo_economico", "servico", "mes_referencia", "valor", "tipo_servico"]
     n = fact.count()
     # file A: 6 rows; file B: 6 rows - 2 duplicate rows (CLARO repeated) = 4
@@ -196,6 +217,72 @@ def test_consolidate_and_finalize(spark, wide_files):
     # rename trap: VARIAVEL -> servico, file tag -> tipo_servico
     assert {r["servico"] for r in fact.collect()} == {"IDA"}
     assert {r["tipo_servico"] for r in fact.collect()} == {"SMP", "SCM"}
+
+
+def test_small_fact_runs_in_one_task(spark, wide_files):
+    """A fact Spark estimates within the broadcast threshold is deduplicated,
+    numbered and pivoted in one partition: no Exchange in either plan, and
+    the ids are still dense 1..N in the canonical sort order."""
+    fact = _fleet_fact(spark, wide_files)
+    view = create_consolidacao_view(spark, fact)
+    for plan in (executed_plan(fact), executed_plan(view)):
+        assert "Exchange" not in plan, plan
+    order = ["tipo_servico", "grupo_economico", "servico", "mes_referencia"]
+    rows = sorted(fact.collect(), key=lambda r: r["id"])
+    assert [r["id"] for r in rows] == list(range(1, len(rows) + 1))
+    keys = [tuple(r[c] for c in order) for r in rows]
+    assert keys == sorted(keys)
+
+
+def test_broadcast_threshold_off_restores_distributed_plans(spark, wide_files):
+    """Threshold -1 switches the gate off: consolidate+finalize and the view
+    plan their exchanges again, with the same rows and ids."""
+    single = sorted(map(tuple, _fleet_fact(spark, wide_files).collect()))
+    with broadcast_threshold(spark, "-1"):
+        fact = _fleet_fact(spark, wide_files)
+        view = create_consolidacao_view(spark, fact)
+        fact_plan, view_plan = executed_plan(fact), executed_plan(view)
+        distributed = sorted(map(tuple, fact.collect()))
+    assert "Exchange hashpartitioning" in fact_plan, fact_plan
+    assert "Exchange rangepartitioning" in fact_plan, fact_plan
+    assert "Exchange hashpartitioning" in view_plan, view_plan
+    assert distributed == single
+
+
+def test_size_gate_sees_the_unpivot_fan_out(spark, tmp_path):
+    """The gate reads the long table's estimate, not the raw file's: a file
+    under the threshold whose unpivot is over it keeps the distributed plan
+    (a ``stack`` unpivot would estimate at the raw file's bytes)."""
+    path = _wide_file(tmp_path, 118, n_groups=40)
+    assert os.path.getsize(path) < 64 * 1024
+    with broadcast_threshold(spark, "64k"):
+        assert fits_one_task(read_headerless_csv(spark, path))
+        long = ingest_wide_file(spark, path, service="SMP")
+        assert not fits_one_task(long)
+        fact = finalize(consolidate([long]))
+        plan = executed_plan(fact)
+    assert "Exchange" in plan, plan
+    assert fact.count() == 40 * 118
+
+
+def test_etl_job_runs_at_most_seven_spark_jobs(spark, wide_files, tmp_path):
+    """ingest -> consolidate+finalize -> CSV sink -> typed reload -> view,
+    counted by job group: one header lookup per file, the write, the
+    reload's inference passes and the view. Consolidate+finalize adds none."""
+    out = str(tmp_path / "fact_csv")
+    sc = spark.sparkContext
+    group = "test_etl_job_runs_at_most_seven_spark_jobs"
+    sc.setJobGroup(group, "ingest, consolidate, sink, reload, view")
+    try:
+        write_csv(_fleet_fact(spark, wide_files), out)
+        reloaded = read_typed_csv(spark, out)
+        create_consolidacao_view(spark, reloaded).collect()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) <= 7, len(jobs)
+    assert reloaded.count() == 10
 
 
 def test_add_dense_id_parallel(spark):
@@ -345,15 +432,7 @@ def test_flagship_view_on_ingested_fact(spark, wide_files):
 
     import pyspark.sql.functions as F
 
-    path_a, path_b = wide_files
-    fact = finalize(
-        consolidate(
-            [
-                ingest_wide_file(spark, path_a, service="SMP"),
-                ingest_wide_file(spark, path_b, service="SCM"),
-            ]
-        )
-    )
+    fact = _fleet_fact(spark, wide_files)
     out = mom_variation_pivot(
         fact.filter(F.col("servico") == "IDA"),
         time_col="mes_referencia",
