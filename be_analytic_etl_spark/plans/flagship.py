@@ -223,17 +223,19 @@ ORDER BY mes DESC
 
 
 def create_consolidacao_view(spark, fact: DataFrame) -> DataFrame:
-    """Register ``fact`` as ``be_analytic_table`` and create the
+    """Register ``fact`` as ``be_analytic_table`` and the
     ``consolidacao_de_metricas`` temp view from the SQL text — the
     spark.sql twin of ``consolidacao_de_metricas()`` (equivalence asserted
     in tests/test_flagship.py). A fact that fits one task is registered
-    coalesced to one partition, as ``mom_variation_pivot`` gates its input."""
+    coalesced to one partition, as ``mom_variation_pivot`` gates its input.
+
+    The SQL is analysed once, and the view is that analysed frame: it is
+    bound to the fact this call registers, not to whatever
+    ``be_analytic_table`` names later."""
     single_task_if_small(fact).createOrReplaceTempView("be_analytic_table")
-    spark.sql(
-        "CREATE OR REPLACE TEMPORARY VIEW consolidacao_de_metricas AS "
-        + consolidacao_view_sql()
-    )
-    return spark.table("consolidacao_de_metricas")
+    view = spark.sql(consolidacao_view_sql())
+    view.createOrReplaceTempView("consolidacao_de_metricas")
+    return view
 
 
 #: Order priorities for the star-schema analog (FIXTURES.md §4).

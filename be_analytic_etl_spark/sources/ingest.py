@@ -19,15 +19,19 @@ pass-through branch, where cells stay strings: stripping trailing zeros
 from a digit string never changes the double it parses to.
 
 Scale notes:
-- Each raw file is small (a spreadsheet). Building a file's plan runs
-  exactly ONE Spark job (the ordered header lookup) and a fixed number of
-  py4j calls, however many columns the file has. Plans are analyzed as
-  they are built (Spark SQL, SIGMOD 2015), so that build cost is paid on
-  the driver per file and again by every consumer of the plan:
+- Each raw file is small (a spreadsheet). Building a file's plan runs NO
+  Spark job and a fixed number of py4j calls, however many columns the
+  file has. Plans are analyzed as they are built (Spark SQL, SIGMOD 2015),
+  so that build cost is paid on the driver per file and again by every
+  consumer of the plan:
   * the CSV read takes an explicit all-string schema as wide as the
     widest line up to the header row, measured on the driver from the
     bytes the charset probe reads; there is no inference pass, and a
     narrow first line cannot cut the table to its width;
+  * the same driver pass finds the header row and hands it to the
+    transform as field metadata of the raw frame (``HEADER_ROW``), so the
+    header lookup is a filter on the row number, not an action; frames of
+    unknown origin keep the one-job ordered lookup;
   * the metadata-row and blank-row filters are one SQL expression over
     ``concat_ws`` of the row: no per-column OR chain (whose depth grew
     with the column count until the analyzer overflowed its stack);
@@ -51,10 +55,12 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 from be_analytic_etl_spark.functions import strip_trailing_zeros
 from be_analytic_etl_spark.functions.sqltext import quote_ident, sql_string
 from be_analytic_etl_spark.functions.sqludf import br_number_to_double_sql
+from be_analytic_etl_spark.sources.sinks import written_schema
 
 #: Metadata phrases marking preamble rows to drop (main.py:240-243).
 METADATA_PATTERNS = [
@@ -68,6 +74,7 @@ METADATA_PATTERNS = [
 
 #: Header-row discovery markers (main.py:215).
 HEADER_MARKERS = ["GRUPO ECONÔMICO", "GRUPO_ECON"]
+_UPPER_MARKERS = [m.upper() for m in HEADER_MARKERS]
 
 #: Encodings tried for CSV ingest, in order (main.py:315).
 CSV_ENCODINGS = ["utf-8", "latin-1", "iso-8859-1", "cp1252"]
@@ -85,6 +92,15 @@ SPARK_CHARSETS = {
 
 _PROBE_BYTES = 4096
 _ROWNUM = "__rownum"
+#: Hadoop's line reader drops this UTF-8 byte-order mark from a file's
+#: first line, whatever the charset.
+_BOM = b"\xef\xbb\xbf"
+
+#: Field-metadata key on ``_c0`` of a raw frame whose reader found the
+#: header row on the driver: ``{"record": i, "cells": [...]}``, where ``i``
+#: is the header's row index and equals its ``monotonically_increasing_id``
+#: (the reader guarantees that the row is in partition 0).
+HEADER_ROW = "header_row"
 
 
 def read_headerless_csv(
@@ -99,47 +115,91 @@ def read_headerless_csv(
     ``w`` the widest line up to and including the header row, measured in
     the same driver-side pass. Shorter rows are null-padded. ``encoding``
     takes a Python codec or a Spark charset name.
+
+    The pass also attaches the header row (``HEADER_ROW``) when the line
+    starts inside the first file split, which is partition 0 of the read:
+    before ``min(spark.sql.files.maxPartitionBytes,
+    spark.sql.files.openCostInBytes)``, the smallest split Spark makes.
+    A header further in, or a charset other than the byte-line ones the
+    probe yields, leaves the lookup to ``transform_wide``'s Spark job.
     """
     with open(path, "rb") as f:
-        enc = encoding or _probe(f.read(_PROBE_BYTES), CSV_ENCODINGS)
-        f.seek(0)
-        lines = io.TextIOWrapper(f, encoding=enc, errors="replace")
-        width = _header_width(lines, sep, HEADER_MARKERS)
-    schema = ", ".join(f"_c{i} STRING" for i in range(width))
-    return spark.read.schema(schema).csv(
-        path, sep=sep, header=False, encoding=SPARK_CHARSETS.get(enc.lower(), enc)
+        head = f.read(_PROBE_BYTES)
+        enc = encoding or _probe(head, CSV_ENCODINGS)
+        start = len(_BOM) if head.startswith(_BOM) else 0
+        f.seek(start)
+        lines = io.TextIOWrapper(f, encoding=enc, errors="replace", newline="")
+        width, found = _scan_to_header(lines, sep, enc, start)
+    charset = SPARK_CHARSETS.get(enc.lower(), enc)
+    header = None
+    if found is not None and charset in SPARK_CHARSETS.values():
+        cells, record, offset = found
+        conf = spark._jsparkSession.sessionState().conf()
+        if offset < min(conf.filesMaxPartitionBytes(), conf.filesOpenCostInBytes()):
+            header = (cells + [None] * (width - len(cells)), record)
+    return spark.read.schema(_string_schema(width, header)).csv(
+        path, sep=sep, header=False, encoding=charset
     )
 
 
-def _header_width(lines, sep: str, markers: list[str]) -> int:
-    """Field count of the widest line up to and including the first line
-    with a cell holding a header marker (every line when none does). Each
+def _scan_to_header(lines, sep: str, enc: str, offset: int) -> tuple[int, tuple | None]:
+    """(width, found) over ``lines``, raw lines that start at byte ``offset``.
+
+    ``width`` is the field count of the widest line up to and including
+    the first line with a cell holding a header marker (every line when
+    none does). ``found`` is that line's (cells, record, byte offset), or
+    None. ``record`` counts the rows Spark's CSV reader makes before it:
+    the reader drops every line whose Java ``trim()`` is empty, i.e. that
+    holds no character above U+0020. The offset re-encodes each decoded
+    line, which over-counts a replaced byte and never under-counts. Each
     line splits on its own, as Spark's line-by-line CSV parse does."""
-    upper_markers = [m.upper() for m in markers]
-    width = 1
-    for line in lines:
-        line = line.rstrip("\r\n")
+    width, record = 1, 0
+    for raw in lines:
+        line = raw.rstrip("\r\n")
         cells = next(csv.reader([line], delimiter=sep), []) if len(sep) == 1 else line.split(sep)
         width = max(width, len(cells))
-        if any(m in c.upper() for c in cells for m in upper_markers):
-            break
-    return width
+        if _has_marker(cells):
+            return width, ([c or None for c in cells], record, offset)
+        record += any(ch > " " for ch in line)
+        offset += len(raw.encode(enc, "replace"))
+    return width, None
+
+
+def _has_marker(cells: list) -> bool:
+    """Some cell holds a header marker (case-insensitive)."""
+    return any(m in c.upper() for c in cells if c for m in _UPPER_MARKERS)
+
+
+def _string_schema(width: int, header: tuple[list, int] | None = None) -> StructType:
+    """``_c0 .. _c{width-1}`` nullable strings; ``header`` (cells, record)
+    rides on ``_c0`` as ``HEADER_ROW`` metadata."""
+    meta = {} if header is None else {HEADER_ROW: {"cells": header[0], "record": header[1]}}
+    return StructType(
+        [StructField(f"_c{i}", StringType(), True, meta if i == 0 else None) for i in range(width)]
+    )
 
 
 def read_typed_csv(
     spark: SparkSession, path: str, sep: str = ",", encoding: str = "utf-8"
 ) -> DataFrame:
-    """S8: header CSV re-read with type inference — the consolidated-CSV
-    reload step (``/root/reference/connect_postgre.py:224-226``,
-    ``pd.read_csv`` with default dtype inference).
+    """S8: header CSV re-read with types — the consolidated-CSV reload
+    step (the reference's ``connect_postgre.py:224-226``, ``pd.read_csv``
+    with default dtype inference).
 
-    Scale note: ``inferSchema`` costs one extra pass over the file; for
-    repeated loads of a known table, pass an explicit schema via
-    ``spark.read.schema(...)`` instead. Fine here — the reference reloads
-    one consolidated export.
+    A directory written by ``sinks.write_csv`` carries the schema of the
+    frame it came from (``sinks.written_schema``). The read takes that
+    schema with ``enforceSchema=False``, so Spark checks each file's
+    header against the field names and a stale schema fails loudly. The
+    types are then the written ones (``id`` stays ``bigint``), and the
+    read runs no Spark job. Any other CSV is inferred, like the
+    reference's reload; that costs two jobs, one for the header and one
+    for the types.
     """
-    return spark.read.csv(
-        path, sep=sep, header=True, inferSchema=True, encoding=encoding
+    schema = written_schema(spark, path)
+    if schema is None:
+        return spark.read.csv(path, sep=sep, header=True, inferSchema=True, encoding=encoding)
+    return spark.read.schema(schema).csv(
+        path, sep=sep, header=True, enforceSchema=False, encoding=encoding
     )
 
 
@@ -224,36 +284,30 @@ def read_ods(spark: SparkSession, path_or_bytes) -> DataFrame:
 
     Primary path is the dependency-free zip+XML parser (``_parse_ods``);
     pandas/odfpy, when installed, is used instead for full-fidelity edge
-    cases (formulas, covered cells)."""
+    cases (formulas, covered cells).
+
+    The rows are on the driver, so the header row is found here and
+    attached as ``HEADER_ROW`` metadata, as ``read_headerless_csv`` does.
+    The frame is one partition, in which a row's index is its
+    ``monotonically_increasing_id``."""
     if isinstance(path_or_bytes, bytes):
         data = path_or_bytes
     else:
         with open(path_or_bytes, "rb") as f:
             data = f.read()
 
-    from pyspark.sql.types import StringType, StructField, StructType
-
     try:
         import odf  # type: ignore  # noqa: F401
         import pandas as pd
 
         pdf = pd.read_excel(io.BytesIO(data), engine="odf", header=None, dtype=str)
-        pdf.columns = [f"_c{i}" for i in range(len(pdf.columns))]
-        pdf = pdf.astype("object").where(pd.notna(pdf), None)
-        schema = StructType(
-            [StructField(c, StringType(), True) for c in pdf.columns]
-        )
-        return spark.createDataFrame(pdf, schema=schema)
+        rows = pdf.astype("object").where(pd.notna(pdf), None).values.tolist()
     except ImportError:
-        pass
-
-    rows = _parse_ods(data)
+        rows = _parse_ods(data)
     width = max((len(r) for r in rows), default=0)
     padded = [r + [None] * (width - len(r)) for r in rows]
-    schema = StructType(
-        [StructField(f"_c{i}", StringType(), True) for i in range(width)]
-    )
-    return spark.createDataFrame(padded, schema=schema)
+    header = next(((r, i) for i, r in enumerate(padded) if _has_marker(r)), None)
+    return spark.createDataFrame(padded, schema=_string_schema(width, header)).coalesce(1)
 
 
 def _row_text_sql(cols: list[str], sep_sql: str) -> str:
@@ -276,16 +330,21 @@ def _not_blank_sql(cols: list[str]) -> str:
 
 
 def _find_header(df: DataFrame, markers: list[str]) -> tuple[DataFrame, list]:
-    """(rows below the header row, the header row's cells): ONE ordered
-    action. ``take`` scans partitions in order, so the first row with a
-    marker cell is the minimum row number. No marker: every row, and a
-    header of nulls."""
+    """(rows below the header row, the header row's cells). A reader that
+    found the header on the driver left it in ``_c0``'s ``HEADER_ROW``
+    metadata, and the rows below it are a filter on the row number: no
+    Spark job. Any other frame costs ONE ordered action: ``take`` scans
+    partitions in order, so the first row with a marker cell is the
+    minimum row number. No marker: every row, and a header of nulls."""
     cols = df.columns
     dfn = df.selectExpr("*", f"monotonically_increasing_id() AS {_ROWNUM}")
-    hdr = dfn.filter(_has_any_sql(cols, markers)).first()
-    if hdr is None:
-        return df, [None] * len(cols)
-    return dfn.filter(f"{_ROWNUM} > {hdr[_ROWNUM]}").drop(_ROWNUM), list(hdr)[: len(cols)]
+    found = df.schema.fields[0].metadata.get(HEADER_ROW) if cols else None
+    if found is None:
+        hdr = dfn.filter(_has_any_sql(cols, markers)).first()
+        if hdr is None:
+            return df, [None] * len(cols)
+        found = {"cells": list(hdr)[: len(cols)], "record": hdr[_ROWNUM]}
+    return dfn.filter(f"{_ROWNUM} > {found['record']}").drop(_ROWNUM), found["cells"]
 
 
 def _header_names(header_vals: list) -> list[str]:
@@ -358,13 +417,15 @@ def _to_long_sql(
     whose size estimate is the input's times the month count, so a size
     gate downstream (``session.fits_one_task``) sees the long table's
     fan-out. The statement is one string, so building it costs the same
-    py4j calls for 4 months as for 100."""
+    py4j calls for 4 months as for 100. Every cell is cast to the string
+    it already is, which leaves the reader's field metadata
+    (``HEADER_ROW``) behind: it describes the raw file, not the fact."""
     ids = [(c, n) for c, n in zip(cols, names) if _is_id(n)]
     months = [(c, n) for c, n in zip(cols, names) if _is_month(n)]
     if not ids or not months:
         return None
     inner = ", ".join(
-        [f"{quote_ident(c)} AS {quote_ident(n)}" for c, n in ids]
+        [f"CAST({quote_ident(c)} AS STRING) AS {quote_ident(n)}" for c, n in ids]
         + [f"CAST({quote_ident(c)} AS STRING) AS {quote_ident(c)}" for c, _ in months]
     )
     arms = ", ".join(f"{quote_ident(c)} AS {quote_ident(n)}" for c, n in months)
@@ -414,7 +475,8 @@ def transform_wide(raw: DataFrame, service: str) -> DataFrame:
     oracle query (synthetic fixture) so the oracle checks EXACTLY the
     production chain.
 
-    One Spark job (the header lookup) and a fixed number of py4j calls:
+    No Spark job when the reader attached the header row (``HEADER_ROW``),
+    else one (the header lookup), and a fixed number of py4j calls:
     the row filter is one expression, and the rename (P9) and label
     normalization (P10) are name edits on the driver that land in the
     one unpivot statement. Only the pass-through branch (no id or month

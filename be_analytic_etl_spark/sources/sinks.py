@@ -14,10 +14,12 @@ Reference behavior (file:line):
 
 from __future__ import annotations
 
+import json
 import re
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 #: Effective warehouse schema of the reference table
 #: (connect_postgre.py:162-169).
@@ -27,12 +29,50 @@ IDA_COLUMN_TYPES = (
 )
 
 
+#: File ``write_csv`` leaves beside the CSV parts: the written frame's
+#: schema as JSON. Spark's file index skips names that start with ``_``.
+SCHEMA_SIDECAR = "_schema.json"
+
+
 def write_csv(df: DataFrame, path: str, single_file: bool = False) -> None:
     """S7: header CSV. ``single_file=True`` mirrors the reference's one-file
     output (coalesce(1) — driver-side funnel, only for small exports);
-    default keeps partitioned output for scale."""
+    default keeps partitioned output for scale.
+
+    After the commit, ``df.schema`` goes to ``<path>/_schema.json``
+    (``SCHEMA_SIDECAR``) through the path's Hadoop ``FileSystem``, so that
+    ``ingest.read_typed_csv`` reloads with the written types instead of
+    inferring them (Dremel, VLDB 2020: the schema is kept beside the data
+    it describes)."""
     out = df.coalesce(1) if single_file else df
     out.write.mode("overwrite").option("header", True).csv(path)
+    target, fs = _hadoop_path(df.sparkSession, f"{path}/{SCHEMA_SIDECAR}")
+    stream = fs.create(target, True)
+    try:
+        stream.write(df.schema.json().encode())
+    finally:
+        stream.close()
+
+
+def written_schema(spark, path: str) -> StructType | None:
+    """The schema ``write_csv`` left in ``path`` (``SCHEMA_SIDECAR``), or
+    None when there is none, e.g. for a single CSV file or a directory
+    another writer made."""
+    target, fs = _hadoop_path(spark, f"{path}/{SCHEMA_SIDECAR}")
+    if not fs.exists(target):
+        return None
+    stream = fs.open(target)
+    try:
+        text = stream.readAllBytes().decode()
+    finally:
+        stream.close()
+    return StructType.fromJson(json.loads(text))
+
+
+def _hadoop_path(spark, path: str):
+    """(Hadoop ``Path``, its ``FileSystem``) for ``path``."""
+    target = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return target, target.getFileSystem(spark._jsc.hadoopConfiguration())
 
 
 def write_jdbc(
@@ -337,10 +377,7 @@ def read_jsonl(spark, path: str, schema=None) -> DataFrame:
 def list_parquet_files(spark, path: str) -> list[tuple[str, int]]:
     """(path, bytes) for every data file under ``path`` — a pure
     filesystem-metadata listing (no data read)."""
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    root = jvm.org.apache.hadoop.fs.Path(path)
-    fs = root.getFileSystem(hconf)
+    root, fs = _hadoop_path(spark, path)
     out: list[tuple[str, int]] = []
     it = fs.listFiles(root, True)
     while it.hasNext():

@@ -161,6 +161,19 @@ def assert_matches_oracle(spark_df, duck_con, sql, check_schema_names=True):
     assert not mismatches, f"value mismatch (first 3): {mismatches[:3]}"
 
 
+def jobs_of(spark, fn) -> int:
+    """The number of Spark jobs ``fn()`` runs, counted by job group."""
+    sc = spark.sparkContext
+    group = f"jobs_of_{id(fn)}"
+    sc.setJobGroup(group, "counted")
+    try:
+        fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def executed_plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from be_analytic_etl_spark.operators import dedup as D
 from be_analytic_etl_spark.operators import similarity as S
+from tests.conftest import broadcast_threshold, executed_plan
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -150,6 +151,35 @@ def test_minhash_lsh_finds_exact_dup_pair(spark):
     for r in pairs:
         if (r["id_a"], r["id_b"]) in expected:
             assert r["jaccard"] == pytest.approx(1.0)
+
+
+#: The dedup operators that join their candidates to the persisted,
+#: counted ``kept`` buckets.
+_KEPT_JOINS = {
+    "minhash_lsh_pairs": lambda df: D.minhash_lsh_pairs(df, num_hashes=16, bands=4, jaccard_threshold=0.9),
+    "simhash_neardup_pairs": lambda df: D.simhash_neardup_pairs(df, max_hamming=8),
+    "simhash_panel": lambda df: D.simhash_panel(df, max_hamming=8),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_KEPT_JOINS))
+def test_kept_join_broadcasts_only_within_the_threshold(spark, name):
+    """The join on ``kept`` carries no broadcast hint: the planner sizes
+    the filled cache, broadcasts it under the default threshold and
+    shuffles it when the threshold is below its size, with the same
+    result."""
+    docs = _docs(spark, 30)
+    both = docs.unionByName(docs.limit(5).withColumn("doc_id", F.col("doc_id") + 100000))
+    build = _KEPT_JOINS[name]
+    small = build(both)
+    want = sorted(map(tuple, small.collect()))
+    assert "BroadcastHashJoin" in executed_plan(small)
+    with broadcast_threshold(spark, "100b"):
+        big = build(both)
+        got = sorted(map(tuple, big.collect()))
+        plan = executed_plan(big)
+    assert "BroadcastHashJoin" not in plan, plan
+    assert got == want and len(want) > 0
 
 
 # --- similarity: LSH ANN vs brute force ------------------------------------

@@ -9,8 +9,9 @@ import datetime
 import os
 
 import pytest
+from pyspark.sql import functions as F
 
-from tests.conftest import broadcast_threshold, executed_plan
+from tests.conftest import broadcast_threshold, executed_plan, jobs_of
 
 from be_analytic_etl_spark.operators.consolidate import (
     FINAL_RENAMES,
@@ -21,11 +22,15 @@ from be_analytic_etl_spark.operators.consolidate import (
 from be_analytic_etl_spark.plans.flagship import create_consolidacao_view
 from be_analytic_etl_spark.session import fits_one_task
 from be_analytic_etl_spark.sources.ingest import (
+    HEADER_MARKERS,
+    HEADER_ROW,
+    _find_header,
     filter_manifest,
     ingest_wide_file,
     probe_encoding,
     read_headerless_csv,
     read_typed_csv,
+    transform_wide,
 )
 from be_analytic_etl_spark.sources.sinks import write_csv
 
@@ -153,19 +158,91 @@ def test_120_column_file(spark, tmp_path):
     assert sorted(r["VALOR"] for r in rows) == [i + 0.5 for i in range(118)]
 
 
-def test_ingest_builds_with_one_spark_job(spark, wide_files):
-    """Building a file's plan runs exactly one Spark job: the ordered
-    header lookup (no schema-inference read, no second header action)."""
-    path_a, _ = wide_files
-    sc = spark.sparkContext
-    group = "test_ingest_builds_with_one_spark_job"
-    sc.setJobGroup(group, "build ingest_wide_file")
+def test_ingest_builds_with_no_spark_job(spark, wide_files, tmp_path):
+    """The readers find the header row on the driver, so building a file's
+    plan runs no Spark job: UTF-8 and latin-1 CSV, the same CSV read and
+    transformed in two calls, and ODS. The reader's field metadata does
+    not reach the long frame."""
+    path_a, path_b = wide_files
+    ods = tmp_path / "ida.ods"
+    ods.write_bytes(_make_ods([["SERVIÇO: SMP"], ["GRUPO ECONÔMICO", "VARIAVEL", "2021-03"], ["CLARO", "IDA", "7,5"]]))
+    builds = {
+        "utf-8": lambda: ingest_wide_file(spark, path_a, service="SMP"),
+        "latin-1": lambda: ingest_wide_file(spark, path_b, service="SCM"),
+        "two calls": lambda: transform_wide(
+            read_headerless_csv(spark, path_b, encoding="ISO-8859-1"), "SCM"
+        ),
+        "ods": lambda: ingest_wide_file(spark, str(ods), service="SMP", fmt="ods"),
+    }
+    assert {k: jobs_of(spark, build) for k, build in builds.items()} == dict.fromkeys(builds, 0)
+    long = ingest_wide_file(spark, path_a, service="SMP")
+    assert all(not f.metadata for f in long.schema.fields), long.schema
+
+
+def _strip_metadata(df):
+    return df.select([F.col(c).alias(c, metadata={}) for c in df.columns])
+
+
+#: Blank lines Spark's CSV reader drops (tab-only, space-only, empty,
+#: mixed with CRLF) around one-cell and metadata preamble lines; the
+#: first line is blank, so a byte-order mark before it must not count.
+PREAMBLE = (
+    "\t\t\t\n"
+    "ÍNDICE DE DESEMPENHO NO ATENDIMENTO\n"
+    "   \n"
+    "\n"
+    " \t \r\n"
+    "SERVIÇO: SMP\t\t\t\n"
+    "ANATEL\n"
+    "\t\n"
+    "GRUPO ECONÔMICO\tVARIAVEL\t2020-01\t2020-02\n"
+    "CLARO\tIDA\t1,5\t2,5\n"
+    "\t\t\t\n"
+    "VIVO\tIDA\t3\t\n"
+)
+
+
+@pytest.mark.parametrize("encoding", ["utf-8", "utf-8-sig", "latin-1"])
+def test_driver_header_matches_the_job_lookup(spark, tmp_path, encoding):
+    """The row index the reader counts on the driver is Spark's: the
+    header and the rows below it are exactly those of the one-job lookup
+    over the same frame with its metadata stripped. ``utf-8-sig`` writes
+    a byte-order mark, which Spark's line reader drops."""
+    p = tmp_path / "preamble.csv"
+    p.write_text(PREAMBLE, encoding=encoding)
+    raw = read_headerless_csv(spark, str(p))
+    assert HEADER_ROW in raw.schema.fields[0].metadata
+    stripped = _strip_metadata(raw)
+    assert jobs_of(spark, lambda: _find_header(raw, HEADER_MARKERS)) == 0
+    driver, job = _find_header(raw, HEADER_MARKERS), _find_header(stripped, HEADER_MARKERS)
+    assert driver[1] == job[1] == ["GRUPO ECONÔMICO", "VARIAVEL", "2020-01", "2020-02"]
+    assert driver[0].collect() == job[0].collect() == [
+        ("CLARO", "IDA", "1,5", "2,5"),
+        ("VIVO", "IDA", "3", None),
+    ]
+    assert sorted(transform_wide(raw, "SMP").collect()) == sorted(transform_wide(stripped, "SMP").collect())
+
+
+def test_header_beyond_the_first_split_falls_back_to_the_job(spark, tmp_path):
+    """A header that starts past the smallest split Spark makes may not be
+    in partition 0, so the reader attaches nothing and the one-job lookup
+    runs: same rows, over a read of many partitions."""
+    p = tmp_path / "preamble.csv"
+    p.write_text(PREAMBLE, encoding="utf-8")
+    want = sorted(ingest_wide_file(spark, str(p), "SMP").collect())
+    key = "spark.sql.files.maxPartitionBytes"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "16b")
     try:
-        ingest_wide_file(spark, path_a, service="SMP")
+        raw = read_headerless_csv(spark, str(p))
+        assert raw.rdd.getNumPartitions() > 1
+        assert HEADER_ROW not in raw.schema.fields[0].metadata
+        # take() scans partition 0 first and widens, one job per round
+        assert jobs_of(spark, lambda: transform_wide(raw, "SMP")) >= 1
+        assert sorted(transform_wide(raw, "SMP").collect()) == want
     finally:
-        sc._jsc.clearJobGroup()
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+        spark.conf.set(key, prev)
+    assert len(want) == 4
 
 
 def test_ingest_build_calls_do_not_grow_with_width(spark, tmp_path):
@@ -265,24 +342,20 @@ def test_size_gate_sees_the_unpivot_fan_out(spark, tmp_path):
     assert fact.count() == 40 * 118
 
 
-def test_etl_job_runs_at_most_seven_spark_jobs(spark, wide_files, tmp_path):
-    """ingest -> consolidate+finalize -> CSV sink -> typed reload -> view,
-    counted by job group: one header lookup per file, the write, the
-    reload's inference passes and the view. Consolidate+finalize adds none."""
+def test_etl_job_runs_two_spark_jobs(spark, wide_files, tmp_path):
+    """ingest -> consolidate+finalize -> CSV sink -> typed reload -> view
+    runs the CSV write and the view's collect, nothing else: the headers
+    are found on the driver, consolidate+finalize add no job and the
+    reload takes the schema the sink wrote."""
     out = str(tmp_path / "fact_csv")
-    sc = spark.sparkContext
-    group = "test_etl_job_runs_at_most_seven_spark_jobs"
-    sc.setJobGroup(group, "ingest, consolidate, sink, reload, view")
-    try:
+
+    def etl():
         write_csv(_fleet_fact(spark, wide_files), out)
         reloaded = read_typed_csv(spark, out)
         create_consolidacao_view(spark, reloaded).collect()
-    finally:
-        sc._jsc.clearJobGroup()
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    jobs = sc.statusTracker().getJobIdsForGroup(group)
-    assert len(jobs) <= 7, len(jobs)
-    assert reloaded.count() == 10
+
+    assert jobs_of(spark, etl) <= 2
+    assert read_typed_csv(spark, out).count() == 10
 
 
 def test_add_dense_id_parallel(spark):
@@ -429,8 +502,6 @@ def test_flagship_view_on_ingested_fact(spark, wide_files):
     consolidacao_de_metricas (with the fact's 'servico' being the indicator
     filtered on)."""
     from be_analytic_etl_spark.plans.flagship import mom_variation_pivot
-
-    import pyspark.sql.functions as F
 
     fact = _fleet_fact(spark, wide_files)
     out = mom_variation_pivot(

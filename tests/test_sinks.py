@@ -14,11 +14,13 @@ from pyspark.sql import functions as F
 
 from be_analytic_etl_spark.sources.ingest import read_typed_csv
 from be_analytic_etl_spark.sources.sinks import (
+    SCHEMA_SIDECAR,
     import_csv_automatic,
     table_name_from_path,
     write_csv,
     write_jdbc,
 )
+from tests.conftest import jobs_of
 
 
 def _derby_available() -> bool:
@@ -28,20 +30,66 @@ def _derby_available() -> bool:
     return bool(glob.glob(os.path.join(jars, "derby-*.jar")))
 
 
-def test_csv_roundtrip_types_and_values(spark, tmp_path):
-    df = spark.range(10).select(
+def _export(spark):
+    return spark.range(10).select(
         F.col("id"),
         F.concat(F.lit("name_"), F.col("id")).alias("name"),
         (F.col("id") / 3.0).alias("ratio"),
     )
+
+
+def test_csv_roundtrip_types_and_values(spark, tmp_path):
+    df = _export(spark)
     path = str(tmp_path / "export.csv")
     write_csv(df, path, single_file=True)
     back = read_typed_csv(spark, path)
-    # S8: types inferred, values preserved bit-exact (shortest-round-trip doubles)
-    assert dict(back.dtypes) == {"id": "int", "name": "string", "ratio": "double"}
+    # S8: the written types come back (id is range()'s bigint), values
+    # bit-exact (shortest-round-trip doubles)
+    assert dict(back.dtypes) == {"id": "bigint", "name": "string", "ratio": "double"}
     got = sorted((r["id"], r["name"], r["ratio"]) for r in back.collect())
     want = sorted((r["id"], r["name"], r["ratio"]) for r in df.collect())
     assert got == want
+
+
+def test_written_csv_reloads_with_its_schema_and_no_job(spark, tmp_path):
+    """write_csv leaves the frame's schema beside the parts, and the reload
+    takes it: no inference job, and a date stays a date."""
+    df = _export(spark).withColumn("day", F.date_add(F.lit("2020-01-31").cast("date"), F.col("id").cast("int")))
+    path = str(tmp_path / "export.csv")
+    write_csv(df, path)
+    assert os.path.exists(os.path.join(path, SCHEMA_SIDECAR))
+    assert jobs_of(spark, lambda: read_typed_csv(spark, path)) == 0
+    back = read_typed_csv(spark, path)
+    assert back.dtypes == df.dtypes
+    assert sorted(back.collect()) == sorted(df.collect())
+
+
+def test_foreign_csv_is_inferred(spark, tmp_path):
+    """A CSV that write_csv did not write has no schema beside it, so the
+    reload infers, as the reference's pd.read_csv does: small integers
+    come back as int."""
+    import csv
+
+    path = tmp_path / "foreign.csv"
+    with open(path, "w", newline="") as f:
+        w = csv.writer(f)
+        w.writerow(["id", "name", "ratio"])
+        w.writerows((i, f"name_{i}", i / 3.0) for i in range(10))
+    back = read_typed_csv(spark, str(path))
+    assert dict(back.dtypes) == {"id": "int", "name": "string", "ratio": "double"}
+    assert sorted(r["id"] for r in back.collect()) == list(range(10))
+
+
+def test_stale_schema_fails_loudly(spark, tmp_path):
+    """A part appended by another writer under other column names
+    disagrees with the written schema: the read raises instead of loading
+    its columns under the wrong names."""
+    df = _export(spark)
+    path = str(tmp_path / "export.csv")
+    write_csv(df, path)
+    df.withColumnRenamed("name", "nome").write.mode("append").option("header", True).csv(path)
+    with pytest.raises(Exception, match="does not conform to the schema"):
+        read_typed_csv(spark, path).collect()
 
 
 def test_import_csv_automatic_table_target(spark, tmp_path):
