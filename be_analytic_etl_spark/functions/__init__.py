@@ -7,7 +7,6 @@ reference's per-cell ``.apply`` loops (``/root/reference/main.py:477,582,670``).
 """
 
 from be_analytic_etl_spark.functions.cleaning import (
-    br_number_str,
     br_number_to_double,
     let,
     classify_service,
@@ -18,7 +17,6 @@ from be_analytic_etl_spark.functions.cleaning import (
 )
 
 __all__ = [
-    "br_number_str",
     "br_number_to_double",
     "let",
     "classify_service",

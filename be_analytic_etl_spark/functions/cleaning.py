@@ -2,7 +2,7 @@
 
 Behavioral parity targets (reference file:line):
 
-- ``br_number_str`` / ``br_number_to_double`` — `converter_para_numero`,
+- ``br_number_to_double`` — `converter_para_numero`,
   ``/root/reference/main.py:531-582``. The branchy rules, replicated exactly:
     * trim; invalid tokens ('', 'nan', '-', '--', '---', 'ND', 'N/D',
       case-insensitive) -> NULL                       (main.py:537-540)
@@ -25,8 +25,11 @@ Behavioral parity targets (reference file:line):
 - ``empty_to_null`` — ``/root/reference/connect_postgre.py:194-196``.
 - ``normalize_identifier`` — ``/root/reference/connect_postgre.py:198-205``.
 
-All are pure ``Column`` expressions: vectorized JVM-side, codegen-friendly,
-and therefore scale-independent (no Python boundary per row).
+Each cleaning function is defined once, as SQL text over a SQL expression
+(the ``*_sql(arg)`` builders). That text is the body of the SQL UDF of the
+same name (``functions.sqludf``), and the Python function is ``F.expr`` of
+it over a quoted column NAME: vectorized JVM-side, codegen-friendly, no
+Python boundary per row.
 """
 
 from __future__ import annotations
@@ -35,6 +38,8 @@ from collections.abc import Callable
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from be_analytic_etl_spark.functions.sqltext import quote_ident
 
 
 def let(value: Column, body: Callable[[Column], Column]) -> Column:
@@ -52,55 +57,18 @@ def let(value: Column, body: Callable[[Column], Column]) -> Column:
     """
     return F.element_at(F.transform(F.array(value), body), 1)
 
-#: Tokens the reference treats as "no value" (main.py:537-540), lower-cased.
-INVALID_TOKENS = ("", "nan", "-", "--", "---", "nd", "n/d")
 
+def br_number_to_double_sql(arg: str) -> str:
+    """Brazilian-locale numeric string -> DOUBLE (NULL on unparseable), as
+    SQL text over the SQL expression ``arg``.
 
-def br_number_str(col: Column | str) -> Column:
-    """Normalize a Brazilian-locale numeric string to canonical '1234.56' form.
-
-    Returns a StringType column; unparseable input -> NULL. See module
-    docstring for the exact branch semantics being matched.
-    """
-    c = F.col(col) if isinstance(col, str) else col
-    s = F.trim(c)
-    is_invalid_token = F.lower(s).isin(*INVALID_TOKENS) | s.isNull()
-
-    stripped = F.regexp_replace(s, r"[^0-9.,]", "")
-    has_dot = stripped.contains(".")
-    has_comma = stripped.contains(",")
-    n_dots = F.length(stripped) - F.length(F.regexp_replace(stripped, r"\.", ""))
-
-    # both '.' and ',': dots = thousands separators, comma = decimal point
-    both = F.translate(F.regexp_replace(stripped, r"\.", ""), ",", ".")
-    # ',' only: comma = decimal point
-    comma_only = F.translate(stripped, ",", ".")
-    # 2+ dots, no comma: every dot is a thousands separator -> concat parts
-    multi_dot = F.regexp_replace(stripped, r"\.", "")
-
-    candidate = (
-        F.when(has_dot & has_comma, both)
-        .when(has_comma, comma_only)
-        .when(n_dots >= 2, multi_dot)
-        .otherwise(stripped)
-    )
-    # Valid canonical number: digits with at most one decimal point. Anything
-    # else (multiple commas survived as dots, '', '.', etc.) -> NULL, matching
-    # the reference's catch-all "return ''" failure path.
-    valid = candidate.rlike(r"^[0-9]+(\.[0-9]+)?$|^\.[0-9]+$|^[0-9]+\.$")
-    result = F.when(is_invalid_token | ~valid, F.lit(None)).otherwise(candidate)
-    return result
-
-
-def br_number_to_double(col: Column | str) -> Column:
-    """Brazilian-locale numeric string -> DoubleType (NULL on unparseable).
-
-    Same semantics as ``br_number_str(...).cast('double')`` but with a
-    deliberately lean expression tree (the input is referenced 6 times, not
-    ~18): when this function is composed over a non-trivial input expression,
-    Catalyst's CollapseProject inlines that expression at every reference
-    site, and a fat tree blows whole-stage-codegen methods past the JIT
-    limit (measured 100x slowdown). Two reductions keep it lean:
+    The expression tree is deliberately lean: ``arg`` appears once, and a
+    single-element transform(array(x), v -> body) (the expression-level
+    let, see ``let``) binds the stripped string once instead of inlining
+    the regexp per reference. When ``arg`` is a non-trivial expression,
+    CollapseProject would otherwise inline it at every reference site,
+    and a fat tree blows whole-stage-codegen methods past the JIT limit
+    (measured 100x slowdown). Three reductions keep it lean:
 
     - the invalid-token check (main.py:537-540) is redundant: every invalid
       token ('', nan, -, ND, ...) strips to '' or a malformed numeric, which
@@ -108,62 +76,79 @@ def br_number_to_double(col: Column | str) -> Column:
     - the two comma branches (main.py:551-562) unify: removing thousands
       dots is a no-op when none exist, so "has comma" alone selects
       `translate(strip_dots(x), ',', '.')`;
-    - the validity regex is redundant with ``try_cast('double')`` (the
-      candidate contains only [0-9.] at cast time; try_cast maps anything
-      still malformed — '', '.', '1.2.3' — to NULL in ANSI and non-ANSI
+    - the validity regex is redundant with ``try_cast`` (the candidate
+      contains only [0-9.] at cast time; try_cast maps anything still
+      malformed — '', '.', '1.2.3' — to NULL in ANSI and non-ANSI
       sessions alike, so the expression is session-config-independent).
     """
-    c = F.col(col) if isinstance(col, str) else col
-    stripped = F.regexp_replace(F.trim(c), r"[^0-9.,]", "")
-    no_dots = F.translate(stripped, ".", "")
-    n_dots = F.length(stripped) - F.length(no_dots)
-    candidate = (
-        F.when(stripped.contains(","), F.translate(no_dots, ",", "."))
-        .when(n_dots >= 2, no_dots)
-        .otherwise(stripped)
+    return (
+        f"element_at(transform(array(regexp_replace(trim({arg}), '[^0-9.,]', '')), "
+        "stripped -> try_cast("
+        "CASE WHEN contains(stripped, ',') "
+        "THEN translate(translate(stripped, '.', ''), ',', '.') "
+        "WHEN length(stripped) - length(translate(stripped, '.', '')) >= 2 "
+        "THEN translate(stripped, '.', '') "
+        "ELSE stripped END AS DOUBLE)), 1)"
     )
-    return candidate.try_cast("double")
 
 
-def strip_trailing_zeros(col: Column | str) -> Column:
+def strip_trailing_zeros_sql(arg: str) -> str:
     """String-level decimal tidy: '15.00'->'15', '15.50'->'15.5'.
 
     Only touches strings that are purely ``digits.digits``; everything else
     passes through unchanged (reference guard at main.py:454-462).
     """
-    c = F.col(col) if isinstance(col, str) else col
-    is_decimal = c.rlike(r"^[0-9]+\.[0-9]+$")
-    tidied = F.regexp_replace(
-        F.regexp_replace(c, r"^([0-9]+)\.0+$", "$1"),  # 15.00 -> 15
-        r"^([0-9]+\.[0-9]*?)0+$",  # 15.50 -> 15.5
-        "$1",
-    )
-    return F.when(is_decimal, tidied).otherwise(c)
-
-
-def classify_service(title: Column | str) -> Column:
-    """First-match service tag from a resource title: SCM / SMP / STFC / OUTROS."""
-    c = F.col(title) if isinstance(title, str) else title
-    u = F.upper(F.coalesce(c, F.lit("")))
     return (
-        F.when(u.contains("SCM"), F.lit("SCM"))
-        .when(u.contains("SMP"), F.lit("SMP"))
-        .when(u.contains("STFC"), F.lit("STFC"))
-        .otherwise(F.lit("OUTROS"))
+        rf"CASE WHEN {arg} RLIKE '^[0-9]+\\.[0-9]+$' "
+        rf"THEN regexp_replace(regexp_replace({arg}, '^([0-9]+)\\.0+$', '$1'), "
+        rf"'^([0-9]+\\.[0-9]*?)0+$', '$1') ELSE {arg} END"
     )
 
 
-def extract_year(title: Column | str) -> Column:
-    """First 4-digit run in the string as IntegerType; NULL if absent."""
-    c = F.col(title) if isinstance(title, str) else title
-    y = F.regexp_extract(c, r"(\d{4})", 1)
-    return F.when(y == "", F.lit(None)).otherwise(y).cast("int")
+def classify_service_sql(arg: str) -> str:
+    """First-match service tag from a resource title: SCM / SMP / STFC / OUTROS."""
+    u = f"upper(coalesce({arg}, ''))"
+    return (
+        f"CASE WHEN contains({u}, 'SCM') THEN 'SCM' "
+        f"WHEN contains({u}, 'SMP') THEN 'SMP' "
+        f"WHEN contains({u}, 'STFC') THEN 'STFC' "
+        "ELSE 'OUTROS' END"
+    )
 
 
-def empty_to_null(col: Column | str) -> Column:
+def extract_year_sql(arg: str) -> str:
+    """First 4-digit run in the string as INT; NULL if absent."""
+    return rf"CAST(nullif(regexp_extract({arg}, '(\\d{{4}})', 1), '') AS INT)"
+
+
+def empty_to_null_sql(arg: str) -> str:
     """Map empty / whitespace-only strings to NULL (load-boundary semantics)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.when(F.trim(c) == "", F.lit(None)).otherwise(c)
+    return f"CASE WHEN trim({arg}) = '' THEN NULL ELSE {arg} END"
+
+
+def br_number_to_double(col: str) -> Column:
+    """``br_number_to_double_sql`` over the column named ``col``."""
+    return F.expr(br_number_to_double_sql(quote_ident(col)))
+
+
+def strip_trailing_zeros(col: str) -> Column:
+    """``strip_trailing_zeros_sql`` over the column named ``col``."""
+    return F.expr(strip_trailing_zeros_sql(quote_ident(col)))
+
+
+def classify_service(col: str) -> Column:
+    """``classify_service_sql`` over the column named ``col``."""
+    return F.expr(classify_service_sql(quote_ident(col)))
+
+
+def extract_year(col: str) -> Column:
+    """``extract_year_sql`` over the column named ``col``."""
+    return F.expr(extract_year_sql(quote_ident(col)))
+
+
+def empty_to_null(col: str) -> Column:
+    """``empty_to_null_sql`` over the column named ``col``."""
+    return F.expr(empty_to_null_sql(quote_ident(col)))
 
 
 def normalize_identifier(name: str) -> str:

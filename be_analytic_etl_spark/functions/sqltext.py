@@ -14,7 +14,14 @@ def quote_ident(name: str) -> str:
     """Column name -> backtick-quoted SQL identifier (inner backticks doubled).
 
     The quoted name is read literally: ``my col.x`` is one column, not the
-    field ``x`` of a struct ``my col``."""
+    field ``x`` of a struct ``my col``. Anything but a ``str`` (say, a
+    ``Column``) raises ``TypeError``: the builders that paste names into
+    SQL text take the name, not an expression over it."""
+    if not isinstance(name, str):
+        raise TypeError(
+            f"expected a column name (str), got {type(name).__name__}; "
+            "pass the column's name, or select the expression under a name first"
+        )
     return "`" + name.replace("`", "``") + "`"
 
 

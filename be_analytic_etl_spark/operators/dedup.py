@@ -36,9 +36,8 @@ from pyspark.sql import functions as F
 from be_analytic_etl_spark.functions.sqltext import quote_ident
 from be_analytic_etl_spark.operators.textstats import (
     PORTABLE_P,
-    _tokenize_sqltext,
+    _word_ngrams_sql,
     normalize_text,
-    portable_base_hash,
     tokenize,
     word_ngrams,
 )
@@ -84,99 +83,53 @@ def portable_affine_params(num_hashes: int) -> list[tuple[int, int]]:
     ]
 
 
-def fast_hash64(col: Column, seed: Column) -> Column:
-    """xxhash64 seeded via an extra hashed slot — the scale-path hash."""
-    return F.xxhash64(col, seed)
+def _minhash_sql(c: str, num_hashes: int, shingle_n: int, portable: bool) -> str:
+    """The k-minhash signature of the SQL expression ``c`` as SQL text.
 
-
-def _word_ngrams_sql(c: str, n: int) -> str:
-    """SQL twin of textstats.word_ngrams (toks let-bound the same way)."""
-    body = (
-        "array_distinct(CASE WHEN size(toks) = 0 "
-        "THEN CAST(array() AS ARRAY<STRING>) "
-        f"ELSE transform(sequence(0, greatest(size(toks) - {n}, 0)), "
-        f"i -> concat_ws(' ', slice(toks, i + 1, {n}))) END)"
-    )
-    return f"element_at(transform(array({_tokenize_sqltext(c)}), toks -> {body}), 1)"
-
-
-def _portable_minhash_sql(c: str, num_hashes: int, shingle_n: int) -> str:
-    """The portable k-minhash signature as ONE SQL string.
-
-    Same expression tree as the Column form (single-element transform as
-    the let for the base-hash array), parsed in one py4j round trip
-    instead of ~k*40 lambda-construction calls — the plan-build fix
-    SCALE.md documents for literal-heavy operators. Verified bit-identical
-    through every LSH oracle query.
+    ``hs`` is the per-shingle array, let-bound by a single-element
+    transform so that every slot reads the SAME evaluated array (without
+    it, each of the k slots re-inlines the shingle tree — measured ~8x
+    overcomputation). The two hash families differ in two pieces only:
+    the per-shingle value (the shingle itself, or its portable md5 base)
+    and the slot hash (seeded xxhash64, or the affine map of the base).
     """
-    base = (
-        "CAST(conv(substring(md5(CAST(s AS BINARY)), 1, 15), 16, 10) AS BIGINT)"
-        f" % {PORTABLE_P}"
-    )
-    params = "array(" + ",".join(
-        f"named_struct('a', {a}, 'b', {b})"
-        for a, b in portable_affine_params(num_hashes)
-    ) + ")"
+    shingles = _word_ngrams_sql(c, shingle_n)
+    if portable:
+        base = (
+            "CAST(conv(substring(md5(CAST(s AS BINARY)), 1, 15), 16, 10) AS BIGINT)"
+            f" % {PORTABLE_P}"
+        )
+        per_shingle = f"transform({shingles}, s -> {base})"
+        slots = "array(" + ",".join(
+            f"named_struct('a', {a}, 'b', {b})"
+            for a, b in portable_affine_params(num_hashes)
+        ) + ")"
+        slot_hash = f"(h * slot.a + slot.b) % {PORTABLE_P}"
+    else:
+        per_shingle = shingles
+        slots = f"sequence(0, {num_hashes - 1})"
+        slot_hash = "xxhash64(h, slot)"
     per_slot = (
-        f"transform({params}, pr -> "
-        f"array_min(transform(bases, h -> (h * pr.a + pr.b) % {PORTABLE_P})))"
+        f"transform({slots}, slot -> array_min(transform(hs, h -> {slot_hash})))"
     )
-    bases = f"transform({_word_ngrams_sql(c, shingle_n)}, s -> {base})"
-    return f"element_at(transform(array({bases}), bases -> {per_slot}), 1)"
+    return f"element_at(transform(array({per_shingle}), hs -> {per_slot}), 1)"
 
 
 def minhash_signature(
-    col: Column | str, num_hashes: int = 32, shingle_n: int = 3, portable: bool = False
+    col: str, num_hashes: int = 32, shingle_n: int = 3, portable: bool = False
 ) -> Column:
-    """k-minhash signature (array<long>) over word n-gram shingles.
+    """k-minhash signature (array<long>) over the word n-gram shingles of
+    the column named ``col``.
 
     sig[i] = min over shingles of hash_i(shingle). Pure array expressions —
-    no UDF, no Python boundary.
+    no UDF, no Python boundary — parsed from one SQL text in one py4j
+    round trip.
 
     ``portable=True``: hash_i = (a_i * md5base(shingle) + b_i) mod p —
     one md5 per shingle, k affine transforms, replicable bit-for-bit by a
     SQL oracle. Default: k seeded xxhash64 (fastest JVM path).
-
-    Pass ``col`` as a column NAME to get the signature as one parsed SQL
-    expression (cheap plan build); a Column falls back to the
-    lambda-composed form (identical tree, ~seconds of py4j chatter for
-    large k).
     """
-    from be_analytic_etl_spark.functions import let
-
-    if portable and isinstance(col, str):
-        return F.expr(_portable_minhash_sql(quote_ident(col), num_hashes, shingle_n))
-
-    shingles = word_ngrams(col, shingle_n)
-    if portable:
-        # let-bind the base hashes: every slot references the SAME evaluated
-        # array (without this, each of the k slots re-inlines the md5-per-
-        # shingle tree — measured ~8x overcomputation).
-        params = F.array(
-            *[
-                F.struct(F.lit(a).alias("a"), F.lit(b).alias("b"))
-                for a, b in portable_affine_params(num_hashes)
-            ]
-        )
-        return let(
-            F.transform(shingles, portable_base_hash),
-            lambda bases: F.transform(
-                params,
-                lambda pr: F.array_min(
-                    F.transform(bases, lambda h: (h * pr["a"] + pr["b"]) % PORTABLE_P)
-                ),
-            ),
-        )
-    seeds = F.sequence(F.lit(0), F.lit(num_hashes - 1))
-    return let(
-        shingles,
-        lambda sh_once: F.transform(
-            seeds,
-            lambda seed: F.array_min(
-                F.transform(sh_once, lambda sh: fast_hash64(sh, seed))
-            ),
-        ),
-    )
+    return F.expr(_minhash_sql(quote_ident(col), num_hashes, shingle_n, portable))
 
 
 def band_buckets(
@@ -199,48 +152,21 @@ def band_buckets(
     for the cheapest shuffle payload. Collisions only ever ADD candidates,
     and callers verify candidates with exact Jaccard.
     """
-    from be_analytic_etl_spark.functions import let
-
     if num_hashes % bands != 0:
         raise ValueError(
             f"num_hashes ({num_hashes}) must be divisible by bands ({bands}) — "
             "a remainder would silently discard trailing signature slots"
         )
     rows_per_band = num_hashes // bands
-    if portable:
-        # Whole banding tree as one parsed SQL expression (see
-        # _portable_minhash_sql); the signature let-binds so the per-band
-        # lambda slices ONE evaluated array.
-        sig_sql = _portable_minhash_sql(quote_ident(text_col), num_hashes, shingle_n)
-        bucket = (
-            f"concat_ws(',', slice(sg, b * {rows_per_band} + 1, {rows_per_band}))"
-        )
-        band_structs = F.expr(
-            f"element_at(transform(array({sig_sql}), sg -> "
-            f"transform(sequence(0, {bands - 1}), "
-            f"b -> named_struct('band', b, 'bucket', {bucket}))), 1)"
-        )
-        return df.select(
-            F.col(id_col).alias("__id"), F.explode(band_structs).alias("bb")
-        ).select(
-            "__id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
-        )
-
-    sig = minhash_signature(F.col(text_col), num_hashes, shingle_n, portable=portable)
-    band_idx = F.sequence(F.lit(0), F.lit(bands - 1))
-
-    def bucket_of(sg: Column, b: Column) -> Column:
-        s = F.concat_ws(",", F.slice(sg, b * rows_per_band + 1, rows_per_band))
-        return s if portable else F.xxhash64(s, b)
-
-    # let-bind the signature: the per-band lambda must slice ONE evaluated
-    # array, not re-inline the whole signature computation per band.
-    band_structs = let(
-        sig,
-        lambda sg: F.transform(
-            band_idx,
-            lambda b: F.struct(b.alias("band"), bucket_of(sg, b).alias("bucket")),
-        ),
+    # The whole banding tree is one SQL text; the signature let-binds so
+    # the per-band lambda slices ONE evaluated array.
+    sig_sql = _minhash_sql(quote_ident(text_col), num_hashes, shingle_n, portable)
+    band = f"concat_ws(',', slice(sg, b * {rows_per_band} + 1, {rows_per_band}))"
+    bucket = band if portable else f"xxhash64({band}, b)"
+    band_structs = F.expr(
+        f"element_at(transform(array({sig_sql}), sg -> "
+        f"transform(sequence(0, {bands - 1}), "
+        f"b -> named_struct('band', b, 'bucket', {bucket}))), 1)"
     )
     return df.select(
         F.col(id_col).alias("__id"), F.explode(band_structs).alias("bb")
@@ -327,7 +253,7 @@ def minhash_lsh_pairs(
     # tokenize+shingle pass runs once. Proportional to the corpus; spills.
     shingle_sets = df.select(
         F.col(id_col).alias("__sid"),
-        word_ngrams(F.col(text_col), shingle_n).alias("__sh"),
+        word_ngrams(text_col, shingle_n).alias("__sh"),
     ).persist(StorageLevel.MEMORY_AND_DISK)
     # No eager fill: the id_a/id_b joins are stages of ONE action and the
     # block-manager dedupes per-partition cache computation; the r13
@@ -374,7 +300,7 @@ def simhash(
         portable_hash60(F.col("__tok")) if portable else F.xxhash64("__tok")
     )
     toks = df.select(
-        F.col(id_col), F.explode_outer(tokenize(F.col(text_col))).alias("__tok")
+        F.col(id_col), F.explode_outer(tokenize(text_col)).alias("__tok")
     ).withColumn("__h", tok_hash)
     # Both the n_bits conditional sums and the bit reassembly are built as
     # SQL text (2 parsed expressions total): composing ~60 when-chains
@@ -539,7 +465,7 @@ def _contamination_hits(
         return (
             frame.select(
                 F.col(ident).alias(out_id),
-                F.explode(word_ngrams(F.col(text_col), ngram_n)).alias("__g"),
+                F.explode(word_ngrams(text_col, ngram_n)).alias("__g"),
             )
             .select(out_id, portable_hash60(F.col("__g")).alias("__h"))
             .dropDuplicates([out_id, "__h"])
@@ -625,7 +551,7 @@ def ngram_jaccard_pairs(
     tok = df.select(
         *blocks,
         F.col(id_col).alias("__id"),
-        word_ngrams(F.col(text_col), shingle_n).alias("__sh"),
+        word_ngrams(text_col, shingle_n).alias("__sh"),
     ).select(
         *blocks,
         "__id",
@@ -769,11 +695,11 @@ def incremental_dedup_status(
         .dropDuplicates(["__id", "__old_id"])
     )
     sh_new = new_docs.select(
-        F.col(id_col).alias("__sid"), word_ngrams(F.col(text_col), shingle_n).alias("__sh")
+        F.col(id_col).alias("__sid"), word_ngrams(text_col, shingle_n).alias("__sh")
     )
     sh_old = old_docs.select(
         F.col(id_col).alias("__soid"),
-        word_ngrams(F.col(text_col), shingle_n).alias("__osh"),
+        word_ngrams(text_col, shingle_n).alias("__osh"),
     )
     inter = F.size(F.array_intersect("__sh", "__osh"))
     union = F.size(F.array_union("__sh", "__osh"))
@@ -850,7 +776,7 @@ def lsh_recall_estimate(
     # pure cost (r13 verdict item 1).
 
     shing = sample.select(
-        F.col("__id"), word_ngrams(F.col("__text"), shingle_n).alias("__sh")
+        F.col("__id"), word_ngrams("__text", shingle_n).alias("__sh")
     )
     a = shing.select(F.col("__id").alias("id_a"), F.col("__sh").alias("sh_a"))
     b = shing.select(F.col("__id").alias("id_b"), F.col("__sh").alias("sh_b"))
@@ -948,7 +874,7 @@ def lsh_band_tuning(
     # pure cost (r13 verdict item 1).
     base = sample.select(
         "__id",
-        word_ngrams(F.col("__text"), shingle_n).alias("__sh"),
+        word_ngrams("__text", shingle_n).alias("__sh"),
         minhash_signature(
             "__text", num_hashes, shingle_n, portable=True
         ).alias("__sig"),
@@ -1054,7 +980,7 @@ def ngram_containment_pairs(
     tok = df.select(
         *blocks,
         F.col(id_col).alias("__id"),
-        word_ngrams(F.col(text_col), shingle_n).alias("__sh"),
+        word_ngrams(text_col, shingle_n).alias("__sh"),
     ).select(
         *blocks,
         "__id",

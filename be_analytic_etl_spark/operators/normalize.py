@@ -180,7 +180,7 @@ def temperature_weights(
     """
     per = df.groupBy(domain_col).agg(
         F.count(F.lit(1)).alias("n_docs"),
-        F.sum(F.size(tokenize(F.col(text_col)))).alias("n_tokens"),
+        F.sum(F.size(tokenize(text_col))).alias("n_tokens"),
     )
     total_tok = F.sum("n_tokens").over(Window.partitionBy())
     # class-8 NULL-safe divide: zero corpus token mass (all-NULL text)

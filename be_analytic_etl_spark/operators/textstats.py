@@ -4,6 +4,12 @@ Language-ID (marker-token heuristic), quality scoring (length / punctuation
 / stopword ratios), token counting, and document fingerprinting — each a
 pure column expression (JVM-side, codegen-friendly) over a text column, so
 the cost at 100 TB is one narrow pass, no shuffle, no Python boundary.
+
+The tokenizer, the n-gram shingles, the ratios, the quality score and the
+language scores are each defined once, as SQL text over a SQL expression
+(the ``_*_sql`` builders). The public function takes a column NAME, pastes
+it through ``quote_ident`` and returns ``F.expr`` of the text: the whole
+tree is parsed in one py4j round trip, however large it is.
 """
 
 from __future__ import annotations
@@ -30,15 +36,30 @@ WS_PLUS = WS_CLASS + "+"
 WS_PLUS_SQLEXPR = WS_PLUS.replace("\\", "\\\\")
 
 
-def tokenize(col: Column | str) -> Column:
-    """Whitespace tokenization; empty/blank text -> empty array."""
-    c = F.col(col) if isinstance(col, str) else col
-    t = F.trim(F.coalesce(c, F.lit("")))
-    return F.when(t == "", F.array().cast("array<string>")).otherwise(F.split(t, WS_PLUS))
+def _tokenize_sqltext(c: str) -> str:
+    """Whitespace tokenization of the SQL expression ``c`` as SQL text:
+    empty/blank text -> empty array. The one definition of the split;
+    the n-gram, ratio, score and language texts below, the minhash
+    signature and the ``token_count`` SQL UDF all build on it."""
+    t = f"trim(coalesce({c}, ''))"
+    return (
+        f"CASE WHEN {t} = '' THEN CAST(array() AS ARRAY<STRING>) "
+        f"ELSE split({t}, '{WS_PLUS_SQLEXPR}') END"
+    )
 
 
-def token_count(col: Column | str) -> Column:
-    return F.size(tokenize(col))
+def tokenize(col: str) -> Column:
+    """Whitespace tokenization of the column named ``col``; empty/blank
+    text -> empty array."""
+    return F.expr(_tokenize_sqltext(quote_ident(col)))
+
+
+def _token_count_sql(c: str) -> str:
+    return f"size({_tokenize_sqltext(c)})"
+
+
+def token_count(col: str) -> Column:
+    return F.expr(_token_count_sql(quote_ident(col)))
 
 
 #: BPE-style pre-tokenization shape (letter runs | digit runs | single
@@ -84,7 +105,7 @@ def portable_base_hash(col: Column) -> Column:
     return portable_hash60(col) % F.lit(PORTABLE_P)
 
 
-def rolling_fingerprint(col: Column | str) -> Column:
+def rolling_fingerprint(col: str) -> Column:
     """Order-sensitive polynomial rolling hash over the token stream:
     ``fp = fold(acc * B + h(token)) mod p`` with the portable base hash.
 
@@ -111,94 +132,72 @@ def char_count(col: Column | str) -> Column:
 PUNCT_CLASS = r"[.,;:!?]"
 
 
-def punct_ratio(col: Column | str) -> Column:
+def _punct_ratio_sql(c: str) -> str:
+    cc = f"coalesce({c}, '')"
+    return (
+        f"CASE WHEN length({cc}) = 0 THEN 0.0D "
+        f"ELSE CAST(length({cc}) - length(regexp_replace({cc},"
+        f" '{PUNCT_CLASS}', '')) AS DOUBLE) / length({cc}) END"
+    )
+
+
+def punct_ratio(col: str) -> Column:
     """Fraction of characters that are punctuation; 0.0 for empty text."""
-    c = F.coalesce(F.col(col) if isinstance(col, str) else col, F.lit(""))
-    n = F.length(c)
-    n_punct = n - F.length(F.regexp_replace(c, PUNCT_CLASS, ""))
-    return F.when(n == 0, F.lit(0.0)).otherwise(n_punct.cast("double") / n)
+    return F.expr(_punct_ratio_sql(quote_ident(col)))
 
 
 #: Small English stopword list for the quality heuristic.
 STOPWORDS = ["the", "a", "an", "of", "and", "or", "to", "in", "is", "it"]
 
 
-def stopword_ratio(col: Column | str, stopwords: list[str] | None = None) -> Column:
-    """Fraction of tokens that are stopwords (lower-cased match)."""
-    sw = [s.lower() for s in (stopwords or STOPWORDS)]
-    toks = tokenize(col)
-    n = F.size(toks)
-    n_stop = F.size(F.filter(toks, lambda t: F.lower(t).isin(*sw)))
-    return F.when(n == 0, F.lit(0.0)).otherwise(n_stop.cast("double") / n)
-
-
-def _tokenize_sqltext(c: str) -> str:
-    """SQL text twin of ``tokenize`` over the SQL expression ``c`` (same
-    two references to the trimmed input). The one Spark SQL text of the
-    split: dedup's n-gram text and the ``token_count`` SQL UDF build on it."""
-    t = f"trim(coalesce({c}, ''))"
+def _in_list_count_sql(toks: str, words: list[str]) -> str:
+    """SQL text: how many elements of the token array ``toks`` match one
+    of ``words``, lower-cased."""
     return (
-        f"CASE WHEN {t} = '' THEN CAST(array() AS ARRAY<STRING>) "
-        f"ELSE split({t}, '{WS_PLUS_SQLEXPR}') END"
+        f"size(filter({toks}, tk -> lower(tk) IN ("
+        + ",".join(f"'{w.lower()}'" for w in words)
+        + ")))"
     )
 
 
-def _quality_score_sql(col: str) -> str:
-    """``quality_score`` of the column NAMED ``col`` (backtick-quoted
-    here) as ONE SQL string (same expression tree, same
-    IEEE operation order — transcribed term by term from the Column
-    form below). Parsed in a single py4j round trip instead of the
-    ~60-call Column chain: quality_score feeds the 14-query ``_q6``
-    family plus a dozen direct call sites, and the Column build cost
-    ~0.3 s per plan (cProfile, r14). Double literals carry the ``D``
-    suffix so they parse as DOUBLE, not DECIMAL."""
-    c = quote_ident(col)
+def _stopword_ratio_sql(c: str) -> str:
     toks = _tokenize_sqltext(c)
-    cc = f"coalesce({c}, '')"
-    sw = ",".join(f"'{s.lower()}'" for s in STOPWORDS)
-    len_score = f"least(CAST(size({toks}) AS DOUBLE) / 20.0D, 1.0D)"
-    punct_ratio_sql = (
-        f"CASE WHEN length({cc}) = 0 THEN 0.0D "
-        f"ELSE CAST(length({cc}) - length(regexp_replace({cc},"
-        f" '{PUNCT_CLASS}', '')) AS DOUBLE) / length({cc}) END"
-    )
-    punct_penalty = f"greatest(0.0D, 1.0D - ({punct_ratio_sql}) * 5.0D)"
-    stop = (
+    return (
         f"CASE WHEN size({toks}) = 0 THEN 0.0D "
-        f"ELSE CAST(size(filter({toks}, tk -> lower(tk) IN ({sw})))"
+        f"ELSE CAST({_in_list_count_sql(toks, STOPWORDS)}"
         f" AS DOUBLE) / size({toks}) END"
     )
+
+
+def stopword_ratio(col: str) -> Column:
+    """Fraction of tokens that are stopwords (lower-cased match)."""
+    return F.expr(_stopword_ratio_sql(quote_ident(col)))
+
+
+def _quality_score_sql(c: str) -> str:
+    """``quality_score`` of the SQL expression ``c`` as SQL text, built
+    from the token-count, punctuation-ratio and stopword-ratio texts.
+    The operation order is the one the DuckDB oracles replay bit for bit
+    (``_QSCORE_SQL``). Double literals carry the ``D`` suffix so they
+    parse as DOUBLE, not DECIMAL."""
+    len_score = f"least(CAST({_token_count_sql(c)} AS DOUBLE) / 20.0D, 1.0D)"
+    punct_penalty = f"greatest(0.0D, 1.0D - ({_punct_ratio_sql(c)}) * 5.0D)"
     fluency = (
-        f"CASE WHEN ({stop}) BETWEEN 0.01D AND 0.6D THEN 1.0D ELSE 0.5D END"
+        f"CASE WHEN ({_stopword_ratio_sql(c)}) BETWEEN 0.01D AND 0.6D "
+        "THEN 1.0D ELSE 0.5D END"
     )
     return f"{len_score} * ({punct_penalty}) * ({fluency})"
 
 
-def quality_score(col: Column | str, round_to: int | None = 4) -> Column:
+def quality_score(col: str, round_to: int | None = 4) -> Column:
     """Composite [0,1] quality heuristic: long enough, not punctuation-heavy,
     reasonable stopword density (a fluency proxy).
 
     ``round_to=None`` returns the raw double — every input is an exact
     integer division, so the product is bit-identical across engines and
     safer for oracle comparison than rounding (which has tie hazards).
-
-    Pass ``col`` as a column NAME to get the score as one parsed SQL
-    expression (cheap plan build — the minhash discipline); a Column
-    falls back to the lambda-composed form (identical tree/values).
     """
-    if isinstance(col, str):
-        score = F.expr(_quality_score_sql(col))
-    else:
-        n_tok = token_count(col)
-        len_score = F.least(n_tok.cast("double") / 20.0, F.lit(1.0))
-        punct_penalty = F.greatest(
-            F.lit(0.0), F.lit(1.0) - punct_ratio(col) * 5.0
-        )
-        stop = stopword_ratio(col)
-        fluency = F.when(stop.between(0.01, 0.6), F.lit(1.0)).otherwise(
-            F.lit(0.5)
-        )
-        score = len_score * punct_penalty * fluency
+    score = F.expr(_quality_score_sql(quote_ident(col)))
     return F.round(score, round_to) if round_to is not None else score
 
 
@@ -212,52 +211,32 @@ LANG_MARKERS: dict[str, list[str]] = {
 }
 
 
-def lang_scores(col: Column | str) -> dict[str, Column]:
+def _lang_scores_sql(c: str) -> dict[str, str]:
+    toks = _tokenize_sqltext(c)
+    return {
+        lang: _in_list_count_sql(toks, markers)
+        for lang, markers in LANG_MARKERS.items()
+    }
+
+
+def lang_scores(col: str) -> dict[str, Column]:
     """Marker-token hit count per language (deterministic, SQL-replicable)."""
-    toks = tokenize(col)
-
-    def matcher(markers: list[str]):
-        # single-arg lambda: F.filter passes one Column per lambda parameter,
-        # so markers must be captured by closure, not by a default argument.
-        return lambda t: F.lower(t).isin(*markers)
-
-    out = {}
-    for lang, markers in LANG_MARKERS.items():
-        out[lang] = F.size(F.filter(toks, matcher(markers)))
-    return out
+    return {
+        lang: F.expr(score)
+        for lang, score in _lang_scores_sql(quote_ident(col)).items()
+    }
 
 
-def lang_id(col: Column | str, default: str = "und") -> Column:
+def lang_id(col: str, default: str = "und") -> Column:
     """Argmax language by marker score: first language (sorted code order)
-    holding the maximal score; all-zero scores -> ``default``.
-
-    A column NAME builds the whole CASE as one parsed SQL expression
-    (the minhash plan-build discipline; the Column chain was ~0.13 s of
-    py4j per build); a Column falls back to the composed form
-    (identical tree/values)."""
-    if isinstance(col, str):
-        toks = _tokenize_sqltext(quote_ident(col))
-        langs = sorted(LANG_MARKERS)
-        score = {
-            lang: (
-                f"size(filter({toks}, tk -> lower(tk) IN ("
-                + ",".join(f"'{m}'" for m in LANG_MARKERS[lang])
-                + ")))"
-            )
-            for lang in langs
-        }
-        mx = "greatest(" + ",".join(score[lang] for lang in langs) + ")"
-        chain = f"CASE WHEN {mx} = 0 THEN '{default}' " + "".join(
-            f"WHEN {score[lang]} = {mx} THEN '{lang}' " for lang in langs
-        )
-        return F.expr(chain + f"ELSE '{default}' END")
-    scores = lang_scores(col)
-    langs = sorted(scores)
-    mx = F.greatest(*[scores[lang] for lang in langs])
-    chain = F.when(mx == 0, F.lit(default))
-    for lang in langs:
-        chain = chain.when(scores[lang] == mx, F.lit(lang))
-    return chain.otherwise(F.lit(default))
+    holding the maximal score; all-zero scores -> ``default``."""
+    score = _lang_scores_sql(quote_ident(col))
+    langs = sorted(score)
+    mx = "greatest(" + ",".join(score[lang] for lang in langs) + ")"
+    chain = f"CASE WHEN {mx} = 0 THEN '{default}' " + "".join(
+        f"WHEN {score[lang]} = {mx} THEN '{lang}' " for lang in langs
+    )
+    return F.expr(chain + f"ELSE '{default}' END")
 
 
 #: PII-ish redaction patterns -> replacement tokens. Restricted to regex
@@ -311,44 +290,45 @@ def fingerprint_md5(col: Column | str) -> Column:
     return F.md5(normalize_text(col).cast("binary"))
 
 
-def word_ngrams(col: Column | str, n: int = 3) -> Column:
+def _let_tokens_sql(c: str, body: str) -> str:
+    """SQL text: ``body`` over the lambda variable ``toks`` bound ONCE to
+    the token array of ``c``. A single-element transform is the
+    expression-level let (see ``functions.let``): without it
+    CollapseProject re-inlines the regex split at each of the body's
+    three references — measured ~4x overcomputation on real documents."""
+    return f"element_at(transform(array({_tokenize_sqltext(c)}), toks -> {body}), 1)"
+
+
+def _word_ngrams_sql(c: str, n: int) -> str:
+    return _let_tokens_sql(
+        c,
+        "array_distinct(CASE WHEN size(toks) = 0 "
+        "THEN CAST(array() AS ARRAY<STRING>) "
+        f"ELSE transform(sequence(0, greatest(size(toks) - {n}, 0)), "
+        f"i -> concat_ws(' ', slice(toks, i + 1, {n}))) END)",
+    )
+
+
+def word_ngrams(col: str, n: int = 3) -> Column:
     """Distinct word n-gram shingles (array<string>); shorter docs yield the
-    whole-doc shingle so no document maps to an empty set.
-
-    The token array is let-bound: the naive form references ``tokenize(col)``
-    from three places (size guard, sequence bound, per-gram slice) and
-    CollapseProject re-inlines the regex split at each — measured ~4x
-    overcomputation on real documents.
-    """
-    from be_analytic_etl_spark.functions import let
-
-    def body(toks: Column) -> Column:
-        n_tok = F.size(toks)
-        idx = F.sequence(F.lit(0), F.greatest(n_tok - n, F.lit(0)))
-        grams = F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)))
-        return F.array_distinct(
-            F.when(n_tok == 0, F.array().cast("array<string>")).otherwise(grams)
-        )
-
-    return let(tokenize(col), body)
+    whole-doc shingle so no document maps to an empty set."""
+    return F.expr(_word_ngrams_sql(quote_ident(col), n))
 
 
-def word_ngrams_all(col: Column | str, n: int = 2) -> Column:
+def word_ngrams_all(col: str, n: int = 2) -> Column:
     """ALL consecutive word n-grams, duplicates kept (array<string>) —
     the counting companion to ``word_ngrams`` (which dedups for shingle
     sets). Documents shorter than ``n`` tokens yield an empty array:
     repetition statistics over them are undefined, not "one short gram".
-    Let-bound for the same CollapseProject reason as ``word_ngrams``.
     """
-    from be_analytic_etl_spark.functions import let
-
-    def body(toks: Column) -> Column:
-        n_tok = F.size(toks)
-        idx = F.sequence(F.lit(0), n_tok - n)
-        grams = F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)))
-        return F.when(n_tok < n, F.array().cast("array<string>")).otherwise(grams)
-
-    return let(tokenize(col), body)
+    return F.expr(
+        _let_tokens_sql(
+            quote_ident(col),
+            f"CASE WHEN size(toks) < {n} THEN CAST(array() AS ARRAY<STRING>) "
+            f"ELSE transform(sequence(0, size(toks) - {n}), "
+            f"i -> concat_ws(' ', slice(toks, i + 1, {n}))) END",
+        )
+    )
 
 
 def repetition_stats(
@@ -739,7 +719,7 @@ def qc_weights(n_buckets: int = QC_BUCKETS) -> list[float]:
 
 
 def hashed_linear_score(
-    col: Column | str,
+    col: str,
     *,
     n_buckets: int = QC_BUCKETS,
     bias: float = QC_BIAS,

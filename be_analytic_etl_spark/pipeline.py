@@ -58,7 +58,7 @@ def _quality_gate(df: DataFrame, opts: dict) -> DataFrame:
     if "min_chars" in opts:
         out = out.filter(F.length(F.coalesce(F.col(text), F.lit(""))) >= int(opts["min_chars"]))
     if "min_tokens" in opts:
-        out = out.filter(F.size(T.tokenize(F.col(text))) >= int(opts["min_tokens"]))
+        out = out.filter(F.size(T.tokenize(text)) >= int(opts["min_tokens"]))
     return out
 
 
@@ -86,7 +86,7 @@ def _classifier_gate(df: DataFrame, opts: dict) -> DataFrame:
     """Hashed-linear quality score threshold (map-only)."""
     text = opts.get("text_col", "text")
     thr = float(opts.get("threshold", 0.5))
-    return df.filter(T.hashed_linear_score(F.col(text)) >= thr)
+    return df.filter(T.hashed_linear_score(text) >= thr)
 
 
 @stage("exact_dedup")

@@ -663,12 +663,10 @@ def q_ext_strip_zeros(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.repeat(F.lit("0"), (F.col("l_linenumber") % 3).cast("int")),
         )
     )
-    return li.select(
-        "l_orderkey",
-        "l_linenumber",
-        raw.alias("raw"),
-        strip_trailing_zeros(raw).alias("stripped"),
-        empty_to_null(strip_trailing_zeros(raw)).alias("nulled"),
+    return (
+        li.select("l_orderkey", "l_linenumber", raw.alias("raw"))
+        .withColumn("stripped", strip_trailing_zeros("raw"))
+        .withColumn("nulled", empty_to_null("stripped"))
     )
 
 
@@ -1556,9 +1554,9 @@ def q_ext_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents")
     base = docs.select(
-        "doc_id", "text", "lang", F.size(T.tokenize(F.col("text"))).alias("n_tokens")
+        "doc_id", "text", "lang", F.size(T.tokenize("text")).alias("n_tokens")
     ).filter(
-        (F.col("n_chars") >= _PIPE_MIN_CHARS) & (F.size(T.tokenize(F.col("text"))) >= _PIPE_MIN_TOKENS)
+        (F.col("n_chars") >= _PIPE_MIN_CHARS) & (F.size(T.tokenize("text")) >= _PIPE_MIN_TOKENS)
     )
     # base feeds BOTH the keep-min derivation and the join probe side;
     # persist so the documents scan + tokenize + gates run once — the

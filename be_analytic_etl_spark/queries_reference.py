@@ -612,11 +612,8 @@ def q_br_number_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .otherwise(F.concat(F.lit(" "), ok, F.lit(" ")))
     )
-    return li.select(
-        "l_orderkey",
-        "l_linenumber",
-        raw.alias("raw"),
-        br_number_to_double(raw).alias("parsed"),
+    return li.select("l_orderkey", "l_linenumber", raw.alias("raw")).withColumn(
+        "parsed", br_number_to_double("raw")
     )
 
 

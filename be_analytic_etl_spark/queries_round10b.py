@@ -442,7 +442,7 @@ register("ext_rfm_segments", q_ext_rfm_segments, _rfm_oracle())
 def q_ext_chao1_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     counts = (
-        docs.select(F.explode(tokenize(F.col("text"))).alias("__tok"))
+        docs.select(F.explode(tokenize("text")).alias("__tok"))
         .groupBy("__tok")
         .agg(F.count(F.lit(1)).cast("long").alias("__c"))
     )

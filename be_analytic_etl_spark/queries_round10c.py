@@ -73,7 +73,7 @@ def q_ext_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"CAST(LEAST({_HEAPS_BLOCKS - 1},"
                 f" (doc_id * {_HEAPS_BLOCKS}) DIV (__mx + 1)) AS INT)"
             ).alias("__blk"),
-            F.explode(tokenize(F.col("text"))).alias("__tok"),
+            F.explode(tokenize("text")).alias("__tok"),
         )
         .localCheckpoint(eager=False)  # feeds tokens-per-block AND first-seen
     )

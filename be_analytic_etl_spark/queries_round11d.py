@@ -73,7 +73,7 @@ def q_ext_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     txt = F.coalesce(F.col("text"), F.lit(""))
     toks = docs.select(
-        tokenize(txt).alias("__tk"),
+        tokenize("text").alias("__tk"),
         F.length(txt).alias("__nc"),
         F.length(
             # explicit whitespace class, not \s: Java's \s includes \x0B
@@ -206,7 +206,7 @@ def q_ext_negative_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents")
     counts = (
-        docs.select(F.explode(tokenize(F.col("text"))).alias("tok"))
+        docs.select(F.explode(tokenize("text")).alias("tok"))
         .groupBy("tok")
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
         .localCheckpoint(eager=False)  # feeds the total AND the top-k
@@ -283,7 +283,7 @@ def q_ext_capture_recapture(spark: SparkSession, sf_dir: str) -> DataFrame:
     flags = (
         docs.select(
             (F.col("doc_id") % 2 == 0).cast("int").alias("__even"),
-            F.explode(tokenize(F.col("text"))).alias("tok"),
+            F.explode(tokenize("text")).alias("tok"),
         )
         .groupBy("tok")
         .agg(
@@ -374,7 +374,7 @@ def q_ext_mattr(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = docs.select(
         "doc_id",
         "lang",
-        F.posexplode(tokenize(F.col("text"))).alias("__p", "__tok"),
+        F.posexplode(tokenize("text")).alias("__p", "__tok"),
     )
     w_tok = Window.partitionBy("doc_id", "__tok").orderBy("__p")
     w_doc = Window.partitionBy("doc_id")

@@ -1426,7 +1426,7 @@ _DN_N = 3
 
 def q_ext_distinct_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
-    toks = T.tokenize(F.col("text"))
+    toks = T.tokenize("text")
     grams = F.expr(
         f"transform(sequence(1, size(__t) - {_DN_N - 1}), "
         f"i -> concat_ws(' ', slice(__t, i, {_DN_N})))"
@@ -1480,7 +1480,7 @@ _PMI_K = 20
 
 def q_ext_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
-    toks = T.tokenize(F.col("text"))
+    toks = T.tokenize("text")
     bg = F.expr(
         "transform(sequence(1, size(__t) - 1), "
         "i -> struct(lower(__t[i - 1]) AS w1, lower(__t[i]) AS w2))"
@@ -1995,7 +1995,7 @@ _SPAN_MIN_DOCS = 3
 
 def q_ext_frequent_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
-    toks = T.tokenize(F.col("text"))
+    toks = T.tokenize("text")
     grams = F.expr(
         f"array_distinct(transform(sequence(1, size(__t) - {_SPAN_N - 1}), "
         f"i -> concat_ws(' ', slice(__t, i, {_SPAN_N}))))"

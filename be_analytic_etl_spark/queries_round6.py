@@ -259,7 +259,7 @@ _SPAN_LEN = 3
 
 def q_ext_span_corruption(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
-    n = F.size(T.tokenize(F.col("text")))
+    n = F.size(T.tokenize("text"))
     off = T.portable_hash60(
         F.concat(F.col("doc_id").cast("string"), F.lit("|span"))
     ) % F.lit(_SPAN_PERIOD)
@@ -350,7 +350,7 @@ _NOV_N = 5
 
 def q_ext_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
-    toks = T.tokenize(F.col("text"))
+    toks = T.tokenize("text")
     grams = F.expr(
         f"transform(sequence(1, size(__t) - {_NOV_N - 1}), "
         f"i -> concat_ws(' ', slice(__t, i, {_NOV_N})))"
@@ -430,7 +430,7 @@ register(
 def q_ext_mixture_kl(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     st = (
-        docs.select("source", F.explode(T.tokenize(F.col("text"))).alias("__w"))
+        docs.select("source", F.explode(T.tokenize("text")).alias("__w"))
         .select("source", F.lower("__w").alias("__w"))
         .groupBy("source", "__w")
         .agg(F.count(F.lit(1)).cast("long").alias("__c_st"))

@@ -198,7 +198,7 @@ def q_ext_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from be_analytic_etl_spark.operators.sketches import heavy_hitters_exact
 
     docs = _t(spark, sf_dir, "documents")
-    toks = docs.select(F.explode(T.tokenize(F.col("text"))).alias("item"))
+    toks = docs.select(F.explode(T.tokenize("text")).alias("item"))
     return heavy_hitters_exact(toks, "item", _HH_K)
 
 
@@ -1045,7 +1045,7 @@ register("ext_gpd_tail", q_ext_gpd_tail, _gpd_oracle())
 def q_ext_jensen_shannon(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     st = (
-        docs.select("source", F.explode(T.tokenize(F.col("text"))).alias("__w"))
+        docs.select("source", F.explode(T.tokenize("text")).alias("__w"))
         .select("source", F.lower("__w").alias("__w"))
         .groupBy("source", "__w")
         .agg(F.count(F.lit(1)).cast("long").alias("__c_st"))

@@ -654,7 +654,7 @@ register("ext_kendall_tau", q_ext_kendall_tau, _kendall_oracle())
 def q_ext_gini_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     h = (
-        docs.select(F.size(T.tokenize(F.col("text"))).cast("long").alias("__v"))
+        docs.select(F.size(T.tokenize("text")).cast("long").alias("__v"))
         .groupBy("__v")
         .agg(F.count(F.lit(1)).cast("long").alias("__c"))
     )
@@ -1000,7 +1000,7 @@ register("ext_runs_test", q_ext_runs_test, _runs_oracle())
 def q_ext_token_lorenz(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     h = (
-        docs.select(F.size(T.tokenize(F.col("text"))).cast("long").alias("__v"))
+        docs.select(F.size(T.tokenize("text")).cast("long").alias("__v"))
         .groupBy("__v")
         .agg(F.count(F.lit(1)).cast("long").alias("__c"))
     )
@@ -1247,7 +1247,7 @@ register("ext_levene", q_ext_levene, _levene_oracle())
 def q_ext_mcnemar(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     a = (F.col("__q6") >= F.lit("0.5").cast("decimal(18,6)")).cast("int")
-    b = (T.hashed_linear_score(F.col("text")) >= 0.5).cast("int")
+    b = (T.hashed_linear_score("text") >= 0.5).cast("int")
     m = docs.select(_q6(), "text").select(a.alias("__a"), b.alias("__b"))
     agg = m.agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),

@@ -236,7 +236,7 @@ def q_ext_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     from be_analytic_etl_spark.operators.textstats import hashed_linear_score
 
     docs = _t(spark, sf_dir, "documents")
-    score = hashed_linear_score(F.col("text"))
+    score = hashed_linear_score("text")
     # exp() inside the sigmoid is libm (engine ulp differences): emit the
     # score rounded. keep compares the UNROUNDED score on both sides —
     # sigmoid is monotone, so it equals raw >= 0, which both engines
@@ -325,7 +325,7 @@ def q_ext_preference_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents")
     s = docs.select(
-        "lang", "doc_id", hashed_linear_score(F.col("text")).alias("score")
+        "lang", "doc_id", hashed_linear_score("text").alias("score")
     )
     chosen = F.min(
         F.struct(
@@ -426,7 +426,7 @@ def q_ext_pipeline_spec(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     out = run_pipeline(docs, spec)
     return out.select(
-        "doc_id", "lang", F.size(tokenize(F.col("text"))).alias("n_tokens"), "split"
+        "doc_id", "lang", F.size(tokenize("text")).alias("n_tokens"), "split"
     )
 
 

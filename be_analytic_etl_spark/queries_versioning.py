@@ -85,7 +85,7 @@ register(
 def q_ext_curriculum_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     buckets = V.curriculum_buckets(
-        docs, F.size(tokenize(F.col("text"))), id_col="doc_id"
+        docs, F.size(tokenize("text")), id_col="doc_id"
     )
     in_sample = (portable_base_hash(F.col("doc_id").cast("string")) % 10) == 0
     return buckets.groupBy("bucket").agg(

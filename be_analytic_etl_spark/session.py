@@ -94,8 +94,8 @@ def get_spark(app_name: str = "be-analytic-etl-spark", master: str | None = None
         SparkSession.builder.appName(app_name)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # AQE partition-coalescing knobs, env-parameterised with Spark's
-        # own defaults. MEASURED in the r13 optimization round
+        # AQE partition-coalescing knobs at Spark's own defaults. MEASURED
+        # in the r13 optimization round
         # (OPTIMIZATION_r13.md): parallelismFirst=false + 64m advisory —
         # the guide-§2.2 "fewer, larger reduce partitions" move — was
         # tried and REJECTED on this workload: full-suite bench went
@@ -104,13 +104,12 @@ def get_spark(app_name: str = "be-analytic-etl-spark", master: str | None = None
         # (md5 shingles, exploded pair joins) — a KB-sized shuffle still
         # carries a core's worth of downstream CPU, and byte-based
         # coalescing serialized it onto one task. On a real cluster with
-        # TB-sized shuffles the byte heuristic is the right one; flip it
-        # there via these envs — locally parallelism-first stays correct
-        # because every stage's bytes are far below one advisory chunk.
-        .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-                os.environ.get("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "true"))
-        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-                os.environ.get("SPARK_GRAFT_AQE_ADVISORY_SIZE", "64m"))
+        # TB-sized shuffles the byte heuristic is the right one; both are
+        # runtime SQL confs, so ``spark.conf.set`` flips them there —
+        # locally parallelism-first stays correct because every stage's
+        # bytes are far below one advisory chunk.
+        .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")
+        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(_DEFAULT_SHUFFLE_PARTITIONS))
         .config("spark.sql.session.timeZone", "UTC")

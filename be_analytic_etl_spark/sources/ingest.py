@@ -59,7 +59,7 @@ from pyspark.sql.types import StringType, StructField, StructType
 
 from be_analytic_etl_spark.functions import strip_trailing_zeros
 from be_analytic_etl_spark.functions.sqltext import quote_ident, sql_string
-from be_analytic_etl_spark.functions.sqludf import br_number_to_double_sql
+from be_analytic_etl_spark.functions.cleaning import br_number_to_double_sql
 from be_analytic_etl_spark.sources.sinks import written_schema
 
 #: Metadata phrases marking preamble rows to drop (main.py:240-243).
@@ -333,14 +333,15 @@ def _find_header(df: DataFrame, markers: list[str]) -> tuple[DataFrame, list]:
     """(rows below the header row, the header row's cells). A reader that
     found the header on the driver left it in ``_c0``'s ``HEADER_ROW``
     metadata, and the rows below it are a filter on the row number: no
-    Spark job. Any other frame costs ONE ordered action: ``take`` scans
-    partitions in order, so the first row with a marker cell is the
-    minimum row number. No marker: every row, and a header of nulls."""
+    Spark job. Any other frame costs ONE Spark job: the first marker row
+    by row number, which Spark plans as one ``TakeOrderedAndProject``
+    over all partitions (a plain ``first()`` scans partition 0 and widens
+    its scan job by job). No marker: every row, and a header of nulls."""
     cols = df.columns
     dfn = df.selectExpr("*", f"monotonically_increasing_id() AS {_ROWNUM}")
     found = df.schema.fields[0].metadata.get(HEADER_ROW) if cols else None
     if found is None:
-        hdr = dfn.filter(_has_any_sql(cols, markers)).first()
+        hdr = dfn.filter(_has_any_sql(cols, markers)).orderBy(_ROWNUM).first()
         if hdr is None:
             return df, [None] * len(cols)
         found = {"cells": list(hdr)[: len(cols)], "record": hdr[_ROWNUM]}
@@ -395,7 +396,7 @@ def tidy_decimal_strings(df: DataFrame, skip_cols: list[str]) -> DataFrame:
     """P11: trailing-zero strip on every non-id column (string cosmetics)."""
     return df.select(
         *[
-            F.col(c) if c in skip_cols else strip_trailing_zeros(F.col(c)).alias(c)
+            F.col(c) if c in skip_cols else strip_trailing_zeros(c).alias(c)
             for c in df.columns
         ]
     )
@@ -476,7 +477,8 @@ def transform_wide(raw: DataFrame, service: str) -> DataFrame:
     production chain.
 
     No Spark job when the reader attached the header row (``HEADER_ROW``),
-    else one (the header lookup), and a fixed number of py4j calls:
+    else exactly one (the ordered header lookup, however many partitions
+    the raw frame has), and a fixed number of py4j calls:
     the row filter is one expression, and the rename (P9) and label
     normalization (P10) are name edits on the driver that land in the
     one unpivot statement. Only the pass-through branch (no id or month
@@ -529,6 +531,6 @@ def filter_manifest(resources: DataFrame) -> DataFrame:
     return (
         resources.filter(keep)
         .withColumn("url", F.regexp_replace("url", r"\\", "/"))
-        .withColumn("servico", classify_service(F.col("titulo")))
-        .withColumn("ano", extract_year(F.col("titulo")))
+        .withColumn("servico", classify_service("titulo"))
+        .withColumn("ano", extract_year("titulo"))
     )

@@ -57,13 +57,26 @@ def write_csv(df: DataFrame, path: str, single_file: bool = False) -> None:
 def written_schema(spark, path: str) -> StructType | None:
     """The schema ``write_csv`` left in ``path`` (``SCHEMA_SIDECAR``), or
     None when there is none, e.g. for a single CSV file or a directory
-    another writer made."""
-    target, fs = _hadoop_path(spark, f"{path}/{SCHEMA_SIDECAR}")
+    another writer made. A sidecar changed after ``write_csv`` wrote it
+    fails the checksum file the local ``FileSystem`` keeps beside it,
+    and raises ``ValueError`` naming the file and the fix."""
+    from py4j.protocol import Py4JJavaError
+
+    sidecar = f"{path}/{SCHEMA_SIDECAR}"
+    target, fs = _hadoop_path(spark, sidecar)
     if not fs.exists(target):
         return None
     stream = fs.open(target)
     try:
         text = stream.readAllBytes().decode()
+    except Py4JJavaError as e:
+        if not e.java_exception.getClass().getName().endswith(".ChecksumException"):
+            raise
+        raise ValueError(
+            f"{sidecar} fails its checksum: it changed after write_csv wrote it. "
+            f"Rewrite the CSV with write_csv, or remove {path}/.{SCHEMA_SIDECAR}.crc "
+            "to keep the edited schema"
+        ) from e
     finally:
         stream.close()
     return StructType.fromJson(json.loads(text))

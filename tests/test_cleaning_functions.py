@@ -9,7 +9,6 @@ from __future__ import annotations
 import pytest
 
 from be_analytic_etl_spark.functions import (
-    br_number_str,
     br_number_to_double,
     classify_service,
     empty_to_null,
@@ -19,43 +18,38 @@ from be_analytic_etl_spark.functions import (
 )
 
 BR_CASES = [
-    ("1.234,56", "1234.56", 1234.56),
-    ("1234,56", "1234.56", 1234.56),
-    ("1.234.56", "123456", 123456.0),
-    ("1234.56", "1234.56", 1234.56),
-    ("1234", "1234", 1234.0),
-    ("R$ 1.234,56", "1234.56", 1234.56),
-    (" 15,5 ", "15.5", 15.5),
-    ("", None, None),
-    ("nan", None, None),
-    ("NaN", None, None),
-    ("-", None, None),
-    ("--", None, None),
-    ("---", None, None),
-    ("ND", None, None),
-    ("N/D", None, None),
-    ("abc", None, None),
-    (None, None, None),
-    ("1.234.567,89", "1234567.89", 1234567.89),
-    ("0,5", "0.5", 0.5),
-    ("100", "100", 100.0),
-    ("12,3%", "12.3", 12.3),
+    ("1.234,56", 1234.56),
+    ("1234,56", 1234.56),
+    ("1.234.56", 123456.0),
+    ("1234.56", 1234.56),
+    ("1234", 1234.0),
+    ("R$ 1.234,56", 1234.56),
+    (" 15,5 ", 15.5),
+    ("", None),
+    ("nan", None),
+    ("NaN", None),
+    ("-", None),
+    ("--", None),
+    ("---", None),
+    ("ND", None),
+    ("N/D", None),
+    ("abc", None),
+    (None, None),
+    ("1.234.567,89", 1234567.89),
+    ("0,5", 0.5),
+    ("100", 100.0),
+    ("12,3%", 12.3),
 ]
 
 
 def test_br_number(spark):
     import pyspark.sql.functions as F
 
-    df = spark.createDataFrame([(s,) for s, _, _ in BR_CASES], "s string")
-    out = df.select(
-        F.col("s"),
-        br_number_str("s").alias("norm"),
-        br_number_to_double("s").alias("num"),
-    ).collect()
-    expected = {s: (n, d) for s, n, d in BR_CASES}
+    df = spark.createDataFrame([(s,) for s, _ in BR_CASES], "s string")
+    out = df.select(F.col("s"), br_number_to_double("s").alias("num")).collect()
+    expected = dict(BR_CASES)
     for row in out:
-        exp_norm, exp_num = expected[row["s"]]
-        assert row["norm"] == exp_norm, f"{row['s']!r}: {row['norm']!r} != {exp_norm!r}"
+        exp_num = expected[row["s"]]
         if exp_num is None:
             assert row["num"] is None
         else:

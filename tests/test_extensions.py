@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from be_analytic_etl_spark.operators import dedup as D
 from be_analytic_etl_spark.operators import similarity as S
+from be_analytic_etl_spark.operators import textstats as T
 from tests.conftest import broadcast_threshold, executed_plan
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -35,7 +36,7 @@ def _docs(spark, n=40):
 
 def test_portable_base_hash_matches_hashlib(spark):
     df = spark.createDataFrame([("abc",), ("x y z",), ("",)], ["s"])
-    rows = df.select("s", D.portable_base_hash(F.col("s")).alias("h")).collect()
+    rows = df.select("s", T.portable_base_hash(F.col("s")).alias("h")).collect()
     for r in rows:
         expect = int(hashlib.md5(r["s"].encode()).hexdigest()[:15], 16) % D.PORTABLE_P
         assert r["h"] == expect
@@ -46,7 +47,7 @@ def test_portable_minhash_matches_python(spark):
     df = spark.createDataFrame(list(enumerate(texts)), ["i", "t"])
     k, n = 4, 2
     rows = df.select(
-        "i", D.minhash_signature(F.col("t"), k, n, portable=True).alias("sig")
+        "i", D.minhash_signature("t", k, n, portable=True).alias("sig")
     ).collect()
     params = D.portable_affine_params(k)
     for r in rows:
@@ -60,6 +61,39 @@ def test_portable_minhash_matches_python(spark):
         ]
         expect = [min((h * a + b) % D.PORTABLE_P for h in bases) for a, b in params]
         assert list(r["sig"]) == expect
+
+
+def test_xxhash64_minhash_matches_explode_groupby(spark):
+    """The default signature, slot by slot, is the minimum of
+    xxhash64(shingle, seed) over the document's shingles, computed here
+    the long way: shingles from Python, exploded against the seeds and
+    reduced with groupBy."""
+    texts = ["a b c d e f", "the quick brown fox", "a b a b a b", "solo"]
+    k, n = 4, 2
+    df = spark.createDataFrame(list(enumerate(texts)), ["i", "t"])
+    got = {
+        r["i"]: list(r["sig"])
+        for r in df.select("i", D.minhash_signature("t", k, n).alias("sig")).collect()
+    }
+    shingles = spark.createDataFrame(
+        [
+            (i, " ".join(t.split()[j : j + n]))
+            for i, t in enumerate(texts)
+            for j in range(max(len(t.split()) - n, 0) + 1)
+        ],
+        "i long, sh string",
+    )
+    # the signature's seeds are sequence(0, k - 1): INT, not range()'s BIGINT
+    seeds = spark.range(k).select(F.col("id").cast("int").alias("seed"))
+    want = {}
+    for r in (
+        shingles.crossJoin(seeds)
+        .groupBy("i", "seed")
+        .agg(F.min(F.xxhash64("sh", "seed")).alias("h"))
+        .collect()
+    ):
+        want.setdefault(r["i"], [None] * k)[r["seed"]] = r["h"]
+    assert got == want
 
 
 # --- simhash vs pure-python reference --------------------------------------

@@ -237,8 +237,8 @@ def test_header_beyond_the_first_split_falls_back_to_the_job(spark, tmp_path):
         raw = read_headerless_csv(spark, str(p))
         assert raw.rdd.getNumPartitions() > 1
         assert HEADER_ROW not in raw.schema.fields[0].metadata
-        # take() scans partition 0 first and widens, one job per round
-        assert jobs_of(spark, lambda: transform_wide(raw, "SMP")) >= 1
+        # the ordered lookup is one TakeOrderedAndProject over all splits
+        assert jobs_of(spark, lambda: transform_wide(raw, "SMP")) == 1
         assert sorted(transform_wide(raw, "SMP").collect()) == want
     finally:
         spark.conf.set(key, prev)

@@ -162,9 +162,9 @@ def test_trailing_zero_tidy_never_changes_the_parsed_double(spark, values):
     df = spark.createDataFrame(list(enumerate(values)), "i long, s string")
     got = df.select(
         "s",
-        br_number_to_double(strip_trailing_zeros("s")).alias("tidied"),
+        strip_trailing_zeros("s").alias("t"),
         br_number_to_double("s").alias("raw"),
-    ).collect()
+    ).select("s", br_number_to_double("t").alias("tidied"), "raw").collect()
     assert [(r["s"], r["tidied"]) for r in got] == [(r["s"], r["raw"]) for r in got]
 
 
@@ -340,26 +340,6 @@ def test_pava_invariants(ys):
     # already-monotone input passes through exactly
     srt = sorted(ys)
     assert _pava(srt, w) == pytest.approx(srt)
-
-
-def test_minhash_sql_text_equals_column_form(spark):
-    """The SQL-text portable minhash (string col) and the lambda-composed
-    form (Column col) are interchangeable: same signatures on real docs."""
-    from pyspark.sql import functions as F
-
-    from be_analytic_etl_spark.operators import dedup as D
-    from be_analytic_etl_spark.sources import load_table
-
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents").limit(200)
-    both = docs.select(
-        "doc_id",
-        D.minhash_signature("text", 8, 3, portable=True).alias("sql_form"),
-        D.minhash_signature(F.col("text"), 8, 3, portable=True).alias("col_form"),
-    )
-    # eqNullSafe: plain != yields NULL (row silently dropped) when a
-    # signature is NULL or has NULL slots (blank docs), hiding divergence.
-    n_diff = both.filter(~F.col("sql_form").eqNullSafe(F.col("col_form"))).count()
-    assert n_diff == 0
 
 
 @pytest.mark.parametrize("n_parts", [1, 7, 32])

@@ -132,7 +132,7 @@ def test_ngram_novelty_counts_distinct_grams_once(spark):
         "i -> concat_ws(' ', slice(__t, i, 5)))"
     )
     g = (
-        docs.select("doc_id", T.tokenize(F.col("text")).alias("__t"))
+        docs.select("doc_id", T.tokenize("text").alias("__t"))
         .select("doc_id", F.explode(F.array_distinct(grams)).alias("g"))
     )
     per1 = g.filter(F.col("doc_id") == 1).count()

@@ -132,7 +132,7 @@ def test_gini_and_lorenz_are_consistent(spark):
     toks = sorted(
         r["nt"]
         for r in load_table(spark, SF_DIR, "documents")
-        .select(F.size(T.tokenize(F.col("text"))).alias("nt"))
+        .select(F.size(T.tokenize("text")).alias("nt"))
         .collect()
     )
     n, tot = len(toks), sum(toks)

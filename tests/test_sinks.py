@@ -92,6 +92,25 @@ def test_stale_schema_fails_loudly(spark, tmp_path):
         read_typed_csv(spark, path).collect()
 
 
+def test_schema_edited_in_place_names_the_sidecar_and_the_fix(spark, tmp_path):
+    """A sidecar rewritten without its checksum file fails the local
+    FileSystem's checksum: the reload names the file and how to fix it."""
+    import json
+
+    path = str(tmp_path / "export.csv")
+    write_csv(_export(spark), path)
+    sidecar = os.path.join(path, SCHEMA_SIDECAR)
+    with open(sidecar) as f:
+        schema = json.load(f)
+    schema["fields"][1]["name"] = "nome"
+    with open(sidecar, "w") as f:
+        json.dump(schema, f)
+    with pytest.raises(ValueError, match=f"{SCHEMA_SIDECAR} fails its checksum") as err:
+        read_typed_csv(spark, path)
+    assert sidecar in str(err.value)
+    assert "write_csv" in str(err.value) and f".{SCHEMA_SIDECAR}.crc" in str(err.value)
+
+
 def test_import_csv_automatic_table_target(spark, tmp_path):
     import shutil
 

@@ -1,4 +1,5 @@
-"""SQL UDFs == their Column-form implementations, case-for-case."""
+"""Registered SQL UDFs == the Python functions built from the same SQL
+text, case-for-case."""
 
 from __future__ import annotations
 
@@ -48,7 +49,7 @@ def cases_df(spark):
 
 
 @pytest.mark.parametrize(
-    "udf_name,column_fn",
+    "udf_name,fn",
     [
         ("br_number_to_double", br_number_to_double),
         ("strip_trailing_zeros", strip_trailing_zeros),
@@ -57,13 +58,13 @@ def cases_df(spark):
         ("empty_to_null", empty_to_null),
     ],
 )
-def test_sql_udf_matches_column_form(spark, cases_df, udf_name, column_fn):
+def test_sql_udf_matches_column_form(spark, cases_df, udf_name, fn):
     both = cases_df.select(
         "s",
-        F.expr(f"{udf_name}(s)").alias("sql_form"),
-        column_fn(F.col("s")).alias("col_form"),
+        F.expr(f"{udf_name}(s)").alias("udf_form"),
+        fn("s").alias("expr_form"),
     )
-    bad = both.filter(~F.col("sql_form").eqNullSafe(F.col("col_form")))
+    bad = both.filter(~F.col("udf_form").eqNullSafe(F.col("expr_form")))
     assert bad.count() == 0, [tuple(r) for r in bad.collect()]
 
 
@@ -74,10 +75,10 @@ def test_token_count_matches_on_documents(spark):
     install_sql_functions(spark)
     docs = load_table(spark, "/root/testdata/sf0.001", "documents").limit(300)
     both = docs.select(
-        F.expr("token_count(text)").alias("sql_form"),
-        token_count("text").alias("col_form"),
+        F.expr("token_count(text)").alias("udf_form"),
+        token_count("text").alias("expr_form"),
     )
-    assert both.filter(~F.col("sql_form").eqNullSafe(F.col("col_form"))).count() == 0
+    assert both.filter(~F.col("udf_form").eqNullSafe(F.col("expr_form"))).count() == 0
 
 
 def test_all_udfs_installed_and_callable(spark):
