@@ -7,7 +7,7 @@ for the Spark engine:
     python -m be_analytic_etl_spark list
     python -m be_analytic_etl_spark run groupby_avg --sf-dir /root/testdata/sf0.01 --show 10
     python -m be_analytic_etl_spark explain ext_minhash_lsh_neardup
-    python -m be_analytic_etl_spark lint ext_pipeline --strict
+    python -m be_analytic_etl_spark lint ext_pipeline_e2e --strict
     python -m be_analytic_etl_spark lint-sources
     python -m be_analytic_etl_spark sql "SELECT COUNT(*) FROM lineitem"
     python -m be_analytic_etl_spark pipeline --spec spec.json --show 5

@@ -126,7 +126,7 @@ def add_dense_id(
     )
 
 
-def finalize(df: DataFrame, dense_id: bool = True) -> DataFrame:
+def finalize(df: DataFrame) -> DataFrame:
     """P13-P15: final snake_case schema, id column, canonical order.
 
     Renames happen in ONE positional select — sequential renaming would
@@ -138,17 +138,14 @@ def finalize(df: DataFrame, dense_id: bool = True) -> DataFrame:
     0); a larger input takes ``add_dense_id``.
     """
     out = df.select(*[F.col(c).alias(FINAL_RENAMES.get(c, c)) for c in df.columns])
-    if dense_id:
-        order_cols = [c for c in ("tipo_servico", "grupo_economico", "servico", "mes_referencia") if c in out.columns]
-        if fits_one_task(out):
-            out = out.coalesce(1)
-            if order_cols:
-                out = out.sortWithinPartitions(*order_cols)
-            out = out.withColumn("id", F.monotonically_increasing_id() + 1)
-        else:
-            out = add_dense_id(out, order_cols=order_cols or None)
+    order_cols = [c for c in ("tipo_servico", "grupo_economico", "servico", "mes_referencia") if c in out.columns]
+    if fits_one_task(out):
+        out = out.coalesce(1)
+        if order_cols:
+            out = out.sortWithinPartitions(*order_cols)
+        out = out.withColumn("id", F.monotonically_increasing_id() + 1)
     else:
-        out = out.withColumn("id", F.monotonically_increasing_id())
+        out = add_dense_id(out, order_cols=order_cols or None)
     ordered = [c for c in PREFERRED_ORDER if c in out.columns]
     extras = [c for c in out.columns if c not in ordered]
     return out.select(*ordered, *extras)

@@ -37,7 +37,7 @@ from be_analytic_etl_spark.functions.sqltext import quote_ident
 from be_analytic_etl_spark.operators.textstats import (
     PORTABLE_P,
     _word_ngrams_sql,
-    normalize_text,
+    fingerprint_md5,
     tokenize,
     word_ngrams,
 )
@@ -357,13 +357,30 @@ def simhash_neardup_pairs(
     (``session.cached_scope`` for eager cleanup)."""
     from pyspark import StorageLevel
 
-    chunk_bits = (60 if portable else 64) // 4
-    chunk_mask = (1 << chunk_bits) - 1
     # chunks feed both sides of the bucket self-join; persist so the
     # explode+bit-sum simhash aggregation runs once, not twice.
     sh = simhash(df, text_col, id_col, portable=portable).persist(
         StorageLevel.MEMORY_AND_DISK
     )
+    return _simhash_chunk_pairs(sh, id_col, max_hamming, portable, max_bucket)
+
+
+def _simhash_chunk_pairs(
+    sh: DataFrame,
+    id_col: str,
+    max_hamming: int,
+    portable: bool,
+    max_bucket: int,
+) -> DataFrame:
+    """(id_a, id_b, hamming) near-dup pairs from a persisted ``simhash``
+    table: explode each fingerprint into 4 chunks, drop chunk buckets
+    larger than ``max_bucket`` (the flood guard), self-join on equal
+    chunks, verify the true hamming distance. Computes the flood guard
+    eagerly, which fills ``sh``'s cache."""
+    from pyspark import StorageLevel
+
+    chunk_bits = (60 if portable else 64) // 4
+    chunk_mask = (1 << chunk_bits) - 1
     # No blanket count: the flood-guard aggregate below is computed
     # eagerly, so IT is the (single, sequential) pass that fills
     # sh's cache — the r13 count() here was an extra full pass (r13
@@ -673,7 +690,7 @@ def incremental_dedup_status(
     Exact-dup precedence: an exact dup is also an LSH candidate; the
     status CASE reports the stronger signal.
     """
-    fp = F.md5(normalize_text(F.col(text_col)).cast("binary"))
+    fp = fingerprint_md5(text_col)
     fp_new = new_docs.select(F.col(id_col).alias("__id"), fp.alias("__fp"))
     fp_old = old_docs.select(fp.alias("__fp")).dropDuplicates()
     exact_ids = (
@@ -1239,20 +1256,20 @@ def exact_substring_coverage_sql(toks_sql: str, window: int = 12) -> str:
 
 
 def simhash_panel(
-    df: "DataFrame",
+    df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
     max_hamming: int = 3,
     portable: bool = False,
     max_bucket: int = 1000,
-) -> "DataFrame":
-    """The merged per-document SimHash readout (round-11 registry merge
-    of ``ext_simhash`` + ``ext_simhash_neardup``): one row per document —
-    the full fingerprint table ``simhash`` emits — widened with the
-    near-dup pair leg aggregated symmetrically onto each endpoint:
-    ``n_partners`` (near-dup partners at hamming <= ``max_hamming``
-    found via the 4-chunk pigeonhole bucket join) and ``min_hamming``
-    (closest partner distance; NULL when the doc has none).
+) -> DataFrame:
+    """The per-document SimHash readout: one row per document — the full
+    fingerprint table ``simhash`` emits — widened with the
+    ``simhash_neardup_pairs`` leg aggregated symmetrically onto each
+    endpoint: ``n_partners`` (near-dup partners at hamming <=
+    ``max_hamming`` found via the 4-chunk pigeonhole bucket join, with
+    the same ``max_bucket`` flood guard) and ``min_hamming`` (closest
+    partner distance; NULL when the doc has none).
 
     Every bit of every document's simhash stays value-checked (the
     fingerprint column is emitted verbatim) AND the candidate-join +
@@ -1263,72 +1280,10 @@ def simhash_panel(
     """
     from pyspark import StorageLevel
 
-    chunk_bits = (60 if portable else 64) // 4
-    chunk_mask = (1 << chunk_bits) - 1
     sh = simhash(df, text_col, id_col, portable=portable).persist(
         StorageLevel.MEMORY_AND_DISK
     )
-    # No blanket count: the eagerly-computed flood guard below is the
-    # single sequential pass that fills sh's cache (r13 verdict item 1 —
-    # the count() was an extra full pass; same fix as minhash_lsh_pairs).
-    chunks = sh.select(
-        F.col(id_col).alias("__id"),
-        F.col("simhash"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("chunk_id"),
-                        F.shiftright(F.col("simhash"), i * chunk_bits)
-                        .bitwiseAND(F.lit(chunk_mask))
-                        .alias("chunk"),
-                    )
-                    for i in range(4)
-                ]
-            )
-        ).alias("c"),
-    ).select(
-        "__id",
-        "simhash",
-        F.col("c.chunk_id").alias("chunk_id"),
-        F.col("c.chunk").alias("chunk"),
-    )
-    # flood guard (see simhash_neardup_pairs): skip chunk buckets larger
-    # than max_bucket so a crawl-duplicate flood cannot make the
-    # candidate join quadratic; mirrored in the registered oracle.
-    kept = (
-        chunks.groupBy("chunk_id", "chunk")
-        .agg(F.count(F.lit(1)).alias("__bn"))
-        .filter(F.col("__bn") <= max_bucket)
-        .drop("__bn")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    # eager fill via the tiny kept frame (see minhash_lsh_pairs): one
-    # pass that also materializes sh's cache; released by cached_scope.
-    # Sized by the filled cache, kept broadcasts only within the threshold.
-    kept.count()
-    chunks = chunks.join(kept, ["chunk_id", "chunk"])
-    left = chunks.select(
-        "chunk_id", "chunk", F.col("__id").alias("id_a"),
-        F.col("simhash").alias("sh_a"),
-    )
-    right = chunks.select(
-        "chunk_id", "chunk", F.col("__id").alias("id_b"),
-        F.col("simhash").alias("sh_b"),
-    )
-    pairs = (
-        left.join(right, ["chunk_id", "chunk"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-        .select(
-            "id_a",
-            "id_b",
-            F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))).alias(
-                "hamming"
-            ),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-    )
+    pairs = _simhash_chunk_pairs(sh, id_col, max_hamming, portable, max_bucket)
     # symmetric endpoint view: each pair contributes to BOTH docs. The
     # explode form reads the pair subtree ONCE — a self-union would
     # evaluate the whole candidate join + hamming verify twice, since

@@ -10,13 +10,11 @@ transfer, output schema declared up front.
 
 The decode kernels themselves are STUBS here (no image/audio libs in this
 container — the real kernel drops into ``_decode_payload``); everything
-Spark-side is real and tested: schema, partition sizing, UDF signatures,
-batch iteration, and the deterministic fake feature extractor used to
-validate the plumbing end-to-end.
+Spark-side is real and tested: schema, UDF signatures, batch iteration,
+and the deterministic fake feature extractor used to validate the
+plumbing end-to-end.
 
 Scale notes:
-- ``repartition_for_payloads`` sizes partitions by BYTES not rows —
-  binary columns make row counts meaningless for memory planning.
 - mapInPandas streams batches (spark.sql.execution.arrow.maxRecordsPerBatch);
   a partition never has to fit in one pandas frame.
 - Feature extraction emits fixed-width arrays -> downstream similarity
@@ -57,54 +55,6 @@ def attach_binary_metadata(
             "sha256": F.sha2(p, 256),
         }
     )
-
-
-def _source_file_bytes(df: DataFrame) -> int | None:
-    """Total on-disk size of the DataFrame's source files — a metadata-only
-    listing (no data read). None when the frame isn't file-backed."""
-    files = df.inputFiles()
-    if not files:
-        return None
-    jvm = df.sparkSession._jvm
-    hconf = df.sparkSession._jsc.hadoopConfiguration()
-    total = 0
-    for f in files:
-        path = jvm.org.apache.hadoop.fs.Path(f)
-        fs = path.getFileSystem(hconf)
-        total += fs.getFileStatus(path).getLen()
-    return total
-
-
-def repartition_for_payloads(
-    df: DataFrame,
-    payload_col: str = "payload",
-    target_partition_bytes: int = 128 * 2**20,
-    min_partitions: int | None = None,
-    total_bytes: int | None = None,
-) -> DataFrame:
-    """Partition by total payload BYTES, so each mapInPandas worker sees
-    ~target bytes regardless of row width.
-
-    The default sizing pass is an exact ``sum(length(payload))`` — one
-    narrow aggregation over the payload column. To skip that extra scan
-    at 100 TB, pass ``total_bytes`` explicitly: from catalog statistics,
-    or from ``_source_file_bytes(df)`` — but ONLY when the frame is the
-    raw unfiltered file read and the payload column dominates the files;
-    file metadata measures whole source files, so a filtered frame or a
-    derived payload makes it arbitrarily wrong in either direction
-    (too-few partitions → worker OOM; too-many → tiny-task overhead).
-
-    ``min_partitions`` (default: the session's default parallelism) floors
-    the count — a corpus smaller than one target chunk must still fan out
-    across workers, or the Python stage serializes on one core."""
-    spark = df.sparkSession
-    if min_partitions is None:
-        min_partitions = spark.sparkContext.defaultParallelism
-    total = total_bytes
-    if total is None:
-        total = df.agg(F.sum(F.length(payload_col))).first()[0] or 0
-    n = max(min_partitions, int(total / target_partition_bytes) + 1)
-    return df.repartition(n)
 
 
 def _decode_payload(payload: bytes, modality: str) -> "object":
@@ -269,9 +219,8 @@ def resize_binary(
     the deterministic stand-in the oracle replays: the "resized image" is
     the first ``width*height`` hex chars of the md5 seed repeated —
     DuckDB twin ``md5(substr(repeat(md5(payload), k), 1, w*h))``. Same
-    ``repartition_for_payloads`` + batch-iteration discipline as
-    ``featurize_binary``; a real kernel drops in without touching the
-    Spark side.
+    batch-iteration discipline as ``featurize_binary``; a real kernel
+    drops in without touching the Spark side.
     """
     if kernel not in ("portable", "decode"):
         raise ValueError(f"unknown kernel {kernel!r}")

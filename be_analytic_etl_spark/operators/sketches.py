@@ -132,64 +132,6 @@ def hll_estimate(
     )
 
 
-def hll_distinct(
-    df: DataFrame,
-    group_cols: list[str],
-    value_col: str,
-    p: int = 8,
-    salt: str = "hll",
-    corrected: bool = False,
-    estimate_col: str = "hll_estimate",
-) -> DataFrame:
-    """Per-group HLL distinct estimate of ``value_col`` with ``2^p``
-    registers (standard error ~1.04/sqrt(2^p); p=8 -> ~6.5%)."""
-    regs = hll_registers(df, group_cols, value_col, p, salt)
-    return hll_estimate(regs, group_cols, p, corrected, estimate_col)
-
-
-def hll_sql_twin(
-    table: str,
-    group_cols: list[str],
-    value_expr: str,
-    p: int = 8,
-    salt: str = "hll",
-    estimate_col: str = "hll_estimate",
-) -> str:
-    """Generate the DuckDB SQL computing the bit-identical estimate —
-    kept next to the operator so the two can never drift."""
-    m = 1 << p
-    vbits = HASH_BITS - p
-    mask = (1 << vbits) - 1
-    numerator = repr(_alpha(m) * m * m * float(1 << (vbits + 1)))
-    gcols = ", ".join(group_cols)
-    return f"""
-    WITH hashed AS (
-        SELECT {gcols},
-               CAST('0x' || substr(md5(CAST({value_expr} AS VARCHAR) || '|{salt}'), 1, 15)
-                    AS BIGINT) AS h
-        FROM {table}
-    ),
-    regs AS (
-        SELECT {gcols}, h >> {vbits} AS idx,
-               MAX(CASE WHEN (h & {mask}) = 0 THEN {vbits + 1}
-                        ELSE {vbits + 1} - length(bin(h & {mask})) END) AS m
-        FROM hashed GROUP BY {gcols}, idx
-    ),
-    agg AS (
-        SELECT {gcols},
-               SUM(CAST(1 AS BIGINT) << ({vbits + 1} - m)) AS occ_sum,
-               COUNT(*) AS n_registers_used
-        FROM regs GROUP BY {gcols}
-    )
-    SELECT {gcols},
-           {numerator} / CAST(occ_sum + ({m} - n_registers_used)
-                              * (CAST(1 AS BIGINT) << {vbits + 1}) AS DOUBLE)
-               AS {estimate_col},
-           n_registers_used
-    FROM agg
-    """
-
-
 def countmin_estimates(
     df: DataFrame,
     value_col: str,
@@ -270,7 +212,7 @@ def hll_union_sql_twin(
     """DuckDB twin of the register-merge rollup: per-group estimates
     UNION ALL one 'ALL' row from register-wise-MAX-merged sketches —
     generated from the same parameters as the operator so they can't
-    drift (the ``hll_sql_twin`` discipline)."""
+    drift."""
     m = 1 << p
     vbits = HASH_BITS - p
     mask = (1 << vbits) - 1
@@ -309,65 +251,6 @@ def hll_union_sql_twin(
     """
 
 
-def misra_gries_candidates(
-    df: DataFrame, item_col: str, k: int = 64
-) -> DataFrame:
-    """Per-partition Misra–Gries heavy-hitter candidates (Misra & Gries
-    1982; merge rule from Agarwal et al., "Mergeable Summaries", PODS
-    2012): one-column DataFrame of at most ``k`` candidate items per
-    input partition.
-
-    Within a partition the summary is built by merging each Arrow
-    batch's exact value_counts into the running sketch in vocabulary
-    slices of at most ``k`` items, applying the MG reduction (subtract
-    the (k+1)-th largest count, keep positives) after each slice — each
-    slice's exact counts are themselves a trivial MG summary of that
-    sub-multiset, so every merge-reduce step is the mergeable-summaries
-    operation and the result is a valid MG summary of the whole
-    partition no matter the batch boundaries. Guarantee used
-    downstream: any item with GLOBAL frequency > n/k has, by
-    pigeonhole, LOCAL frequency > n_p/k in at least one partition, and
-    an MG summary with k counters always retains such an item — the
-    union of per-partition candidates is a superset of every global
-    heavy hitter. Transient state is O(k) per partition (<= 2k live
-    counters: <= k surviving + <= k from the slice being merged; the
-    per-batch value_counts itself is Arrow/NumPy columnar, not dict
-    state); output is <= k * n_partitions rows (sketch-sized,
-    broadcastable).
-
-    This is the Arrow-batched Python path (mapInPandas) because the
-    bounded-state scan is genuinely imperative — but it touches only
-    the single item column, and the expensive exact counting stays in
-    the JVM (``heavy_hitters_exact``).
-    """
-    import pandas as pd
-
-    schema = f"{item_col} string"
-
-    def mg(batches):
-        counts: dict[str, int] = {}
-        for pdf in batches:
-            vc = pdf[item_col].dropna().value_counts()
-            items = vc.index.to_list()
-            cs = vc.to_list()
-            for start in range(0, len(items), k):
-                for item, c in zip(
-                    items[start : start + k], cs[start : start + k]
-                ):
-                    counts[item] = counts.get(item, 0) + int(c)
-                if len(counts) > k:
-                    # MG merge-reduce: subtract the (k+1)-th largest.
-                    kth = sorted(counts.values(), reverse=True)[k]
-                    counts = {
-                        i: c - kth for i, c in counts.items() if c > kth
-                    }
-        yield pd.DataFrame({item_col: list(counts.keys())})
-
-    return df.select(F.col(item_col).cast("string").alias(item_col)).mapInPandas(
-        mg, schema
-    )
-
-
 def heavy_hitters_exact(
     df: DataFrame, item_col: str, k: int = 64
 ) -> DataFrame:
@@ -392,13 +275,18 @@ def heavy_hitters_exact(
         F.col("item").isNotNull()
     )
 
-    # Candidate pass variant of ``misra_gries_candidates`` that ALSO
-    # emits each partition's exact item count as a sentinel row
-    # (item=NULL): the total n then comes from the sketch-sized
-    # candidate frame instead of a THIRD full pass over the exploded
-    # item stream (candidates / total / recount — the r13 profile showed
-    # all three re-tokenizing the corpus). Candidate set and n are
-    # value-identical to the separate passes.
+    # Per-partition Misra–Gries candidate pass (Misra & Gries 1982; merge
+    # rule from Agarwal et al., "Mergeable Summaries", PODS 2012). Each
+    # Arrow batch's exact value_counts merge into the running summary in
+    # vocabulary slices of at most k items, with the MG reduction
+    # (subtract the (k+1)-th largest count, keep positives) after each
+    # slice, so the result is a valid MG summary of the partition
+    # whatever the batch boundaries: any item with GLOBAL frequency > n/k
+    # has LOCAL frequency > n_p/k in some partition and survives there.
+    # State is O(k) per partition. The pass ALSO emits the partition's
+    # exact item count as a sentinel row (item=NULL), so the total n
+    # comes from the sketch-sized candidate frame instead of a third
+    # full pass over the item stream.
     def mg_with_total(batches):
         counts: dict[str, int] = {}
         n_p = 0
@@ -555,8 +443,7 @@ def _rank_bounds_from_n(nf: DataFrame, delta: int) -> DataFrame:
 
 def tdigest_clusters_from_hist(hist: DataFrame, delta: int = 32) -> DataFrame:
     """``tdigest_clusters`` from a pre-built (__v, __c) value histogram —
-    the entry point for callers that fan several reads out of ONE
-    (possibly checkpointed) histogram pass (``tdigest_quantile_read``)."""
+    the entry point for callers that hold a plain histogram."""
     # Bounds from the PLAIN histogram (sum(__c) == max(__hi) by
     # construction): a non-checkpointed caller would otherwise evaluate
     # the single-partition ordering window twice — once under the bounds
@@ -816,161 +703,27 @@ def kmins_distinct_sql(item_rows: str, k: int = 64) -> str:
     """
 
 
-def tdigest_quantile_read(
-    df: DataFrame,
-    value_col: str,
-    q_millionths: list[int],
-    delta: int = 32,
-) -> DataFrame:
-    """Quantile READ off the t-digest, self-evaluated against the exact
-    order statistic: per requested quantile q (in integer millionths),
-    (q, rank, est_centroid, exact_value, abs_err).
-
-    The estimate is the centroid of the cluster owning rank
-    r_q = max(1, (n*q + 5e5) div 1e6) — the digest's answer; the exact
-    value is the order statistic read off the SAME value histogram
-    (first __v whose cumulative count reaches r_q), so the emitted
-    abs_err IS the digest's measured error at that q. One corpus pass:
-    the CUMULATIVE histogram is eagerly checkpointed once and the
-    cluster build and the exact lookup both read it (one ordering
-    window total). The rank joins are inequality
-    joins against BROADCAST frames of |qs| and delta rows — bounded
-    nested loops, corpus-independent.
-    """
-    hist = (
-        df.filter(F.col(value_col).isNotNull())
-        .groupBy(F.col(value_col).alias("__v"))
-        .agg(F.count(F.lit(1)).cast("long").alias("__c"))
-    )
-    # ONE cumulative ordering pass shared by the cluster build and the
-    # exact read (same refactor as tdigest_panel; eager because the
-    # consumers are concurrent broadcast-build jobs; repartitioned so the
-    # rank-range joins don't run on the window's single partition).
-    spread = hist.sparkSession.sparkContext.defaultParallelism
-    cum = tdigest_cum(hist).repartition(spread).localCheckpoint(eager=True)
-    clus = tdigest_clusters_from_cum(cum, delta).localCheckpoint(eager=True)
-    w_c = Window.orderBy("cluster").rowsBetween(Window.unboundedPreceding, 0)
-    cspan = clus.select(
-        "cluster",
-        "weight",
-        "centroid",
-        F.sum("weight").over(w_c).cast("long").alias("__chi"),
-    ).withColumn("__clo", F.col("__chi") - F.col("weight") + 1)
-    tot = cum.agg(F.max("__hi").cast("long").alias("__n"))
-    qarr = F.array(*[F.lit(q).cast("long") for q in q_millionths])
-    ranks = tot.select(
-        "__n", F.explode(qarr).alias("q_millionths")
-    ).select(
-        "q_millionths",
-        F.greatest(
-            F.lit(1).cast("long"),
-            F.expr("(__n * q_millionths + 500000L) DIV 1000000L"),
-        ).alias("rank"),
-    )
-    est = ranks.join(
-        F.broadcast(cspan),
-        (F.col("rank") >= F.col("__clo")) & (F.col("rank") <= F.col("__chi")),
-    ).select("q_millionths", "rank", F.col("centroid").alias("est_centroid"))
-    exact = cum.join(
-        F.broadcast(ranks),
-        (F.col("rank") >= F.col("__lo")) & (F.col("rank") <= F.col("__hi")),
-    ).select("q_millionths", F.col("__v").cast("long").alias("exact_value"))
-    from be_analytic_etl_spark.functions.rounding import stable_round
-
-    out = est.join(exact, "q_millionths")
-    return out.select(
-        (F.col("q_millionths").cast("double") / 1000000.0).alias("q"),
-        "rank",
-        "est_centroid",
-        "exact_value",
-        stable_round(
-            F.abs(
-                F.col("est_centroid") - F.col("exact_value").cast("double")
-            ),
-            6,
-        ).alias("abs_err"),
-    )
-
-
-def tdigest_quantile_read_sql(
-    value_rows: str, q_millionths: list[int], delta: int = 32
-) -> str:
-    """DuckDB twin of ``tdigest_quantile_read``."""
-    from be_analytic_etl_spark.functions.rounding import stable_round_sql
-
-    clus = tdigest_clusters_sql(value_rows, delta)
-    qvals = ", ".join(f"({q})" for q in q_millionths)
-    err = stable_round_sql(
-        "ABS(est_centroid - CAST(exact_value AS DOUBLE))", 6
-    )
-    return f"""
-    tq_clus AS (WITH {clus}),
-    tq_h AS (
-        SELECT v AS __v, CAST(COUNT(*) AS BIGINT) AS __c
-        FROM ({value_rows}) WHERE v IS NOT NULL GROUP BY 1
-    ),
-    tq_tot AS (SELECT CAST(SUM(__c) AS BIGINT) AS __n FROM tq_h),
-    tq_q (qm) AS (VALUES {qvals}),
-    tq_r AS (
-        SELECT qm,
-               GREATEST(1, (__n * qm + 500000) // 1000000) AS rank
-        FROM tq_q, tq_tot
-    ),
-    tq_cs AS (
-        SELECT centroid,
-               CAST(SUM(weight) OVER (ORDER BY cluster) AS BIGINT) AS __chi,
-               CAST(SUM(weight) OVER (ORDER BY cluster) - weight + 1
-                    AS BIGINT) AS __clo
-        FROM tq_clus
-    ),
-    tq_hc AS (
-        SELECT __v,
-               CAST(SUM(__c) OVER (ORDER BY __v) AS BIGINT) AS __hhi,
-               CAST(SUM(__c) OVER (ORDER BY __v) - __c + 1 AS BIGINT)
-                   AS __hlo
-        FROM tq_h
-    ),
-    tq_est AS (
-        SELECT r.qm, r.rank, cs.centroid AS est_centroid
-        FROM tq_r r JOIN tq_cs cs
-          ON r.rank >= cs.__clo AND r.rank <= cs.__chi
-    ),
-    tq_ex AS (
-        SELECT r.qm, CAST(h.__v AS BIGINT) AS exact_value
-        FROM tq_r r JOIN tq_hc h
-          ON r.rank >= h.__hlo AND r.rank <= h.__hhi
-    )
-    SELECT CAST(e.qm AS DOUBLE) / 1000000.0 AS q,
-           e.rank, e.est_centroid, x.exact_value,
-           {err} AS abs_err
-    FROM tq_est e JOIN tq_ex x ON e.qm = x.qm
-    """
-
-
 def tdigest_panel(
     df: DataFrame,
     value_col: str,
     q_millionths: list[int],
     delta: int = 32,
 ) -> DataFrame:
-    """The merged write+read t-digest readout (round-11 registry merge of
-    ``ext_tdigest_quantiles`` + ``ext_tdigest_read``): one row per digest
-    CLUSTER — the full summary ``tdigest_clusters`` emits (cluster,
-    weight, centroid, v_min, v_max) — widened with the quantile READ
-    path aggregated onto each cluster that owns one of the requested
-    ranks: ``n_q_owned`` (how many of ``q_millionths`` this cluster
-    answers), ``rank_sum`` / ``exact_sum`` (BIGINT checksums of the
-    owned ranks and their exact order statistics off the same
-    histogram), and ``err_max`` (the digest's worst measured |centroid -
-    exact| over the owned quantiles, 6dp; NULL when the cluster owns
-    none).
+    """The write+read t-digest readout: one row per digest CLUSTER — the
+    full summary ``tdigest_clusters`` emits (cluster, weight, centroid,
+    v_min, v_max) — widened with the quantile READ path aggregated onto
+    each cluster that owns one of the requested ranks: ``n_q_owned``
+    (how many of ``q_millionths`` this cluster answers), ``rank_sum`` /
+    ``exact_sum`` (BIGINT checksums of the owned ranks and their exact
+    order statistics off the same histogram), and ``err_max`` (the
+    digest's worst measured |centroid - exact| over the owned quantiles,
+    6dp; NULL when the cluster owns none).
 
     ONE corpus pass: the CUMULATIVE value histogram is eagerly
     checkpointed once and the cluster build, the rank lookups, and the
-    exact order statistics all read it (one ordering window total). The rank joins are inequality joins against
-    BROADCAST frames of |qs| and delta rows — bounded nested loops,
-    corpus-independent (same shapes the r8 audit allowlisted for the
-    two parents).
+    exact order statistics all read it (one ordering window total). The
+    rank joins are inequality joins against BROADCAST frames of |qs| and
+    delta rows — bounded nested loops, corpus-independent.
     """
     from be_analytic_etl_spark.functions.rounding import stable_round
 

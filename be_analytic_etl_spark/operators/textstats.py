@@ -278,16 +278,17 @@ def redaction_count(col: Column | str) -> Column:
     return total
 
 
-def normalize_text(col: Column | str) -> Column:
+def fingerprint_text(col: Column | str) -> Column:
     """Canonical form for fingerprinting: trim, lowercase, collapse runs of
-    whitespace to single spaces."""
+    whitespace to single spaces. (``normalize.normalize_text`` is the
+    unrelated mojibake/Unicode repair of the pipeline's normalize stage.)"""
     c = F.col(col) if isinstance(col, str) else col
     return F.regexp_replace(F.lower(F.trim(F.coalesce(c, F.lit("")))), WS_PLUS, " ")
 
 
 def fingerprint_md5(col: Column | str) -> Column:
     """Deterministic document fingerprint: md5 of the normalized text."""
-    return F.md5(normalize_text(col).cast("binary"))
+    return F.md5(fingerprint_text(col).cast("binary"))
 
 
 def _let_tokens_sql(c: str, body: str) -> str:

@@ -411,23 +411,6 @@ def _simhash_sql_body() -> str:
     )"""
 
 
-def q_ext_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # RETIRED from the registry in round 11: merged with
-    # ext_simhash_neardup into ext_simhash_panel (queries_round11.py).
-    # Kept as a helper — pytest still pins the raw fingerprint path.
-    return D.simhash(_t(spark, sf_dir, "documents"), portable=True)
-
-
-_SIMHASH_MAXHAM = 6
-
-
-def q_ext_simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # RETIRED from the registry in round 11 (merged: see above).
-    return D.simhash_neardup_pairs(
-        _t(spark, sf_dir, "documents"), max_hamming=_SIMHASH_MAXHAM, portable=True
-    )
-
-
 # ---------------------------------------------------------------------------
 # Similarity search: exact brute-force cosine top-k (baseline path). The
 # query set broadcasts; one narrow pass over the embedding table; per-query
@@ -1358,42 +1341,6 @@ register(
 
 
 # ---------------------------------------------------------------------------
-# HyperLogLog distinct sketch (operators/sketches.py): per-event-type user
-# cardinality, p=8 (256 registers, ~6.5% SE), alongside the exact count so
-# the estimate's error is visible. The oracle computes the *identical*
-# estimate (portable md5 hash, integer-exact register sums, one final
-# division) via hll_sql_twin — generated from the same parameters, so
-# operator and oracle cannot drift.
-# RETIRED from the registry in round 11: merged with ext_hll_union into
-# ext_hll_panel (queries_round11.py — the register-merge rollup carrying
-# the exact count alongside each estimate). Kept for pytest coverage.
-def q_ext_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from be_analytic_etl_spark.operators.sketches import hll_distinct
-
-    ev = _t(spark, sf_dir, "events")
-    sketch = hll_distinct(ev, ["event_type"], "user_id", p=8)
-    exact = ev.groupBy("event_type").agg(
-        F.countDistinct("user_id").alias("exact_users")
-    )
-    return sketch.join(exact, "event_type")
-
-
-def _hll_oracle() -> str:
-    from be_analytic_etl_spark.operators.sketches import hll_sql_twin
-
-    twin = hll_sql_twin("events", ["event_type"], "user_id", p=8)
-    return f"""
-    WITH sketch AS ({twin}),
-    exact AS (
-        SELECT event_type, COUNT(DISTINCT user_id) AS exact_users
-        FROM events GROUP BY event_type
-    )
-    SELECT s.event_type, s.hll_estimate, s.n_registers_used, e.exact_users
-    FROM sketch s JOIN exact e USING (event_type)
-    """
-
-
-# ---------------------------------------------------------------------------
 # K-means clustering (operators/clustering.py): 2 Lloyd iterations over the
 # embeddings table in exact quantized arithmetic — assignment is map-only
 # with literal centroids, update is one partial-agg groupBy; the DuckDB
@@ -1533,68 +1480,16 @@ register("ext_zorder", q_ext_zorder, _zorder_oracle())
 #   -> connected components -> one representative per dup group
 #   -> deterministic train/val/test split
 # and value-checked END TO END by a single DuckDB oracle (the LSH CTE
-# chain feeding a recursive-CTE transitive closure). Every stage shuffles
-# only ids/hashes, never documents; stages fuse into ~4 shuffle
-# boundaries under AQE.
+# chain feeding a recursive-CTE transitive closure). The chain is built by
+# the pipeline composer (queries_textprep.q_ext_pipeline_spec, registered
+# as ext_pipeline_e2e). Every stage shuffles only ids/hashes, never
+# documents; stages fuse into ~4 shuffle boundaries under AQE.
 _PIPE_MIN_CHARS = 40
 _PIPE_MIN_TOKENS = 5
 
 
-def q_ext_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # RETIRED from the registry in round 11: merged with
-    # ext_pipeline_spec into ext_pipeline_e2e (queries_round11.py), which
-    # drives the SAME chain through the composer against the SAME
-    # recursive-CTE oracle (PIPELINE_ORACLE_SQL below). The hand-built
-    # chain stays as this helper; its row-for-row parity with the
-    # composer is pinned by tests/test_pipeline_composer.py.
-    from be_analytic_etl_spark.operators import graph as G
-    from be_analytic_etl_spark.operators import sampling as SP
-
-    from pyspark import StorageLevel
-
-    docs = _t(spark, sf_dir, "documents")
-    base = docs.select(
-        "doc_id", "text", "lang", F.size(T.tokenize("text")).alias("n_tokens")
-    ).filter(
-        (F.col("n_chars") >= _PIPE_MIN_CHARS) & (F.size(T.tokenize("text")) >= _PIPE_MIN_TOKENS)
-    )
-    # base feeds BOTH the keep-min derivation and the join probe side;
-    # persist so the documents scan + tokenize + gates run once — the
-    # same materialized-gate discipline the composer's exact_dedup stage
-    # applies (judge ask r8 #4; release via session.cached_scope).
-    base = base.persist(StorageLevel.MEMORY_AND_DISK)
-    # No eager count: the keep-min aggregate and the probe join consume
-    # base within one action tree; the r13 blanket count() serialized an
-    # extra full pass and measurably regressed ext_pipeline_e2e (r13
-    # verdict item 1 — reverted on min-of-5 evidence, plans/r14).
-    survivors = base.join(
-        D.exact_dedup_keep_min(base).select(F.col("keep_id").alias("doc_id")),
-        "doc_id",
-    )
-    # survivors feeds LSH pair generation AND the representative join —
-    # four downstream references in total; unpersisted, each re-runs the
-    # documents scan + tokenize + exact-dedup join. Persist once (spills;
-    # release via session.cached_scope in long-lived sessions).
-    survivors = survivors.persist(StorageLevel.MEMORY_AND_DISK)
-    pairs = D.minhash_lsh_pairs(
-        survivors,
-        num_hashes=_MH_HASHES,
-        bands=_LSH_BANDS,
-        shingle_n=_MH_SHINGLE,
-        jaccard_threshold=_LSH_THRESH,
-        max_bucket=_LSH_MAXBUCKET,
-        portable=True,
-        round_to=None,
-    )
-    final = G.dedup_group_representatives(survivors, pairs, "doc_id")
-    return final.select(
-        "doc_id", "lang", "n_tokens", SP.assign_split("doc_id").alias("split")
-    )
-
-
 #: the end-to-end curation-chain oracle (LSH CTE chain feeding a
-#: recursive-CTE transitive closure) — shared by the round-11 merged
-#: registration ext_pipeline_e2e and the composer parity pytest.
+#: recursive-CTE transitive closure) of ext_pipeline_e2e.
 PIPELINE_ORACLE_SQL = (
     f"""
     WITH RECURSIVE

@@ -1,38 +1,28 @@
 """Round-11 registry merges: four pairs of near-duplicate queries, each
-collapsed into ONE query with the union readout:
+collapsed into ONE query with the union readout. The parent queries and
+their helpers are deleted; each panel below is the only implementation
+and is value-checked against its own oracle.
 
-- ``ext_tdigest_panel``  = ext_tdigest_quantiles + ext_tdigest_read —
-  one row per digest cluster (the full write-path summary) widened with
-  the quantile READ path aggregated onto the owning cluster (owned-q
-  count, rank/exact checksums, worst measured error).
-- ``ext_simhash_panel``  = ext_simhash + ext_simhash_neardup — one row
-  per document: the verbatim 60-bit fingerprint plus the near-dup pair
-  leg folded symmetrically onto each endpoint (partner count, closest
-  hamming distance).
-- ``ext_hll_panel``      = ext_hll_distinct + ext_hll_union — the
-  register-merge rollup (per-source scopes + the register-wise-MAX 'ALL'
-  row) widened with the exact distinct count per scope, so the
-  estimate's error is visible (the ext_hll_distinct readout) on the
-  union substrate (the ext_hll_union shape).
-- ``ext_pipeline_e2e``   = ext_pipeline + ext_pipeline_spec — the
-  end-to-end curation chain driven through the pipeline COMPOSER
-  (pipeline.run_pipeline), value-checked against the same recursive-CTE
-  oracle both parents shared. The hand-built-chain vs composer parity
-  the two registrations used to prove via the shared oracle now lives
-  in pytest (tests/test_pipeline_composer.py::test_composer_matches_
-  hand_built_chain), which compares the two plans row-for-row.
+- ``ext_tdigest_panel``: one row per t-digest cluster (the full write-path
+  summary) widened with the quantile READ path aggregated onto the
+  owning cluster (owned-q count, rank/exact checksums, worst measured
+  error).
+- ``ext_simhash_panel``: one row per document: the verbatim 60-bit
+  fingerprint plus the near-dup pair leg folded symmetrically onto each
+  endpoint (partner count, closest hamming distance).
+- ``ext_hll_panel``: the register-merge rollup (per-source scopes + the
+  register-wise-MAX 'ALL' row) widened with the exact distinct count per
+  scope, so the estimate's error is visible.
+- ``ext_pipeline_e2e``: the end-to-end curation chain driven through the
+  pipeline COMPOSER (pipeline.run_pipeline), value-checked against the
+  recursive-CTE oracle ``PIPELINE_ORACLE_SQL``.
 
-Merge discipline (VERDICT r10 ask #3): no merged query double-pays its
-substrate — the t-digest panel fans every leg out of ONE lazy-
-checkpointed value histogram, the simhash panel persists the fingerprint
-aggregation once for both the bucket join and the readout, the HLL panel
-reuses the checkpointed register frame for both scopes, and the pipeline
-run is a single chain.
-
-Reference for the underlying operator semantics: see the parent
-queries' docstrings (queries_round8.py, queries_extensions.py,
-queries_round5.py, queries_textprep.py) — unchanged, only the readouts
-merged.
+Merge discipline: no merged query double-pays its substrate — the
+t-digest panel fans every leg out of ONE eagerly checkpointed cumulative
+histogram, the simhash panel persists the fingerprint aggregation once
+for both the bucket join and the readout, the HLL panel reuses the
+checkpointed register frame for both scopes, and the pipeline run is a
+single chain.
 """
 
 from __future__ import annotations
@@ -45,7 +35,7 @@ from be_analytic_etl_spark.queries_extensions import _simhash_sql_body, _t
 from be_analytic_etl_spark.registry import register
 
 # ---------------------------------------------------------------------------
-# 1. t-digest write+read panel (parents' parameters unchanged).
+# 1. t-digest write+read panel.
 
 _TD_DELTA = 32
 _TD_READ_Q = [10_000, 100_000, 250_000, 500_000, 750_000, 900_000, 990_000]
@@ -70,8 +60,8 @@ register("ext_tdigest_panel", q_ext_tdigest_panel, _tdigest_panel_oracle())
 
 
 # ---------------------------------------------------------------------------
-# 2. SimHash fingerprint + near-dup panel (parents' parameters unchanged:
-#    portable 60-bit hash, 4-chunk pigeonhole, hamming <= 6).
+# 2. SimHash fingerprint + near-dup panel: portable 60-bit hash, 4-chunk
+#    pigeonhole, hamming <= 6.
 
 _SIMHASH_MAXHAM = 6
 _SIMHASH_MAXBUCKET = 1000
@@ -128,8 +118,8 @@ register(
 
 
 # ---------------------------------------------------------------------------
-# 3. HLL register-merge rollup + exact-error panel (parents' parameters
-#    unchanged: p=8, salt='hllu', distinct TEXT per source on documents).
+# 3. HLL register-merge rollup + exact-error panel: p=8, salt='hllu',
+#    distinct TEXT per source on documents.
 
 _HLL_P = 8
 _HLL_SALT = "hllu"
@@ -205,8 +195,8 @@ register("ext_hll_panel", q_ext_hll_panel, _hll_panel_oracle())
 
 
 # ---------------------------------------------------------------------------
-# 4. End-to-end curation pipeline, composer-driven (parents' spec and
-#    recursive-CTE oracle unchanged).
+# 4. End-to-end curation pipeline, composer-driven (spec in
+#    queries_textprep.q_ext_pipeline_spec).
 
 
 def q_ext_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:

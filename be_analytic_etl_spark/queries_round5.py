@@ -1134,55 +1134,6 @@ register("ext_dsir_sample", q_ext_dsir_sample, _dsir_oracle())
 
 
 # ---------------------------------------------------------------------------
-# HLL register-merge rollup: per-source distinct-document sketches union
-# into the corpus sketch by register-wise MAX — the mergeability that
-# lets per-shard / per-day sketches roll up at 100 TB without re-reading
-# raw data (max is associative, so the merged registers are EXACTLY the
-# registers of the combined data). Emits per-source estimates plus the
-# merged 'ALL' row; integer-exact register sums, one final double
-# division (engine-identical, no rounding needed).
-_HLLU_P = 8
-_HLLU_SALT = "hllu"
-
-
-def q_ext_hll_union(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from be_analytic_etl_spark.operators.sketches import (
-        hll_estimate,
-        hll_merge_registers,
-        hll_registers,
-    )
-
-    docs = _t(spark, sf_dir, "documents")
-    # lazy checkpoint: both union branches reference regs — without it
-    # each branch would re-scan the corpus; with it the sketch-sized
-    # register frame (<= 2^p rows per source) materializes once.
-    regs = hll_registers(
-        docs, ["source"], "text", p=_HLLU_P, salt=_HLLU_SALT
-    ).localCheckpoint(eager=False)
-    scoped = regs.select(
-        F.col("source").cast("string").alias("scope"), "__idx", "__m"
-    ).unionByName(
-        hll_merge_registers(regs, []).select(
-            F.lit("ALL").alias("scope"), "__idx", "__m"
-        )
-    )
-    return hll_estimate(scoped, ["scope"], p=_HLLU_P)
-
-
-def _hll_union_oracle() -> str:
-    from be_analytic_etl_spark.operators.sketches import hll_union_sql_twin
-
-    return hll_union_sql_twin(
-        "documents", "source", "text", p=_HLLU_P, salt=_HLLU_SALT
-    )
-
-
-# RETIRED from the registry in round 11: merged with ext_hll_distinct
-# into ext_hll_panel (queries_round11.py) — the same register-merge
-# rollup, widened with the exact distinct count per scope.
-
-
-# ---------------------------------------------------------------------------
 # Per-language quality calibration: raw quality scores are not comparable
 # across languages (stopword lists, punctuation norms differ), so
 # curation thresholds the per-lang PERCENTILE, not the raw score.
@@ -1856,7 +1807,7 @@ register(
 # Time-windowed HLL: daily distinct-user sketches per event type — the
 # window x sketch composition every metrics pipeline runs (and, because
 # registers merge by MAX, daily sketches roll up to weekly/monthly
-# without rescanning — ext_hll_union proves that algebra). State is
+# without rescanning — ext_hll_panel's 'ALL' row uses that algebra). State is
 # (days x types x <= 2^p registers); estimate math is integer-exact up
 # to one division.
 _WHLL_P = 6

@@ -4,11 +4,6 @@ The mergeable-sketch and drift/monitoring gaps the round-7 window plan
 named (registry.py "Round-8 window plan"), plus ranking-eval and
 PII-audit companions to the existing eval family:
 
-- ``ext_tdigest_quantiles``: deterministic t-digest-style quantile
-  summary (Dunning & Ertl 2019 arcsine scale function) over the order
-  value distribution — the planned "t-digest-style mergeable quantile
-  sketch with a portable oracle". Host-quantized boundaries make the
-  digest order-free and bit-identical cross-engine.
 - ``ext_kmins_distinct``: k-mins cardinality sketch (Cohen, JCSS 1997)
   per event type + the merged ALL row — the mergeable distinct-count
   companion to HLL that a SQL oracle can replay exactly.
@@ -34,8 +29,8 @@ PII-audit companions to the existing eval family:
 Float discipline (SCALE.md, all five divergence classes checked):
 corpus accumulations are BIGINT/DECIMAL exact; libm terms (ln) quantize
 via ``stable_round`` to DECIMAL(18,6) BEFORE any sum; constants that
-would need libm inside the engines (t-digest boundaries, Benford
-expectations, DCG discounts) are quantized HOST-side and embedded as
+would need libm inside the engines (Benford expectations, DCG
+discounts) are quantized HOST-side and embedded as
 identical literals in both plans; emitted doubles are single IEEE
 divisions of exact integers/decimals or quantized at the source.
 """
@@ -53,37 +48,6 @@ from be_analytic_etl_spark.operators.similarity import PROBE_WHERE_SQL
 from be_analytic_etl_spark.operators import textstats as T
 from be_analytic_etl_spark.queries_extensions import _TOKS, _dot_sql, _t
 from be_analytic_etl_spark.registry import register
-
-# ---------------------------------------------------------------------------
-# t-digest-style quantile summary of the order value distribution.
-_TD_DELTA = 32
-
-
-def q_ext_tdigest_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from be_analytic_etl_spark.operators.sketches import tdigest_clusters
-
-    # No spread: the corpus stage is floor+count (trivial per row), so
-    # a repartition exchange costs more than the single-task map saves
-    # (measured: spread 1.0s vs direct 0.6s at sf0.1); the groupBy's
-    # reduce side is 32-way parallel either way.
-    orders = _t(spark, sf_dir, "orders")
-    vals = orders.select(
-        F.floor("o_totalprice").cast("long").alias("v")
-    )
-    return tdigest_clusters(vals, "v", delta=_TD_DELTA)
-
-
-def _tdigest_oracle() -> str:
-    from be_analytic_etl_spark.operators.sketches import tdigest_clusters_sql
-
-    rows = "SELECT CAST(FLOOR(o_totalprice) AS BIGINT) AS v FROM orders"
-    return "WITH " + tdigest_clusters_sql(rows, delta=_TD_DELTA).strip()
-
-
-# RETIRED from the registry in round 11: merged with ext_tdigest_read
-# into ext_tdigest_panel (queries_round11.py) — the same digest, widened
-# with the read path folded onto each owning cluster.
-
 
 # ---------------------------------------------------------------------------
 # k-mins distinct-count sketch per event type + merged ALL row.
@@ -1038,37 +1002,7 @@ register("ext_dow_seasonality", q_ext_dow_seasonality, _dow_oracle())
 
 
 # ===========================================================================
-# Round-8 batch 3: sketch READ path + corpus-shape text diagnostics.
-
-# ---------------------------------------------------------------------------
-# Quantile read off the t-digest, self-evaluated against the exact order
-# statistic from the SAME (checkpointed) histogram pass — the companion
-# that makes ext_tdigest_quantiles a write+read sketch pair and emits
-# the digest's measured error per quantile.
-_TD_READ_Q = [10_000, 100_000, 250_000, 500_000, 750_000, 900_000, 990_000]
-
-
-def q_ext_tdigest_read(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from be_analytic_etl_spark.operators.sketches import tdigest_quantile_read
-
-    orders = _t(spark, sf_dir, "orders")
-    vals = orders.select(F.floor("o_totalprice").cast("long").alias("v"))
-    return tdigest_quantile_read(vals, "v", _TD_READ_Q, delta=_TD_DELTA)
-
-
-def _tdigest_read_oracle() -> str:
-    from be_analytic_etl_spark.operators.sketches import (
-        tdigest_quantile_read_sql,
-    )
-
-    rows = "SELECT CAST(FLOOR(o_totalprice) AS BIGINT) AS v FROM orders"
-    return "WITH " + tdigest_quantile_read_sql(
-        rows, _TD_READ_Q, delta=_TD_DELTA
-    ).strip()
-
-
-# RETIRED from the registry in round 11 (merged: see ext_tdigest_panel).
-
+# Round-8 batch 3: corpus-shape text diagnostics.
 
 # ---------------------------------------------------------------------------
 # Zipf slope: OLS fit of ln(tf) on ln(rank) over the top-K tokens

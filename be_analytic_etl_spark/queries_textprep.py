@@ -390,11 +390,10 @@ register("ext_preference_pairs", q_ext_preference_pairs, _pref_oracle())
 
 
 # ---------------------------------------------------------------------------
-# ext_pipeline_spec: the SAME end-to-end curation chain as ext_pipeline,
-# but declared as a JSON-able pipeline spec and composed by
-# pipeline.run_pipeline — registered against the SAME recursive-CTE
-# oracle, so the driver proves the composer reproduces the hand-built
-# chain value-for-value (rows, schema, hash).
+# ext_pipeline_spec: the end-to-end curation chain declared as a JSON-able
+# pipeline spec and composed by pipeline.run_pipeline; registered as
+# ext_pipeline_e2e (queries_round11.py) against the recursive-CTE oracle
+# PIPELINE_ORACLE_SQL.
 
 def q_ext_pipeline_spec(spark: SparkSession, sf_dir: str) -> DataFrame:
     from be_analytic_etl_spark.operators.textstats import tokenize
@@ -428,12 +427,6 @@ def q_ext_pipeline_spec(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select(
         "doc_id", "lang", F.size(tokenize("text")).alias("n_tokens"), "split"
     )
-
-
-# RETIRED from the registry in round 11: merged with ext_pipeline into
-# ext_pipeline_e2e (queries_round11.py), registered against the shared
-# PIPELINE_ORACLE_SQL. q_ext_pipeline_spec stays — it IS the merged
-# query's implementation.
 
 
 # ---------------------------------------------------------------------------

@@ -402,9 +402,6 @@ def tidy_decimal_strings(df: DataFrame, skip_cols: list[str]) -> DataFrame:
     )
 
 
-LONG_SCHEMA_COLS = ["GRUPO_ECONOMICO", "VARIAVEL", "OPERADORA", "REFERENCIA_MES", "VALOR", "SERVICO"]
-
-
 def _to_long_sql(
     df: DataFrame, cols: list[str], names: list[str], service: str
 ) -> DataFrame | None:

@@ -395,17 +395,22 @@ def test_hll_estimate_within_error_bound(spark):
     """p=10 -> SE ~3.25%; the estimate of a known cardinality must land
     within 4 standard errors, and the corrected path must kick in for
     small cardinalities (linear counting)."""
-    from be_analytic_etl_spark.operators.sketches import hll_distinct
+    from be_analytic_etl_spark.operators.sketches import (
+        hll_estimate,
+        hll_registers,
+    )
 
     n = 20_000
     df = spark.range(n).select(
         F.lit("g").alias("g"), (F.col("id") % 5000).alias("v")
     )
-    est = hll_distinct(df, ["g"], "v", p=10).collect()[0]["hll_estimate"]
+    regs = hll_registers(df, ["g"], "v", p=10)
+    est = hll_estimate(regs, ["g"], p=10).collect()[0]["hll_estimate"]
     assert abs(est - 5000) / 5000 < 4 * 1.04 / (1 << 5), est  # 4*SE(p=10)
 
     small = spark.range(30).select(F.lit("g").alias("g"), F.col("id").alias("v"))
-    est_corr = hll_distinct(small, ["g"], "v", p=10, corrected=True).collect()[0][
+    small_regs = hll_registers(small, ["g"], "v", p=10)
+    est_corr = hll_estimate(small_regs, ["g"], p=10, corrected=True).collect()[0][
         "hll_estimate"
     ]
     assert abs(est_corr - 30) / 30 < 0.2, est_corr

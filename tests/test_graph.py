@@ -7,6 +7,7 @@ where propagation depth, isolated nodes, and component merging are exact.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from be_analytic_etl_spark.operators.graph import (
@@ -171,47 +172,27 @@ def test_transitive_ancestors_known_tree(spark):
 
 
 def test_transitive_ancestors_cycle_raises(spark):
-    import pytest as _pytest
-
     from be_analytic_etl_spark.operators.hierarchy import transitive_ancestors
 
     cyc = spark.createDataFrame([(1, 2), (2, 1)], "child long, parent long")
-    with _pytest.raises(RuntimeError):
+    with pytest.raises(RuntimeError):
         transitive_ancestors(cyc, max_iter=5)
 
 
-# --- large-star/small-star fallback -----------------------------------------
+# --- distributed propagation (forced with driver_solve_edges=0) -------------
 
 
-def test_star_cc_matches_propagation_on_random_graph(spark):
-    import random
-
-    rng = random.Random(7)
-    edges = [(rng.randrange(200), rng.randrange(200)) for _ in range(150)]
-    e = spark.createDataFrame(edges, "id_a long, id_b long")
-    prop = {
-        (r["id"], r["group_id"])
-        for r in connected_components(e).collect()
-    }
-    star = {
-        (r["id"], r["group_id"])
-        for r in connected_components(e, algorithm="star").collect()
-    }
-    assert star == prop
-
-
-def test_star_cc_converges_logarithmically_on_path_graph(spark):
-    """A path of length 1000 needs ~1000 propagation rounds; the star
-    contraction must finish in O(log^2 n) — well under 20."""
+def test_propagation_converges_logarithmically_on_path_graph(spark):
+    """Plain min-label propagation needs ~1000 rounds on a 1000-edge path;
+    the per-round pointer jump must finish in near-logarithmic rounds —
+    well under 20 (10 measured)."""
     n = 1000
     e = spark.createDataFrame(
         [(i, i + 1) for i in range(n)], "id_a long, id_b long"
     )
     stats: dict = {}
-    labels = connected_components(
-        e, algorithm="star", max_iter=30, stats=stats
-    )
-    assert stats["rounds"] < 20, stats
+    labels = connected_components(e, stats=stats, driver_solve_edges=0)
+    assert 1 <= stats["rounds"] < 20, stats
     got = labels.agg(
         F.count(F.lit(1)).alias("n"), F.countDistinct("group_id").alias("g")
     ).first()
@@ -220,11 +201,23 @@ def test_star_cc_converges_logarithmically_on_path_graph(spark):
     assert labels.filter(F.col("group_id") != 0).count() == 0
 
 
-def test_star_cc_isolated_nodes_and_stats(spark):
+def test_propagation_that_does_not_converge_raises(spark):
+    """A path that needs more than max_iter rounds must fail loudly, not
+    return a partial labeling (3 rounds left 987 groups on this path)."""
+    e = spark.createDataFrame(
+        [(i, i + 1) for i in range(1000)], "id_a long, id_b long"
+    )
+    with pytest.raises(RuntimeError, match=r"max_iter=3.*round 3"):
+        connected_components(e, max_iter=3, driver_solve_edges=0)
+
+
+def test_distributed_cc_isolated_nodes_and_stats(spark):
     e = spark.createDataFrame([(1, 2), (2, 3), (10, 11)], "id_a long, id_b long")
     nodes = spark.range(0, 15).select(F.col("id"))
     stats: dict = {}
-    labels = connected_components(e, nodes=nodes, algorithm="star", stats=stats)
+    labels = connected_components(
+        e, nodes=nodes, stats=stats, driver_solve_edges=0
+    )
     got = {r["id"]: r["group_id"] for r in labels.collect()}
     assert got[1] == got[2] == got[3] == 1
     assert got[10] == got[11] == 10
@@ -253,6 +246,25 @@ def test_driver_union_find_matches_distributed_propagation(spark):
     assert stats_fast["rounds"] == 0  # took the union-find path
     assert stats_dist["rounds"] >= 1  # took the iterative path
     assert sorted(map(tuple, fast.collect())) == sorted(map(tuple, dist.collect()))
+
+
+def test_star_cc_matches_propagation_on_random_graph(spark):
+    """Endpoint-only labelling (no node universe) on a sparse random graph
+    with many small components: the default path and the forced
+    distributed propagation must return the same (id, group_id) set."""
+    import random
+
+    rng = random.Random(7)
+    edges = [(rng.randrange(200), rng.randrange(200)) for _ in range(150)]
+    e = spark.createDataFrame(edges, "id_a long, id_b long")
+    default = {
+        (r["id"], r["group_id"]) for r in connected_components(e).collect()
+    }
+    prop = {
+        (r["id"], r["group_id"])
+        for r in connected_components(e, driver_solve_edges=0).collect()
+    }
+    assert default == prop
 
 
 def test_driver_cc_result_does_not_reexecute_edge_plan(spark):

@@ -6,7 +6,6 @@ from __future__ import annotations
 import json
 
 import pytest
-from pyspark.sql import functions as F
 
 from be_analytic_etl_spark.pipeline import STAGES, run_pipeline
 
@@ -71,6 +70,21 @@ def test_every_registered_stage_has_docstring():
         assert fn.__doc__, name
 
 
+def test_cli_examples_name_registered_queries():
+    """Every query the CLI docstring's examples run, explain or lint is
+    registered — a stale example exits 2 with "unknown query"."""
+    import re
+
+    from be_analytic_etl_spark import __main__ as cli
+    from be_analytic_etl_spark.registry import QUERIES
+
+    named = re.findall(
+        r"python -m be_analytic_etl_spark (?:run|explain|lint) (\w+)", cli.__doc__
+    )
+    assert named
+    assert [n for n in named if n not in QUERIES] == []
+
+
 def test_cli_list_and_run(tmp_path, capsys):
     from be_analytic_etl_spark.__main__ import main
 
@@ -87,20 +101,3 @@ def test_cli_pipeline_spec(tmp_path, spark):
     p.write_text(json.dumps(spec))
     # NOTE: main() stops the session; run last in the module.
     assert main(["pipeline", "--spec", str(p), "--sf-dir", SF_DIR, "--show", "3"]) == 0
-
-
-def test_composer_matches_hand_built_chain(spark):
-    """Round-11 merge invariant: ext_pipeline (hand-built chain helper)
-    and the composer-driven ext_pipeline_e2e used to be two separate
-    registrations proving each other through the shared recursive-CTE
-    oracle; since the merge only the composer form is driver-checked, so
-    the hand-built parity is pinned HERE, row for row."""
-    from be_analytic_etl_spark.queries_extensions import q_ext_pipeline
-    from be_analytic_etl_spark.registry import QUERIES
-
-    sf_dir = "/root/testdata/sf0.001"
-    hand = {tuple(r) for r in q_ext_pipeline(spark, sf_dir).collect()}
-    merged = {
-        tuple(r) for r in QUERIES["ext_pipeline_e2e"](spark, sf_dir).collect()
-    }
-    assert hand == merged and len(hand) > 0

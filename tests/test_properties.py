@@ -214,7 +214,7 @@ def test_range_join_matches_naive_on_random_intervals(spark, case, width):
     assert got == want
 
 
-# --- star CC vs propagation ---------------------------------------------------
+# --- driver union-find vs distributed propagation -----------------------------
 
 
 @st.composite
@@ -234,8 +234,9 @@ def random_edges(draw):
 
 @given(edges=random_edges())
 @settings(**SETTINGS)
-def test_star_cc_equals_propagation_on_random_graphs(spark, edges):
-    """Both CC algorithms must produce identical min-labelings on any
+def test_union_find_equals_propagation_on_random_graphs(spark, edges):
+    """The driver union-find and the distributed propagation (forced with
+    ``driver_solve_edges=0``) must produce identical min-labelings on any
     graph — including self-loops, duplicate edges, and multi-component
     shapes hypothesis invents."""
     from be_analytic_etl_spark.operators.graph import connected_components
@@ -243,12 +244,12 @@ def test_star_cc_equals_propagation_on_random_graphs(spark, edges):
     e = spark.createDataFrame(
         pd.DataFrame(edges, columns=["id_a", "id_b"]).astype("int64")
     )
-    prop = {(r["id"], r["group_id"]) for r in connected_components(e).collect()}
-    star = {
+    fast = {(r["id"], r["group_id"]) for r in connected_components(e).collect()}
+    dist = {
         (r["id"], r["group_id"])
-        for r in connected_components(e, algorithm="star").collect()
+        for r in connected_components(e, driver_solve_edges=0).collect()
     }
-    assert star == prop
+    assert fast == dist
 
 
 # --- histogram quantiles vs exact ---------------------------------------------

@@ -58,23 +58,6 @@ def test_heavy_hitters_match_exact_groupby(spark, seed, n_parts, k):
     assert got == want
 
 
-def test_misra_gries_candidates_bounded_state(spark):
-    """Each partition yields at most k candidates."""
-    from be_analytic_etl_spark.operators.sketches import misra_gries_candidates
-
-    rows = [(f"i{j % 37}",) for j in range(2000)]
-    df = spark.createDataFrame(rows, "item string").repartition(4)
-    k = 5
-    per_part = (
-        misra_gries_candidates(df, "item", k)
-        .withColumn("p", F.spark_partition_id())
-        .groupBy("p")
-        .count()
-        .collect()
-    )
-    assert all(r["count"] <= k for r in per_part)
-
-
 # ---------------------------------------------------------------------------
 # Calibration: ECE/MCE against a direct per-bin computation.
 @given(seed=st.integers(0, 10_000))

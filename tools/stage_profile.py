@@ -4,6 +4,10 @@ parse the JSON log into a job/stage table — stage wall time, task count,
 total task time, shuffle bytes — so the expensive stage is identifiable
 without the UI.
 
+The session is ``session.get_spark``'s, so stages are profiled under the
+engine's own config; only the two event-log confs are added, through
+``PYSPARK_SUBMIT_ARGS`` before the JVM starts.
+
 Usage: python tools/stage_profile.py <query> [runs]
 """
 
@@ -25,45 +29,22 @@ def main() -> None:
     name = sys.argv[1]
     runs = int(sys.argv[2]) if len(sys.argv) > 2 else 2
     os.makedirs(LOG_DIR, exist_ok=True)
-    os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
-
-    from pyspark.sql import SparkSession
-
-    from be_analytic_etl_spark import session as S
-    from be_analytic_etl_spark.registry import QUERIES
-
-    # piggyback on get_spark's config surface, then add event logging
-    builder_spark = S.get_spark  # noqa: F841  (document intent)
-    os.environ["SPARK_GRAFT_EVENTLOG"] = "1"
-    spark = (
-        SparkSession.builder.appName(f"stage-profile-{name}")
-        .master(f"local[{os.environ['SPARK_GRAFT_CPUS']}]")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config(
-            "spark.sql.adaptive.coalescePartitions.parallelismFirst",
-            os.environ.get("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "false"),
-        )
-        .config(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-            os.environ.get("SPARK_GRAFT_AQE_ADVISORY_SIZE", "64m"),
-        )
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.shuffle.partitions", os.environ["SPARK_GRAFT_CPUS"])
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.ansi.enabled", "false")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", S.driver_memory())
-        .config("spark.ui.enabled", "false")
-        .config("spark.eventLog.enabled", "true")
-        .config("spark.eventLog.dir", f"file:{LOG_DIR}")
-        .getOrCreate()
+    # Each SparkSession.builder access returns a fresh Builder, so the
+    # event-log confs cannot be pre-set on the one get_spark uses; the
+    # launcher reads them from the submit args when the JVM starts.
+    submit = os.environ.get("PYSPARK_SUBMIT_ARGS", "pyspark-shell")
+    os.environ["PYSPARK_SUBMIT_ARGS"] = (
+        "--conf spark.eventLog.enabled=true "
+        f"--conf spark.eventLog.dir=file:{LOG_DIR} {submit}"
     )
+
+    from be_analytic_etl_spark.registry import QUERIES
+    from be_analytic_etl_spark.session import cached_scope, get_spark
+
+    spark = get_spark(f"stage-profile-{name}")
     spark.sparkContext.setLogLevel("ERROR")
     app_id = spark.sparkContext.applicationId
     spark.read.parquet(f"{SF_DIR}/lineitem.parquet").count()
-
-    from be_analytic_etl_spark.session import cached_scope
 
     wall = []
     for r in range(runs):
@@ -95,44 +76,43 @@ def main() -> None:
         lines = open(log_path).read().splitlines()
     jobs: dict[int, dict] = {}
     stages: dict[int, dict] = {}
-    if True:
-        for line in lines:
-            ev = json.loads(line)
-            e = ev.get("Event")
-            if e == "SparkListenerJobStart":
-                jobs[ev["Job ID"]] = {
-                    "t0": ev["Submission Time"],
-                    "desc": (ev.get("Properties") or {}).get(
-                        "spark.job.description", ""
-                    )[:60],
-                    "stages": [s["Stage ID"] for s in ev["Stage Infos"]],
-                }
-            elif e == "SparkListenerJobEnd":
-                if ev["Job ID"] in jobs:
-                    jobs[ev["Job ID"]]["t1"] = ev["Completion Time"]
-            elif e == "SparkListenerStageCompleted":
-                si = ev["Stage Info"]
-                sid = si["Stage ID"]
-                stages[sid] = {
-                    "name": si["Stage Name"][:70],
-                    "tasks": si["Number of Tasks"],
-                    "ms": si.get("Completion Time", 0) - si.get("Submission Time", 0),
-                }
-            elif e == "SparkListenerTaskEnd":
-                sid = ev["Stage ID"]
-                st = stages.setdefault(sid, {})
-                m = ev.get("Task Metrics") or {}
-                st["task_ms"] = st.get("task_ms", 0) + m.get("Executor Run Time", 0)
-                srm = (m.get("Shuffle Read Metrics") or {})
-                st["sh_read"] = (
-                    st.get("sh_read", 0)
-                    + srm.get("Remote Bytes Read", 0)
-                    + srm.get("Local Bytes Read", 0)
-                )
-                swm = (m.get("Shuffle Write Metrics") or {})
-                st["sh_write"] = st.get("sh_write", 0) + swm.get(
-                    "Shuffle Bytes Written", 0
-                )
+    for line in lines:
+        ev = json.loads(line)
+        e = ev.get("Event")
+        if e == "SparkListenerJobStart":
+            jobs[ev["Job ID"]] = {
+                "t0": ev["Submission Time"],
+                "desc": (ev.get("Properties") or {}).get(
+                    "spark.job.description", ""
+                )[:60],
+                "stages": [s["Stage ID"] for s in ev["Stage Infos"]],
+            }
+        elif e == "SparkListenerJobEnd":
+            if ev["Job ID"] in jobs:
+                jobs[ev["Job ID"]]["t1"] = ev["Completion Time"]
+        elif e == "SparkListenerStageCompleted":
+            si = ev["Stage Info"]
+            sid = si["Stage ID"]
+            stages[sid] = {
+                "name": si["Stage Name"][:70],
+                "tasks": si["Number of Tasks"],
+                "ms": si.get("Completion Time", 0) - si.get("Submission Time", 0),
+            }
+        elif e == "SparkListenerTaskEnd":
+            sid = ev["Stage ID"]
+            st = stages.setdefault(sid, {})
+            m = ev.get("Task Metrics") or {}
+            st["task_ms"] = st.get("task_ms", 0) + m.get("Executor Run Time", 0)
+            srm = (m.get("Shuffle Read Metrics") or {})
+            st["sh_read"] = (
+                st.get("sh_read", 0)
+                + srm.get("Remote Bytes Read", 0)
+                + srm.get("Local Bytes Read", 0)
+            )
+            swm = (m.get("Shuffle Write Metrics") or {})
+            st["sh_write"] = st.get("sh_write", 0) + swm.get(
+                "Shuffle Bytes Written", 0
+            )
 
     print(f"\n{'job':>4} {'ms':>7}  desc / stages")
     for jid in sorted(jobs):
