@@ -70,12 +70,12 @@ def _build_parser() -> argparse.ArgumentParser:
 def main(argv: list[str] | None = None) -> int:
     args = _build_parser().parse_args(argv)
 
-    from be_analytic_etl_spark.registry import ORACLE_SQL, QUERIES
+    from be_analytic_etl_spark.registry import QUERIES
 
     if args.cmd == "list":
+        # register() stores an oracle with every query
         for name in QUERIES:
-            oracle = "oracle" if name in ORACLE_SQL else "rows-only"
-            print(f"{name}\t{oracle}")
+            print(f"{name}\toracle")
         print(f"TOTAL\t{len(QUERIES)}", file=sys.stderr)
         return 0
 

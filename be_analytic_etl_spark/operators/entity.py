@@ -1,7 +1,7 @@
 """Blocked entity resolution: names -> candidate pairs -> verified
 matches -> entity clusters.
 
-The full ER pipeline the `fuzzy_match` query (queries_reference.py)
+The full ER pipeline the `fuzzy_match` query (queries/reference.py)
 only previews: multi-key **blocking** (first + last token, so a typo in
 either word still meets its partner in the other block — single-key
 blocking silently loses those pairs), a **flood-capped candidate join**

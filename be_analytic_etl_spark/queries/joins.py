@@ -1,18 +1,12 @@
-"""Second TPC-H-shaped batch: outer-join distributions, conditional shares,
-scalar-subquery selections, disjunctive pushdown, anti-join + scalar
-threshold, and the full ranking-window function family.
+"""Join queries: the TPC-H-shaped join and subquery plans, and the join
+techniques (as-of, range, salted, Bloom-filtered, skew profile).
 
-These widen the join/subquery plan coverage beyond round 1's Q1/Q3/Q4/Q5/
-Q7/Q12/Q17/Q18 analogues: LEFT OUTER with a compound join condition (Q13),
-promo share (Q14), MAX scalar subquery (Q15), OR-of-ANDs partial pushdown
-(Q19), NOT EXISTS + AVG scalar subquery (Q22), returned-item top-k (Q10),
-and yearly market share (Q8).  All revenue sums go through DECIMAL so
-Spark's partial-aggregate merge order and DuckDB's sequential fold yield
-bit-identical doubles (see queries_reference module docstring).
-
-Reference parity: the reference delegates all querying to Postgres views
-(README.md consolidacao view; connect_postgre.py:209-321) — these shapes
-are the standard relational surface a user of that warehouse would run.
+The TPC-H shapes cover LEFT OUTER with a compound join condition (Q13),
+promo share (Q14), MAX scalar subquery (Q15), OR-of-ANDs partial
+pushdown (Q19), NOT EXISTS + AVG scalar subquery (Q22), returned-item
+top-k (Q10), yearly market share (Q8) and the ranking-window family.
+All revenue sums go through DECIMAL, so Spark's partial-aggregate merge
+order and DuckDB's sequential fold give bit-identical doubles.
 """
 
 from __future__ import annotations
@@ -21,11 +15,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from be_analytic_etl_spark.registry import register
-
-# NOT `from queries_reference import _t`: registry imports the query
-# modules in sequence, so importing a name from a sibling query module
-# breaks while that sibling is mid-initialization. sources is a leaf.
 from be_analytic_etl_spark.sources import load_table as _t
+
 
 _DEC = "decimal(28,6)"
 
@@ -788,5 +779,204 @@ register(
           GROUP BY l_suppkey, l_partkey
           HAVING SUM(l_quantity) > 30
       )
+    """,
+)
+
+
+# ---------------------------------------------------------------------------
+# As-of join (operators/asof.py): latest purchase at-or-before each click,
+# per user — union + ordered-window carry, one shuffle, no range explosion.
+# Right side pre-aggregated to one row per (user_id, ts) so both engines
+# are deterministic (DuckDB ASOF JOIN has the same uniqueness contract).
+def q_ext_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from be_analytic_etl_spark.operators.asof import asof_join
+
+    ev = _t(spark, sf_dir, "events")
+    clicks = ev.filter(F.col("event_type") == "click").select(
+        "user_id", "ts", "event_id", "value"
+    )
+    purchases = (
+        ev.filter(F.col("event_type") == "purchase")
+        .groupBy("user_id", "ts")
+        .agg(F.max("value").alias("p_value"))
+    )
+    return asof_join(clicks, purchases, on=["user_id"], right_cols=["p_value"])
+
+
+register(
+    "ext_asof_join",
+    q_ext_asof_join,
+    """
+    WITH clicks AS (
+        SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_id, value
+        FROM events WHERE event_type = 'click'
+    ),
+    purch AS (
+        SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, MAX(value) AS p_value
+        FROM events WHERE event_type = 'purchase'
+        GROUP BY user_id, ts
+    )
+    SELECT c.user_id, c.ts, c.event_id, c.value,
+           p.ts AS ts_r, p.p_value AS p_value_r
+    FROM clicks c ASOF LEFT JOIN purch p
+      ON c.user_id = p.user_id AND c.ts >= p.ts
+    """,
+)
+
+
+# ---------------------------------------------------------------------------
+# Salted skew join (operators/skew.py): lineitem->orders with the fact side
+# salted across (key, salt) tasks, then re-aggregated. The join output is
+# invariant to salting, so the oracle is the plain join — which is exactly
+# the point: same semantics, straggler-free physical shape.
+def q_ext_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from be_analytic_etl_spark.operators.skew import salted_join
+
+    li = _t(spark, sf_dir, "lineitem").select(
+        F.col("l_orderkey").alias("o_orderkey"), "l_extendedprice", "l_quantity"
+    )
+    orders = _t(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_orderpriority", "o_orderstatus"
+    )
+    joined = salted_join(li, orders, on=["o_orderkey"], salt_n=8)
+    return joined.groupBy("o_orderpriority", "o_orderstatus").agg(
+        F.count(F.lit(1)).alias("n_items"),
+        F.sum("l_quantity").alias("sum_qty"),
+    )
+
+
+register(
+    "ext_salted_join",
+    q_ext_salted_join,
+    """
+    SELECT o.o_orderpriority, o.o_orderstatus,
+           COUNT(*) AS n_items,
+           SUM(l.l_quantity) AS sum_qty
+    FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
+    GROUP BY o.o_orderpriority, o.o_orderstatus
+    """,
+)
+
+
+# ---------------------------------------------------------------------------
+# Range join (operators/rangejoin.py): clicks attributed to 2-hour error
+# windows per user via bucketized interval join (equi-join on
+# (user_id, hour-bucket) + exact residual — no nested loop; plan-asserted
+# in tests/test_plans.py). Aggregated to clicks-per-window.
+def q_ext_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from be_analytic_etl_spark.operators.rangejoin import range_join
+
+    ev = _t(spark, sf_dir, "events")
+    clicks = ev.filter(F.col("event_type") == "click").select(
+        "user_id", "ts", F.col("event_id").alias("click_id")
+    )
+    windows = ev.filter(F.col("event_type") == "error").select(
+        "user_id",
+        F.col("event_id").alias("window_id"),
+        F.col("ts").alias("w_start"),
+        (F.col("ts") + F.expr("INTERVAL 2 HOURS")).alias("w_end"),
+    )
+    joined = range_join(
+        clicks, windows, "ts", "w_start", "w_end", keys=["user_id"],
+        bucket_width_seconds=3600,
+    )
+    return joined.groupBy("window_id").agg(
+        F.count(F.lit(1)).alias("n_clicks"),
+        F.min("click_id").alias("first_click_id"),
+    )
+
+
+register(
+    "ext_range_join",
+    q_ext_range_join,
+    """
+    WITH clicks AS (
+        SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_id AS click_id
+        FROM events WHERE event_type = 'click'
+    ),
+    win AS (
+        SELECT user_id, event_id AS window_id,
+               CAST(ts AS TIMESTAMP) AS w_start,
+               CAST(ts AS TIMESTAMP) + INTERVAL 2 HOUR AS w_end
+        FROM events WHERE event_type = 'error'
+    )
+    SELECT w.window_id, COUNT(*) AS n_clicks, MIN(c.click_id) AS first_click_id
+    FROM clicks c JOIN win w
+      ON c.user_id = w.user_id AND c.ts >= w.w_start AND c.ts < w.w_end
+    GROUP BY w.window_id
+    """,
+)
+
+
+# ---------------------------------------------------------------------------
+# Bloom-pruned join (operators/bloom.py): lineitem probed against the
+# urgent-order subset — the map-side bit-set filter drops most fact rows
+# before the join shuffle; the result is provably identical to the plain
+# join, which is exactly what the oracle checks.
+def q_ext_bloom_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from be_analytic_etl_spark.operators.bloom import bloom_join
+
+    li = _t(spark, sf_dir, "lineitem").select(
+        F.col("l_orderkey").alias("o_orderkey"), "l_quantity"
+    )
+    urgent = (
+        _t(spark, sf_dir, "orders")
+        .filter(F.col("o_orderpriority") == "1-URGENT")
+        .select("o_orderkey", "o_orderpriority")
+    )
+    return (
+        bloom_join(li, urgent, on=["o_orderkey"])
+        .groupBy("o_orderpriority")
+        .agg(
+            F.count(F.lit(1)).alias("n_items"),
+            F.sum("l_quantity").alias("sum_qty"),
+        )
+    )
+
+
+register(
+    "ext_bloom_join",
+    q_ext_bloom_join,
+    """
+    SELECT o.o_orderpriority, COUNT(*) AS n_items, SUM(l.l_quantity) AS sum_qty
+    FROM lineitem l
+    JOIN (SELECT o_orderkey, o_orderpriority FROM orders
+          WHERE o_orderpriority = '1-URGENT') o
+      ON l.l_orderkey = o.o_orderkey
+    GROUP BY o.o_orderpriority
+    """,
+)
+
+
+# ---------------------------------------------------------------------------
+# Join-key skew profile (operators/profiling.py): heavy-hitter census +
+# straggler multiplier for a prospective shuffle key — the number that
+# decides between plain hash join, AQE skew split, and an explicit salted
+# join. One partial-agg'd shuffle on the key; top-k is TakeOrdered over
+# the per-key count frame, stats reduce to one broadcast row.
+def q_ext_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from be_analytic_etl_spark.operators.profiling import key_skew_profile
+
+    return key_skew_profile(_t(spark, sf_dir, "lineitem"), "l_suppkey", top_k=10)
+
+
+register(
+    "ext_skew_profile",
+    q_ext_skew_profile,
+    """
+    WITH counts AS (
+        SELECT l_suppkey AS key, COUNT(*) AS cnt FROM lineitem GROUP BY 1
+    ), stats AS (
+        SELECT CAST(SUM(cnt) AS BIGINT) AS total_rows,
+               COUNT(*) AS n_keys, MAX(cnt) AS max_cnt
+        FROM counts
+    )
+    SELECT key, cnt,
+           CAST(cnt AS DOUBLE) / total_rows AS share,
+           total_rows, n_keys,
+           CAST(max_cnt AS DOUBLE)
+               / (CAST(total_rows AS DOUBLE) / CAST(n_keys AS DOUBLE))
+               AS skew_factor
+    FROM (SELECT * FROM counts ORDER BY cnt DESC, key LIMIT 10) t, stats
     """,
 )

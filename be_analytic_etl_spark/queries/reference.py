@@ -1,21 +1,29 @@
-"""Reference-surface operator queries (SURVEY.md §2) on the star schema.
+"""Reference-surface queries: the ETL job's operators (SURVEY.md §2) on
+the star schema, the ETL and I/O round trips, the storage layouts and
+file formats, table maintenance (merge, SCD2, snapshot diff,
+incremental refresh) and the Spark SQL surface (pipe syntax, SQL table
+functions, VARIANT).
 
-Each query is the Spark-first expression of one operator family from the
-reference inventory, paired with a DuckDB oracle twin. Float-summation
-determinism note: large SUMs go through DECIMAL (exact, associative) so the
-Spark partial-aggregate sum and DuckDB's sequential sum produce bit-identical
-doubles; AVGs and per-row arithmetic stay double and are rounded.
-
-Scale notes are inline per query — every plan here was chosen for the
-1000-executor case first (broadcast dims, single-shuffle conditional pivots,
-partial aggregation), then verified on local[*].
+Each query is the Spark-first expression of one operator family, paired
+with a DuckDB oracle twin. Large SUMs go through DECIMAL (exact,
+associative), so the Spark partial-aggregate sum and DuckDB's
+sequential sum give bit-identical doubles; AVGs and per-row arithmetic
+stay double and are rounded. Layout queries materialize under /tmp
+(tagged by scale factor) and return an aggregate the oracle computes
+from the original parquet, so they prove the layout keeps the values,
+not only that the write succeeded.
 """
 
 from __future__ import annotations
 
+import os
+import re
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from be_analytic_etl_spark.operators import sampling as SA
+from be_analytic_etl_spark.operators import versioning as V
 from be_analytic_etl_spark.registry import register
 from be_analytic_etl_spark.sources import load_table as _t
 
@@ -282,7 +290,7 @@ register(
 # built deterministically from the nation table, run through EXACTLY the
 # production transform chain (sources.ingest.transform_wide), and the long
 # fact output is value-checked against DuckDB computing the expected result
-# directly. Reference chain: /root/reference/main.py:202-590.
+# directly. Reference chain: the reference main.py:202-590.
 _E2E_MONTHS = ["2023-01", "2023-02", "2023-03"]
 
 
@@ -1309,7 +1317,7 @@ def q_rolling_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(val).over(w7).cast("double").alias("roll_sum7"),
         # double-division, not decimal-division: engines round decimal
         # quotients at different scales (Spark scale-6 vs DuckDB's wider
-        # quotient — last-digit mismatch, strict-float sweep round 5).
+        # quotient — last-digit mismatch).
         # The sum is exact decimal, cast exact (<2^53), then one IEEE
         # division both engines compute bit-identically.
         (
@@ -1848,5 +1856,1126 @@ register(
            COUNT(DISTINCT user_id) AS n_users,
            CAST(SUM(CAST(value AS DECIMAL(28,6))) AS DOUBLE) AS sum_value
     FROM events GROUP BY event_type
+    """,
+)
+
+
+# ---------------------------------------------------------------------------
+# P11/P12/P17 string-surface parity: trailing-zero strip + empty->null on
+# deterministically constructed messy strings.
+def q_ext_strip_zeros(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from be_analytic_etl_spark.functions import empty_to_null, strip_trailing_zeros
+
+    li = _t(spark, sf_dir, "lineitem")
+    raw = F.when(
+        F.col("l_linenumber") % 7 == 0, F.lit("")
+    ).otherwise(
+        F.concat(
+            (F.col("l_partkey") % 100).cast("string"),
+            F.lit("."),
+            F.lpad((F.col("l_suppkey") % 100).cast("string"), 2, "0"),
+            F.repeat(F.lit("0"), (F.col("l_linenumber") % 3).cast("int")),
+        )
+    )
+    return (
+        li.select("l_orderkey", "l_linenumber", raw.alias("raw"))
+        .withColumn("stripped", strip_trailing_zeros("raw"))
+        .withColumn("nulled", empty_to_null("stripped"))
+    )
+
+
+register(
+    "ext_strip_zeros",
+    q_ext_strip_zeros,
+    r"""
+    WITH base AS (
+        SELECT l_orderkey, l_linenumber,
+               CASE WHEN l_linenumber % 7 = 0 THEN ''
+                    ELSE CAST(l_partkey % 100 AS VARCHAR) || '.'
+                         || lpad(CAST(l_suppkey % 100 AS VARCHAR), 2, '0')
+                         || repeat('0', l_linenumber % 3) END AS raw
+        FROM lineitem
+    ), s AS (
+        SELECT l_orderkey, l_linenumber, raw,
+               CASE WHEN regexp_matches(raw, '^[0-9]+\.[0-9]+$')
+                    THEN regexp_replace(
+                             regexp_replace(raw, '^([0-9]+)\.0+$', '\1'),
+                             '^([0-9]+\.[0-9]*?)0+$', '\1')
+                    ELSE raw END AS stripped
+        FROM base
+    )
+    SELECT l_orderkey, l_linenumber, raw, stripped,
+           CASE WHEN trim(stripped) = '' THEN NULL ELSE stripped END AS nulled
+    FROM s
+    """,
+)
+
+
+# First event per user: the winner per key is min(ts, event_id), with
+# event_id breaking ties on ts so the pick is deterministic.
+def q_ext_first_per_key(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from pyspark.sql import Window
+
+    ev = _t(spark, sf_dir, "events")
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    return (
+        ev.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") == 1)
+        .select("user_id", "ts", "event_id", "value")
+    )
+
+
+register(
+    "ext_first_per_key",
+    q_ext_first_per_key,
+    """
+    SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_id, value FROM (
+        SELECT user_id, ts, event_id, value,
+               ROW_NUMBER() OVER (
+                   PARTITION BY user_id ORDER BY ts, event_id) AS rn
+        FROM events)
+    WHERE rn = 1
+    """,
+)
+
+
+# ---------------------------------------------------------------------------
+# MERGE upsert (operators/merge.py): customer corrections — every 10th key
+# gets a new acctbal (including a NULL case: update values win wholesale,
+# no per-column COALESCE), every 37th is deleted, and a shifted key range
+# is inserted. One full-outer shuffle on the key.
+def q_ext_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from be_analytic_etl_spark.operators.merge import merge_upsert
+
+    cust = _t(spark, sf_dir, "customer").select(
+        "c_custkey", "c_name", "c_acctbal", "c_mktsegment"
+    )
+    mods = cust.filter(F.col("c_custkey") % 10 == 0).select(
+        "c_custkey",
+        F.upper("c_name").alias("c_name"),
+        F.when(F.col("c_custkey") % 20 == 0, F.col("c_acctbal") + 100.0).alias(
+            "c_acctbal"
+        ),
+        F.lit("CORRECTED").alias("c_mktsegment"),
+        (F.col("c_custkey") % 37 == 0).alias("is_deleted"),
+    )
+    inserts = cust.filter(F.col("c_custkey") % 100 == 3).select(
+        (F.col("c_custkey") + 1000000).alias("c_custkey"),
+        F.concat(F.lit("NEW_"), "c_name").alias("c_name"),
+        F.lit(0.0).alias("c_acctbal"),
+        F.lit("FRESH").alias("c_mktsegment"),
+        F.lit(False).alias("is_deleted"),
+    )
+    return merge_upsert(
+        cust, mods.unionByName(inserts), keys=["c_custkey"], delete_col="is_deleted"
+    )
+
+
+register(
+    "ext_merge_upsert",
+    q_ext_merge_upsert,
+    """
+    WITH mods AS (
+        SELECT c_custkey,
+               upper(c_name) AS c_name,
+               CASE WHEN c_custkey % 20 = 0 THEN c_acctbal + 100.0 END AS c_acctbal,
+               'CORRECTED' AS c_mktsegment,
+               c_custkey % 37 = 0 AS is_deleted
+        FROM customer WHERE c_custkey % 10 = 0
+        UNION ALL
+        SELECT c_custkey + 1000000, 'NEW_' || c_name, 0.0, 'FRESH', FALSE
+        FROM customer WHERE c_custkey % 100 = 3
+    )
+    SELECT COALESCE(m.c_custkey, c.c_custkey) AS c_custkey,
+           CASE WHEN m.c_custkey IS NOT NULL THEN m.c_name ELSE c.c_name END AS c_name,
+           CASE WHEN m.c_custkey IS NOT NULL THEN m.c_acctbal ELSE c.c_acctbal END AS c_acctbal,
+           CASE WHEN m.c_custkey IS NOT NULL THEN m.c_mktsegment ELSE c.c_mktsegment END AS c_mktsegment
+    FROM customer c FULL OUTER JOIN mods m ON c.c_custkey = m.c_custkey
+    WHERE NOT COALESCE(m.is_deleted, FALSE)
+    """,
+)
+
+
+# ---------------------------------------------------------------------------
+# SCD type-2 history (operators/merge.py): order rows as customer-state
+# versions — valid_from/valid_to intervals + current flag via lead() per
+# key. Deduped to one version per (custkey, day) for determinism.
+def q_ext_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from be_analytic_etl_spark.operators.merge import scd2_history
+
+    orders = _t(spark, sf_dir, "orders")
+    versions = orders.groupBy(
+        "o_custkey", F.col("o_orderdate").alias("valid_from")
+    ).agg(F.max("o_totalprice").alias("state_price"))
+    return scd2_history(versions, keys=["o_custkey"], valid_from="valid_from")
+
+
+register(
+    "ext_scd2",
+    q_ext_scd2,
+    """
+    WITH versions AS (
+        SELECT o_custkey, CAST(o_orderdate AS TIMESTAMP) AS valid_from,
+               MAX(o_totalprice) AS state_price
+        FROM orders GROUP BY 1, 2
+    )
+    SELECT o_custkey, valid_from, state_price,
+           LEAD(valid_from) OVER w AS valid_to,
+           LEAD(valid_from) OVER w IS NULL AS is_current
+    FROM versions
+    WINDOW w AS (PARTITION BY o_custkey ORDER BY valid_from)
+    """,
+)
+
+
+# ---------------------------------------------------------------------------
+# Column profiling (operators/profiling.py): ANALYZE-TABLE stats for the
+# lineitem fact in one aggregation job, long format.
+def q_ext_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from be_analytic_etl_spark.operators.profiling import profile
+
+    li = _t(spark, sf_dir, "lineitem")
+    return profile(
+        li, ["l_orderkey", "l_quantity", "l_extendedprice", "l_returnflag", "l_shipdate"]
+    )
+
+
+def _profile_branch(c: str, numeric: bool) -> str:
+    mn = f"CAST(MIN({c}) AS DOUBLE)" if numeric else "CAST(NULL AS DOUBLE)"
+    mx = f"CAST(MAX({c}) AS DOUBLE)" if numeric else "CAST(NULL AS DOUBLE)"
+    return (
+        f"SELECT '{c}' AS column_name, COUNT(*) AS n_rows, "
+        # CAST: DuckDB SUM(int) is HUGEINT (float64 in pandas); Spark's is
+        # BIGINT and the driver's value-hash distinguishes them.
+        f"CAST(SUM(CASE WHEN {c} IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_null, "
+        f"COUNT(DISTINCT {c}) AS n_distinct, {mn} AS min_value, {mx} AS max_value "
+        f"FROM lineitem"
+    )
+
+
+register(
+    "ext_profile",
+    q_ext_profile,
+    " UNION ALL ".join(
+        _profile_branch(c, num)
+        for c, num in [
+            ("l_orderkey", True),
+            ("l_quantity", True),
+            ("l_extendedprice", True),
+            ("l_returnflag", False),
+            ("l_shipdate", False),
+        ]
+    ),
+)
+
+
+# ---------------------------------------------------------------------------
+# Z-order layout key (operators/profiling.py): Morton interleave of
+# (orderkey, partkey) low bits — the Delta/Iceberg Z-ORDER clustering key
+# as a deterministic expression; aggregated into key-range buckets so the
+# oracle result is compact while every key value still feeds the hash.
+def q_ext_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from be_analytic_etl_spark.operators.profiling import zorder_key
+
+    li = _t(spark, sf_dir, "lineitem")
+    zk = zorder_key("l_orderkey", "l_partkey", bits=16)
+    return (
+        li.select(zk.alias("zkey"))
+        .groupBy((F.col("zkey") % 97).alias("zbucket"))
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum("zkey").alias("zsum"),
+            F.min("zkey").alias("zmin"),
+            F.max("zkey").alias("zmax"),
+        )
+    )
+
+
+def _zorder_oracle() -> str:
+    from be_analytic_etl_spark.operators.profiling import zorder_sql
+
+    z = zorder_sql("l_orderkey", "l_partkey", bits=16)
+    return f"""
+    WITH z AS (SELECT {z} AS zkey FROM lineitem)
+    SELECT zkey % 97 AS zbucket, COUNT(*) AS n,
+           -- CAST: DuckDB SUM(BIGINT) is HUGEINT; Spark's is BIGINT.
+           CAST(SUM(zkey) AS BIGINT) AS zsum,
+           MIN(zkey) AS zmin, MAX(zkey) AS zmax
+    FROM z GROUP BY 1
+    """
+
+
+register("ext_zorder", q_ext_zorder, _zorder_oracle())
+
+
+# ---------------------------------------------------------------------------
+# Data-quality constraint audit over the orders table (deequ/dbt-style):
+# null-ness, key uniqueness, value domain, range, and referential
+# integrity in one report. All row-local rules share ONE aggregate pass;
+# uniqueness is one groupBy; the FK check is a broadcast anti join.
+def q_dq_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from be_analytic_etl_spark.operators import quality as Q
+
+    orders = _t(spark, sf_dir, "orders")
+    customer = _t(spark, sf_dir, "customer")
+    rules = [
+        Q.not_null("o_orderkey_not_null", "o_orderkey"),
+        Q.not_null("o_custkey_not_null", "o_custkey"),
+        Q.unique("o_orderkey_unique", "o_orderkey"),
+        Q.in_set(
+            "o_orderstatus_domain", "o_orderstatus", "F", "O", "P"
+        ),
+        Q.in_range("o_totalprice_range", "o_totalprice", 0.0, 600000.0),
+        Q.matches("o_orderpriority_shape", "o_orderpriority", "^[1-5]-[A-Z ]+$"),
+        Q.foreign_key("o_custkey_fk_customer", "o_custkey", customer, "c_custkey"),
+    ]
+    return Q.constraint_audit(orders, rules)
+
+
+register(
+    "ext_dq_audit",
+    q_dq_audit,
+    """
+    SELECT 'o_orderkey_not_null' AS rule,
+           CAST(SUM(CASE WHEN o_orderkey IS NULL THEN 1 ELSE 0 END) AS BIGINT)
+               AS n_violations
+    FROM orders
+    UNION ALL
+    SELECT 'o_custkey_not_null',
+           CAST(SUM(CASE WHEN o_custkey IS NULL THEN 1 ELSE 0 END) AS BIGINT)
+    FROM orders
+    UNION ALL
+    SELECT 'o_orderkey_unique',
+           CAST(SUM(extra) AS BIGINT)
+    FROM (SELECT COUNT(*) - 1 AS extra FROM orders GROUP BY o_orderkey)
+    UNION ALL
+    SELECT 'o_orderstatus_domain',
+           CAST(SUM(CASE WHEN o_orderstatus IS NULL
+                           OR o_orderstatus NOT IN ('F', 'O', 'P')
+                         THEN 1 ELSE 0 END) AS BIGINT)
+    FROM orders
+    UNION ALL
+    SELECT 'o_totalprice_range',
+           CAST(SUM(CASE WHEN o_totalprice IS NULL OR o_totalprice < 0.0
+                           OR o_totalprice > 600000.0
+                         THEN 1 ELSE 0 END) AS BIGINT)
+    FROM orders
+    UNION ALL
+    SELECT 'o_orderpriority_shape',
+           CAST(SUM(CASE WHEN o_orderpriority IS NULL
+                           OR NOT regexp_matches(o_orderpriority,
+                                                 '^[1-5]-[A-Z ]+$')
+                         THEN 1 ELSE 0 END) AS BIGINT)
+    FROM orders
+    UNION ALL
+    SELECT 'o_custkey_fk_customer',
+           CAST(COUNT(*) AS BIGINT)
+    FROM orders o
+    WHERE NOT EXISTS (SELECT 1 FROM customer c WHERE c.c_custkey = o.o_custkey)
+    """,
+)
+
+
+# ---------------------------------------------------------------------------
+# Z-order layout census: interleave (customer, order-day) bits into a
+# Morton key, bucket the z-sorted orders into 64 "files", and emit each
+# bucket's footer stats (min/max per dimension) plus whether a fixed
+# customer-range probe would touch it — the lakehouse OPTIMIZE ZORDER
+# data-skipping story, in exact integer bit math (oracle replays the
+# keys bit-for-bit). NTILE's global window is the local stand-in for
+# repartitionByRange at scale (operators/layout.py).
+_Z_BUCKETS = 64
+
+
+_Z_PROBE_LO, _Z_PROBE_HI = 100, 200
+
+
+#: 21 bits per dimension (2^21 = 2M): o_custkey passes 2^16 from TPC-H
+#: sf~0.5 and reaches 150k at sf1 — 16 bits would silently alias keys
+#: mod 65536 and erode the locality the census demonstrates. 2*21 = 42
+#: key bits, well inside BIGINT.
+_Z_BITS = 21
+
+
+def q_ext_zorder_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from be_analytic_etl_spark.operators.layout import zorder_skipping_stats
+
+    orders = _t(spark, sf_dir, "orders")
+    base = orders.select(
+        F.col("o_custkey").alias("x"),
+        F.datediff(F.col("o_orderdate"), F.lit("1992-01-01")).alias("y"),
+        F.col("o_orderkey").alias("id"),
+    )
+    stats = zorder_skipping_stats(
+        base, "x", "y", "id", n_buckets=_Z_BUCKETS, bits=_Z_BITS
+    )
+    return stats.withColumn(
+        "touches_probe",
+        (F.col("min_x") <= _Z_PROBE_HI) & (F.col("max_x") >= _Z_PROBE_LO),
+    )
+
+
+def _zorder_skip_oracle() -> str:
+    from be_analytic_etl_spark.operators.profiling import zorder_sql
+
+    zexpr = zorder_sql("x", "y", bits=_Z_BITS)
+    return f"""
+    WITH base AS (
+        SELECT o_custkey AS x,
+               date_diff('day', DATE '1992-01-01', o_orderdate) AS y,
+               o_orderkey AS id
+        FROM orders
+    ), zb AS (
+        SELECT x, y,
+               NTILE({_Z_BUCKETS}) OVER (ORDER BY {zexpr}, id) AS bucket
+        FROM base
+    )
+    SELECT bucket,
+           CAST(COUNT(*) AS BIGINT) AS n_rows,
+           MIN(x) AS min_x, MAX(x) AS max_x,
+           MIN(y) AS min_y, MAX(y) AS max_y,
+           (MIN(x) <= {_Z_PROBE_HI} AND MAX(x) >= {_Z_PROBE_LO})
+               AS touches_probe
+    FROM zb GROUP BY bucket
+    """
+
+
+register("ext_zorder_skipping", q_ext_zorder_skipping, _zorder_skip_oracle())
+
+
+# ---------------------------------------------------------------------------
+# Skew-proof exact per-group top-k: two-phase (sub-bucket top-k, then
+# final re-rank of <= k*salt_n survivors) — the pattern that survives a
+# power-law hot group where a single-window top-k straggles. Result is
+# salt-invariant, so the oracle is the plain window top-k.
+_TOPK_K = 3
+
+
+def q_ext_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
+    orders = _t(spark, sf_dir, "orders")
+    return SA.topk_per_group(
+        orders.select("o_orderpriority", "o_orderkey", "o_totalprice"),
+        group_cols=["o_orderpriority"],
+        order_col="o_totalprice",
+        id_col="o_orderkey",
+        k=_TOPK_K,
+    )
+
+
+register(
+    "ext_topk_per_group",
+    q_ext_topk_per_group,
+    f"""
+    SELECT o_orderpriority, o_orderkey, o_totalprice,
+           CAST(ROW_NUMBER() OVER (
+               PARTITION BY o_orderpriority
+               ORDER BY o_totalprice DESC, o_orderkey
+           ) AS INTEGER) AS rank
+    FROM orders
+    QUALIFY rank <= {_TOPK_K}
+    """,
+)
+
+
+def _tag(sf_dir: str) -> str:
+    return os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
+
+
+# ---------------------------------------------------------------------------
+# ORC round-trip: project + filter lineitem -> ORC -> re-read -> aggregate.
+# The projection/filter happen BEFORE the write so the ORC file carries
+# only the 3 needed columns — the same scan-minimizing shape a 100 TB
+# format migration would use.
+
+def q_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_quantity") < 10).select(
+        "l_returnflag", "l_quantity", "l_extendedprice"
+    )
+    path = f"/tmp/spark_graft_orc_{_tag(sf_dir)}"
+    li.write.mode("overwrite").orc(path)
+    back = spark.read.orc(path)
+    return back.groupBy("l_returnflag").agg(
+        F.count(F.lit(1)).alias("n_lines"),
+        F.sum(F.col("l_quantity").cast("decimal(18,2)")).cast("double").alias("sum_qty"),
+        F.sum(F.col("l_extendedprice").cast("decimal(18,2)"))
+        .cast("double")
+        .alias("sum_price"),
+    )
+
+
+register(
+    "orc_roundtrip",
+    q_orc_roundtrip,
+    """
+    SELECT l_returnflag,
+           CAST(COUNT(*) AS BIGINT) AS n_lines,
+           CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
+           CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
+    FROM lineitem WHERE l_quantity < 10 GROUP BY l_returnflag
+    """,
+)
+
+
+# ---------------------------------------------------------------------------
+# Partitioned write + partition-pruned read. The re-read filters on the
+# partition column: Catalyst resolves it against directory names
+# (PartitionFilters), so only 1 of 5 directories is ever listed/read —
+# the layout that turns a 100 TB scan into a 20 TB one for free.
+# tests/test_storage.py pins the PartitionFilters plan shape.
+
+def q_partitioned_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from be_analytic_etl_spark.sources.sinks import write_partitioned
+
+    orders = _t(spark, sf_dir, "orders")
+    path = f"/tmp/spark_graft_part_{_tag(sf_dir)}"
+    sel = orders.select(
+        "o_orderkey", "o_orderdate", "o_totalprice", "o_orderpriority"
+    )
+    write_partitioned(sel, path, partition_cols=["o_orderpriority"])
+    # Explicit schema: an EMPTY input writes zero partition directories
+    # and schema INFERENCE would fail (UNABLE_TO_INFER_SCHEMA); partition
+    # discovery (and the pruned PartitionFilters plan shape pinned by
+    # tests/test_storage.py) is unaffected by a user-supplied schema.
+    back = spark.read.schema(sel.schema).parquet(path)
+    return (
+        back.filter(F.col("o_orderpriority") == "1-URGENT")
+        .groupBy(F.date_trunc("month", F.col("o_orderdate")).alias("month"))
+        .agg(
+            F.count(F.lit(1)).alias("n_orders"),
+            F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
+            .cast("double")
+            .alias("sum_price"),
+        )
+    )
+
+
+register(
+    "partitioned_prune",
+    q_partitioned_prune,
+    """
+    SELECT date_trunc('month', CAST(o_orderdate AS TIMESTAMP)) AS month,
+           CAST(COUNT(*) AS BIGINT) AS n_orders,
+           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
+    FROM orders WHERE o_orderpriority = '1-URGENT'
+    GROUP BY 1
+    """,
+)
+
+
+# ---------------------------------------------------------------------------
+# Bucketed join: customer and orders both bucketed 8 ways on custkey via
+# external-path saveAsTable, then joined. Both sides report the same
+# HashClusteredDistribution-compatible bucketing, so the sort-merge join
+# has NO shuffle exchange on either side (pinned by tests/test_storage.py)
+# — the co-located layout for a recurring 100 TB fact/dim join.
+
+def bucketize(
+    df: DataFrame,
+    table: str,
+    path: str,
+    key: str,
+    n_buckets: int = 8,
+) -> None:
+    from be_analytic_etl_spark.sources.sinks import write_bucketed_table
+
+    df.sparkSession.sql(f"DROP TABLE IF EXISTS {table}")
+    write_bucketed_table(
+        df, table, buckets=n_buckets, bucket_cols=[key], sort_cols=[key], path=path
+    )
+
+
+def q_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    tag = _tag(sf_dir)
+    cust = _t(spark, sf_dir, "customer").select(
+        "c_custkey", "c_mktsegment", "c_acctbal"
+    )
+    orders = _t(spark, sf_dir, "orders").select("o_custkey", "o_totalprice")
+    bucketize(cust, f"graft_cust_b_{tag}", f"/tmp/spark_graft_bkt_cust_{tag}", "c_custkey")
+    bucketize(
+        orders, f"graft_orders_b_{tag}", f"/tmp/spark_graft_bkt_orders_{tag}", "o_custkey"
+    )
+    c = spark.table(f"graft_cust_b_{tag}")
+    o = spark.table(f"graft_orders_b_{tag}")
+    return (
+        c.join(o, c.c_custkey == o.o_custkey)
+        .groupBy("c_mktsegment")
+        .agg(
+            F.count(F.lit(1)).alias("n_orders"),
+            F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
+            .cast("double")
+            .alias("revenue"),
+        )
+    )
+
+
+register(
+    "bucketed_join",
+    q_bucketed_join,
+    """
+    SELECT c_mktsegment,
+           CAST(COUNT(*) AS BIGINT) AS n_orders,
+           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
+    FROM customer JOIN orders ON c_custkey = o_custkey
+    GROUP BY c_mktsegment
+    """,
+)
+
+
+# ---------------------------------------------------------------------------
+# XML round-trip (Spark 4's built-in XML source — new surface the
+# reference's CSV/Postgres stack lacks). supplier -> XML (rowTag) ->
+# re-read with an EXPLICIT schema (inference on XML is a second full scan;
+# at 100 TB the schema is always declared) -> aggregate; the oracle
+# computes the same aggregate from the parquet original, proving the
+# XML writer/reader preserve values exactly. Doubles survive because the
+# writer emits Java shortest round-trip representations.
+
+def q_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # XML 1.0 cannot represent control characters (legal chars are tab/
+    # LF/CR and >= 0x20): a NUL-bearing upstream string makes the writer
+    # throw WstxIOException and abort the job (string-poisoned gate), so
+    # the sink boundary strips them — clean text passes byte-identical.
+    xml_safe = F.regexp_replace(
+        "s_name", r"[\x00-\x08\x0B\x0C\x0E-\x1F]", ""
+    ).alias("s_name")
+    sup = (
+        _t(spark, sf_dir, "supplier")
+        .filter(F.col("s_acctbal") > 0)
+        .select("s_suppkey", xml_safe, "s_nationkey", "s_acctbal")
+    )
+    path = f"/tmp/spark_graft_xml_{_tag(sf_dir)}"
+    (
+        sup.write.mode("overwrite")
+        .format("xml")
+        .option("rootTag", "suppliers")
+        .option("rowTag", "supplier")
+        .save(path)
+    )
+    back = (
+        spark.read.format("xml")
+        .option("rowTag", "supplier")
+        .schema("s_suppkey bigint, s_name string, s_nationkey bigint, s_acctbal double")
+        .load(path)
+    )
+    return back.groupBy("s_nationkey").agg(
+        F.count(F.lit(1)).alias("n_suppliers"),
+        F.sum(F.col("s_acctbal").cast("decimal(18,2)")).cast("double").alias("sum_bal"),
+        F.min("s_name").alias("first_name"),
+    )
+
+
+register(
+    "xml_roundtrip",
+    q_xml_roundtrip,
+    """
+    SELECT s_nationkey,
+           CAST(COUNT(*) AS BIGINT) AS n_suppliers,
+           CAST(SUM(CAST(s_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS sum_bal,
+           MIN(s_name) AS first_name
+    FROM supplier WHERE s_acctbal > 0
+    GROUP BY s_nationkey
+    """,
+)
+
+
+# ---------------------------------------------------------------------------
+# Custom Python DataSource (Spark 4): the reference's driver-side
+# download loop (main.py:347-389) as a real Spark source — one
+# InputPartition per resource URL, fetch/decode/split running executor-
+# side. The query materializes per-region TSV fixtures from nation,
+# reads them back through format("rest_tsv") over file:// URLs (same
+# code path as http), parses, and aggregates; the oracle computes the
+# same result from the parquet original. The 25-row driver collect is
+# control-plane fixture writing, not a data funnel.
+
+def q_rest_tsv_source(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from be_analytic_etl_spark.sources.datasource import register_rest_tsv
+
+    nation = _t(spark, sf_dir, "nation")
+    rows = sorted(
+        # a NULL region/name row has no bucket file to land in — skip it
+        # when building the fixture, like any manifest-driven ingest
+        # skips malformed resources (NULL-poisoned-batch gate)
+        nation.filter("n_regionkey IS NOT NULL AND n_name IS NOT NULL")
+        .select("n_nationkey", "n_name", "n_regionkey")
+        .collect(),
+        key=lambda r: r.n_nationkey,
+    )
+    base = f"/tmp/spark_graft_resttsv_{_tag(sf_dir)}"
+    os.makedirs(base, exist_ok=True)
+    paths: dict[int, str] = {}
+    for rk in sorted({r.n_regionkey for r in rows}):
+        p = f"{base}/r{rk}.tsv"
+        with open(p, "w", encoding="utf-8") as f:
+            for r in rows:
+                if r.n_regionkey == rk:
+                    # TSV framing cannot carry raw tab/newline: a name
+                    # containing them shifts the key field and the ANSI
+                    # ''->BIGINT cast crashes the read (string-poisoned
+                    # gate) — the standard TSV escape maps them to ' '
+                    # at the writer, mirrored in the oracle's
+                    # regexp_replace; clean names pass byte-identical.
+                    name = re.sub(r"[\t\n\r]", " ", r.n_name)
+                    f.write(f"{name}\t{r.n_nationkey}\n")
+        paths[rk] = p
+    register_rest_tsv(spark)
+    if not paths:
+        # EMPTY manifest: zero resources to fetch — the source's `urls`
+        # contract correctly refuses a blank option, so short-circuit to
+        # the empty result frame with the output schema.
+        return spark.createDataFrame(
+            [], "region_bucket int, n_lines long, key_sum long, first_name string"
+        )
+    df = (
+        spark.read.format("rest_tsv")
+        .option("urls", ",".join(f"file://{p}" for p in paths.values()))
+        .load()
+    )
+    parsed = df.select(
+        F.regexp_extract("url", r"r(\d+)\.tsv$", 1).cast("int").alias("region_bucket"),
+        F.split_part(F.col("line"), F.lit("\t"), F.lit(1)).alias("name"),
+        F.split_part(F.col("line"), F.lit("\t"), F.lit(2)).cast("long").alias("key"),
+    )
+    return parsed.groupBy("region_bucket").agg(
+        F.count(F.lit(1)).alias("n_lines"),
+        F.sum("key").alias("key_sum"),
+        F.min("name").alias("first_name"),
+    )
+
+
+register(
+    "rest_tsv_source",
+    q_rest_tsv_source,
+    """
+    SELECT CAST(n_regionkey AS INTEGER) AS region_bucket,
+           CAST(COUNT(*) AS BIGINT) AS n_lines,
+           CAST(SUM(n_nationkey) AS BIGINT) AS key_sum,
+           -- the TSV writer's framing escape (tab/newline -> space)
+           MIN(regexp_replace(n_name, '[\\t\\n\\r]', ' ', 'g')) AS first_name
+    FROM nation
+    -- mirror the Spark fixture builder's NULL skip: a NULL region/name
+    -- row has no bucket file, so the oracle must not emit a NULL bucket
+    WHERE n_regionkey IS NOT NULL AND n_name IS NOT NULL
+    GROUP BY n_regionkey
+    """,
+)
+
+
+# ---------------------------------------------------------------------------
+# Schema evolution: v1 parquet files lack a column that v2 files carry
+# (the normal state of a long-lived 100 TB lake). mergeSchema unions the
+# footers at read time; v1 rows surface NULL for the new column and the
+# aggregate handles them explicitly. The oracle reproduces the same
+# semantics from the original table.
+
+def q_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
+    orders = _t(spark, sf_dir, "orders")
+    path = f"/tmp/spark_graft_evo_{_tag(sf_dir)}"
+    v1 = orders.filter(F.col("o_orderkey") % 2 == 0).select(
+        "o_orderkey", "o_orderpriority", "o_totalprice"
+    )
+    v2 = orders.filter(F.col("o_orderkey") % 2 == 1).select(
+        "o_orderkey", "o_orderpriority", "o_totalprice",
+        F.col("o_orderstatus").alias("status_v2"),
+    )
+    v1.write.mode("overwrite").parquet(f"{path}/v1")
+    v2.write.mode("overwrite").parquet(f"{path}/v2")
+    back = spark.read.option("mergeSchema", "true").parquet(f"{path}/v1", f"{path}/v2")
+    return back.groupBy("o_orderpriority").agg(
+        F.count(F.lit(1)).alias("n_orders"),
+        F.sum(F.when(F.col("status_v2").isNull(), 1).otherwise(0))
+        .cast("bigint")
+        .alias("n_legacy_rows"),
+        F.count("status_v2").cast("bigint").alias("n_evolved_rows"),
+        F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
+        .cast("double")
+        .alias("sum_price"),
+    )
+
+
+register(
+    "schema_evolution",
+    q_schema_evolution,
+    """
+    SELECT o_orderpriority,
+           CAST(COUNT(*) AS BIGINT) AS n_orders,
+           CAST(SUM(CASE WHEN o_orderkey % 2 = 0 THEN 1 ELSE 0 END) AS BIGINT)
+               AS n_legacy_rows,
+           CAST(SUM(CASE WHEN o_orderkey % 2 = 1 THEN 1 ELSE 0 END) AS BIGINT)
+               AS n_evolved_rows,
+           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
+    FROM orders GROUP BY o_orderpriority
+    """,
+)
+
+
+# ---------------------------------------------------------------------------
+# binaryfile_roundtrip: the `binaryFile` source — THE ingestion path for an
+# image/audio corpus into opaque binary columns (multimodal.py's input
+# shape). A deterministic per-doc .bin fixture is materialized under /tmp
+# (driver-side: |fixture| = 1/10 of docs, control-plane sized), read back
+# as (path, length, content), and value-proven against the original text:
+# byte length and md5 must match DuckDB's view of the same documents. At
+# 100 TB the same reader scans an object-store prefix with
+# pathGlobFilter/recursiveFileLookup, one task per file group.
+
+
+def q_binaryfile_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import shutil
+
+    docs = _t(spark, sf_dir, "documents")
+    path = f"/tmp/spark_graft_binfiles_{_tag(sf_dir)}"
+    # Wipe-then-write, the directory-level equivalent of the other
+    # fixtures' .mode("overwrite"): binaryFile scans the WHOLE directory,
+    # so stale files from an earlier fixture generation would surface as
+    # extra rows the oracle lacks.
+    shutil.rmtree(path, ignore_errors=True)
+    os.makedirs(path)
+    # Fixture write: one .bin per sampled doc (driver-side loop is fixture
+    # construction, like jdbc_roundtrip's embedded Derby — the measured
+    # path is the distributed binaryFile scan below).
+    sample = docs.filter(F.col("doc_id") % 10 == 0).select("doc_id", "text")
+    for r in sample.collect():
+        with open(os.path.join(path, f"{r['doc_id']}.bin"), "wb") as f:
+            f.write((r["text"] or "").encode("utf-8"))
+    bf = spark.read.format("binaryFile").load(path)
+    return bf.select(
+        # try_cast: a non-matching filename extracts '' which ANSI cast
+        # would throw on; NULL doc_id is the right answer for strays
+        F.regexp_extract(F.col("path"), r"(\d+)\.bin$", 1)
+        .try_cast("long")
+        .alias("doc_id"),
+        F.col("length").alias("n_bytes"),
+        F.md5(F.col("content")).alias("md5"),
+    )
+
+
+register(
+    "binaryfile_roundtrip",
+    q_binaryfile_roundtrip,
+    """
+    SELECT doc_id,
+           CAST(octet_length(CAST(coalesce(text, '') AS BLOB)) AS BIGINT)
+               AS n_bytes,
+           md5(coalesce(text, '')) AS md5
+    FROM documents WHERE doc_id % 10 = 0
+    """,
+)
+
+
+# ---------------------------------------------------------------------------
+# ext_variant_json: Spark 4 VARIANT ingestion — parse the props JSON once
+# into the binary variant encoding, then typed variant_get extraction
+# (the shredding-friendly path a 100 TB semi-structured column should
+# take: parse once, extract many, no per-path string re-parse the way
+# repeated get_json_object calls do).
+
+def q_ext_variant_json(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = _t(spark, sf_dir, "events")
+    v = F.try_parse_json(F.col("props"))
+    k = F.variant_get(v, "$.k", "bigint")
+    missing = F.try_variant_get(v, "$.not_there", "string")
+    return (
+        ev.select("event_type", k.alias("k"), missing.alias("m"))
+        .groupBy("event_type")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum("k").cast("bigint").alias("sum_k"),
+            F.sum(F.when(F.col("k").isNull(), 1).otherwise(0))
+            .cast("bigint")
+            .alias("n_null_k"),
+            F.sum(F.when(F.col("m").isNull(), 1).otherwise(0))
+            .cast("bigint")
+            .alias("n_null_missing"),
+        )
+    )
+
+
+register(
+    "ext_variant_json",
+    q_ext_variant_json,
+    """
+    SELECT event_type,
+           CAST(COUNT(*) AS BIGINT) AS n,
+           CAST(SUM(CAST(json_extract(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k,
+           CAST(SUM(CASE WHEN json_extract(props, '$.k') IS NULL THEN 1 ELSE 0 END)
+                AS BIGINT) AS n_null_k,
+           CAST(SUM(CASE WHEN json_extract_string(props, '$.not_there') IS NULL
+                    THEN 1 ELSE 0 END) AS BIGINT) AS n_null_missing
+    FROM events GROUP BY event_type
+    """,
+)
+
+
+# ---------------------------------------------------------------------------
+# ext_snapshot_diff: v1 = orders minus every 11th key; v2 = orders minus
+# every 7th key, with a 10% price bump on every 5th key. One full-outer
+# sort-merge join on the key, then a per-status rollup with a key
+# checksum. At 100 TB both versions would be bucketed on the key and the
+# join would be exchange-free (bucketed_join proves that layout).
+
+
+def q_ext_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
+    orders = _t(spark, sf_dir, "orders")
+    cols = ["o_orderkey", "o_totalprice", "o_orderstatus"]
+    v1 = orders.filter(F.col("o_orderkey") % 11 != 0).select(*cols)
+    v2 = orders.filter(F.col("o_orderkey") % 7 != 0).select(
+        "o_orderkey",
+        F.when(
+            F.col("o_orderkey") % 5 == 0,
+            F.col("o_totalprice") * F.lit(1.1),
+        )
+        .otherwise(F.col("o_totalprice"))
+        .alias("o_totalprice"),
+        "o_orderstatus",
+    )
+    diff = V.snapshot_diff(v1, v2, "o_orderkey", ["o_totalprice", "o_orderstatus"])
+    return V.diff_summary(diff, "o_orderkey")
+
+
+register(
+    "ext_snapshot_diff",
+    q_ext_snapshot_diff,
+    """
+    WITH v1 AS (
+        SELECT o_orderkey, o_totalprice, o_orderstatus
+        FROM orders WHERE o_orderkey % 11 <> 0
+    ), v2 AS (
+        SELECT o_orderkey,
+               CASE WHEN o_orderkey % 5 = 0
+                    THEN o_totalprice * CAST(1.1 AS DOUBLE)
+                    ELSE o_totalprice END AS o_totalprice,
+               o_orderstatus
+        FROM orders WHERE o_orderkey % 7 <> 0
+    ), d AS (
+        SELECT coalesce(a.o_orderkey, b.o_orderkey) AS k,
+               CASE WHEN a.o_orderkey IS NULL THEN 'added'
+                    WHEN b.o_orderkey IS NULL THEN 'deleted'
+                    WHEN a.o_totalprice IS NOT DISTINCT FROM b.o_totalprice
+                         AND a.o_orderstatus IS NOT DISTINCT FROM b.o_orderstatus
+                         THEN 'unchanged'
+                    ELSE 'changed' END AS status
+        FROM v1 a FULL OUTER JOIN v2 b ON a.o_orderkey = b.o_orderkey
+    )
+    SELECT status, CAST(COUNT(*) AS BIGINT) AS n,
+           CAST(SUM(k) AS BIGINT) AS key_checksum
+    FROM d GROUP BY status
+    """,
+)
+
+
+# ---------------------------------------------------------------------------
+# ext_incremental_agg: materialized-aggregate refresh without re-scanning
+# history. The reference rebuilds its consolidated view from scratch every
+# run (main.py:630-637 one-shot + README.md:119-213 full-
+# table view); here the aggregate's mergeable partial state (count + exact
+# DECIMAL sums) is built once over history and each later partition folds
+# in with one |groups|-sized join — O(delta), not O(history). The oracle
+# is the from-scratch GROUP BY over the whole table: equality IS the proof
+# that the incremental path can replace the rescan.
+
+
+def q_ext_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from be_analytic_etl_spark.operators import incremental as I
+
+    orders = _t(spark, sf_dir, "orders")
+    keys = ["o_orderpriority"]
+    measures = {"totalprice": "o_totalprice"}
+    # Three arriving partitions: history, then two monthly-style deltas.
+    hist = orders.filter(F.col("o_orderdate") < F.lit("1996-07-01"))
+    d1 = orders.filter(
+        (F.col("o_orderdate") >= F.lit("1996-07-01"))
+        & (F.col("o_orderdate") < F.lit("1997-07-01"))
+    )
+    d2 = orders.filter(F.col("o_orderdate") >= F.lit("1997-07-01"))
+    state = I.aggregate_partial(hist, keys, measures)
+    state = I.merge_states(state, I.aggregate_partial(d1, keys, measures), keys)
+    state = I.merge_states(state, I.aggregate_partial(d2, keys, measures), keys)
+    return I.finalize(state, keys, ["totalprice"])
+
+
+register(
+    "ext_incremental_agg",
+    q_ext_incremental_agg,
+    """
+    SELECT o_orderpriority,
+           CAST(COUNT(*) AS BIGINT) AS n_rows,
+           CAST(SUM(CAST(o_totalprice AS DECIMAL(32,2))) AS DOUBLE)
+               AS total_totalprice,
+           CAST(SUM(CAST(o_totalprice AS DECIMAL(32,2))) AS DOUBLE) / COUNT(*)
+               AS avg_totalprice
+    FROM orders GROUP BY o_orderpriority
+    """,
+)
+
+
+# ---------------------------------------------------------------------------
+# ext_rollup_refresh: continuous-aggregate (hypertable-rollup) maintenance
+# under CORRECTIONS. The 1997+ partition is re-ingested with a price fix
+# (+1000.00 on every 13th key — an EXACT binary delta, so the corrected
+# double stays a near-2dp value both engines quantize to the same
+# DECIMAL; a *1.1 bump creates 3-decimal doubles whose double->decimal
+# rounding differs between engines near .005 boundaries); the monthly x
+# priority rollup refreshes by REPLACING only the touched months
+# (incremental.refresh_buckets) instead of re-aggregating history.
+# Oracle: from-scratch GROUP BY over the corrected table — equality
+# proves invalidation refresh == full rebuild.
+
+_RR_CUT = "1997-01-01"
+
+
+def q_ext_rollup_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from be_analytic_etl_spark.operators import incremental as I
+
+    orders = _t(spark, sf_dir, "orders")
+    keys = ["month", "o_orderpriority"]
+    measures = {"totalprice": "o_totalprice"}
+    month = F.date_trunc("month", F.col("o_orderdate")).cast("date").alias("month")
+
+    # v1 state: the whole table, uncorrected.
+    state = I.aggregate_partial(orders.select(month, "*"), keys, measures)
+    # Re-ingested partition: 1997+ with the price correction applied.
+    corrected = orders.filter(F.col("o_orderdate") >= F.lit(_RR_CUT)).select(
+        month,
+        "o_orderpriority",
+        F.when(
+            F.col("o_orderkey") % 13 == 0, F.col("o_totalprice") + F.lit(1000.0)
+        )
+        .otherwise(F.col("o_totalprice"))
+        .alias("o_totalprice"),
+    )
+    delta = I.aggregate_partial(corrected, keys, measures)
+    refreshed = I.refresh_buckets(state, delta, ["month"])
+    return I.finalize(refreshed, keys, ["totalprice"])
+
+
+register(
+    "ext_rollup_refresh",
+    q_ext_rollup_refresh,
+    f"""
+    WITH corrected AS (
+        SELECT CAST(date_trunc('month', o_orderdate) AS DATE) AS month,
+               o_orderpriority,
+               CASE WHEN o_orderdate >= DATE '{_RR_CUT}' AND o_orderkey % 13 = 0
+                    THEN o_totalprice + CAST(1000.0 AS DOUBLE)
+                    ELSE o_totalprice END AS o_totalprice
+        FROM orders
+    )
+    SELECT month, o_orderpriority,
+           CAST(COUNT(*) AS BIGINT) AS n_rows,
+           CAST(SUM(CAST(o_totalprice AS DECIMAL(32,2))) AS DOUBLE)
+               AS total_totalprice,
+           CAST(SUM(CAST(o_totalprice AS DECIMAL(32,2))) AS DOUBLE) / COUNT(*)
+               AS avg_totalprice
+    FROM corrected GROUP BY month, o_orderpriority
+    """,
+)
+
+
+def q_pipe_syntax_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
+    _t(spark, sf_dir, "lineitem").createOrReplaceTempView("__pipe_lineitem")
+    return spark.sql(
+        """
+        FROM __pipe_lineitem
+        |> WHERE l_shipdate >= DATE '1995-01-01' AND l_shipdate < DATE '1996-01-01'
+        |> AGGREGATE
+             CAST(COUNT(*) AS BIGINT) AS n_items,
+             CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(28,6)))
+                  AS DOUBLE) AS revenue
+           GROUP BY l_returnflag, l_linestatus
+        |> ORDER BY l_returnflag, l_linestatus
+        """
+    )
+
+
+register(
+    "pipe_syntax_revenue",
+    q_pipe_syntax_revenue,
+    """
+    SELECT l_returnflag, l_linestatus,
+           CAST(COUNT(*) AS BIGINT) AS n_items,
+           CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(28,6)))
+                AS DOUBLE) AS revenue
+    FROM lineitem
+    WHERE l_shipdate >= DATE '1995-01-01' AND l_shipdate < DATE '1996-01-01'
+    GROUP BY l_returnflag, l_linestatus
+    ORDER BY l_returnflag, l_linestatus
+    """,
+)
+
+
+def q_sql_table_function(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Parameterized view: customers of one market segment above a balance
+    floor, as a SQL table function invoked with literal arguments."""
+    _t(spark, sf_dir, "customer").createOrReplaceTempView("__tf_customer")
+    spark.sql(
+        """
+        CREATE OR REPLACE TEMPORARY FUNCTION segment_customers(
+            seg STRING, min_bal DOUBLE)
+        RETURNS TABLE(c_custkey BIGINT, c_name STRING, c_acctbal DOUBLE)
+        RETURN SELECT c_custkey, c_name, c_acctbal
+               FROM __tf_customer
+               WHERE c_mktsegment = seg AND c_acctbal >= min_bal
+        """
+    )
+    return spark.sql(
+        "SELECT * FROM segment_customers('BUILDING', 5000.0) ORDER BY c_custkey"
+    )
+
+
+register(
+    "sql_table_function",
+    q_sql_table_function,
+    """
+    SELECT c_custkey, c_name, c_acctbal
+    FROM customer
+    WHERE c_mktsegment = 'BUILDING' AND c_acctbal >= 5000.0
+    ORDER BY c_custkey
+    """,
+)
+
+
+# ---------------------------------------------------------------------------
+# k-anonymity / l-diversity release audit (Sweeney, IJUFKS 2002;
+# Machanavajjhala et al., ICDE 2006) over customer quasi-identifiers
+# (nation, market segment) with the account balance BUCKETED as the
+# sensitive attribute (bucket before auditing — raw continuous values
+# make every class trivially "diverse"). One partial-agg groupBy; see
+# operators/privacy.py for the scale notes. at_risk flags classes
+# smaller than k=10; l_diversity = 1 means the class leaks the
+# sensitive bucket even if it is k-anonymous.
+_KANON_K = 10
+
+
+# ext_k_anonymity: quasi-identifier k-anonymity / l-diversity audit
+# (Sweeney 2002; Machanavajjhala 2006) over customer (nation, segment)
+# classes — the release-risk check ``ext_redact``'s direct-PII scrub does
+# not cover.
+def q_ext_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from be_analytic_etl_spark.operators.privacy import k_anonymity
+
+    cust = _t(spark, sf_dir, "customer")
+    sens = (
+        F.when(F.col("c_acctbal") < 0, F.lit("overdrawn"))
+        .when(F.col("c_acctbal") < 5000, F.lit("mid"))
+        .otherwise(F.lit("high"))
+    )
+    return k_anonymity(
+        cust, ["c_nationkey", "c_mktsegment"], sens, k=_KANON_K
+    )
+
+
+register(
+    "ext_k_anonymity",
+    q_ext_k_anonymity,
+    f"""
+    SELECT c_nationkey, c_mktsegment,
+           CAST(COUNT(*) AS BIGINT) AS class_size,
+           CAST(COUNT(DISTINCT CASE WHEN c_acctbal < 0 THEN 'overdrawn'
+                                    WHEN c_acctbal < 5000 THEN 'mid'
+                                    ELSE 'high' END) AS BIGINT) AS l_diversity,
+           COUNT(*) < {_KANON_K} AS at_risk
+    FROM customer
+    GROUP BY c_nationkey, c_mktsegment
     """,
 )

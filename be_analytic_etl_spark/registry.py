@@ -35,27 +35,13 @@ def register(name: str, fn: Callable[[SparkSession, str], DataFrame], sql: str) 
 
 register("flagship_mom_pivot", flagship_orders, flagship_orders_oracle_sql())
 
-# Operator-coverage queries are registered on import:
-from be_analytic_etl_spark import queries_reference  # noqa: E402,F401
-from be_analytic_etl_spark import queries_joins  # noqa: E402,F401
-from be_analytic_etl_spark import queries_extensions  # noqa: E402,F401
-from be_analytic_etl_spark import queries_analytics  # noqa: E402,F401
-from be_analytic_etl_spark import queries_round5  # noqa: E402,F401
-from be_analytic_etl_spark import queries_curation  # noqa: E402,F401
-from be_analytic_etl_spark import queries_storage  # noqa: E402,F401
-from be_analytic_etl_spark import queries_textprep  # noqa: E402,F401
-from be_analytic_etl_spark import queries_versioning  # noqa: E402,F401
-from be_analytic_etl_spark import queries_sqlsurface  # noqa: E402,F401
-from be_analytic_etl_spark import queries_round6  # noqa: E402,F401
-from be_analytic_etl_spark import queries_round7  # noqa: E402,F401
-from be_analytic_etl_spark import queries_round8  # noqa: E402,F401
-from be_analytic_etl_spark import queries_round9  # noqa: E402,F401
-from be_analytic_etl_spark import queries_round10  # noqa: E402,F401
-from be_analytic_etl_spark import queries_round10b  # noqa: E402,F401
-from be_analytic_etl_spark import queries_round10c  # noqa: E402,F401
-from be_analytic_etl_spark import queries_round11  # noqa: E402,F401
-from be_analytic_etl_spark import queries_round11b  # noqa: E402,F401
-from be_analytic_etl_spark import queries_round11c  # noqa: E402,F401
-from be_analytic_etl_spark import queries_round11d  # noqa: E402,F401
-from be_analytic_etl_spark import queries_round12  # noqa: E402,F401
-from be_analytic_etl_spark import queries_round13  # noqa: E402,F401
+# Queries register on import, one domain module at a time. Each domain
+# module imports only queries._shared and ``register`` above, so any of
+# them can also be imported first.
+from be_analytic_etl_spark.queries import reference  # noqa: E402,F401
+from be_analytic_etl_spark.queries import joins  # noqa: E402,F401
+from be_analytic_etl_spark.queries import statistics  # noqa: E402,F401
+from be_analytic_etl_spark.queries import events  # noqa: E402,F401
+from be_analytic_etl_spark.queries import text  # noqa: E402,F401
+from be_analytic_etl_spark.queries import dedup  # noqa: E402,F401
+from be_analytic_etl_spark.queries import graph  # noqa: E402,F401

@@ -387,11 +387,6 @@ def _is_month(name: str) -> bool:
     return _DATE_COL_YM.match(name.strip()) is not None
 
 
-def classify_columns(columns: list[str]) -> tuple[list[str], list[str]]:
-    """R1 column classification: id columns vs month ('YYYY-MM') columns."""
-    return [c for c in columns if _is_id(c)], [c for c in columns if _is_month(c)]
-
-
 def tidy_decimal_strings(df: DataFrame, skip_cols: list[str]) -> DataFrame:
     """P11: trailing-zero strip on every non-id column (string cosmetics)."""
     return df.select(
@@ -417,7 +412,13 @@ def _to_long_sql(
     fan-out. The statement is one string, so building it costs the same
     py4j calls for 4 months as for 100. Every cell is cast to the string
     it already is, which leaves the reader's field metadata
-    (``HEADER_ROW``) behind: it describes the raw file, not the fact."""
+    (``HEADER_ROW``) behind: it describes the raw file, not the fact.
+
+    ALL id columns survive the unpivot (main.py:499 keeps OPERADORA through
+    the melt): files keyed by operator would otherwise lose that column and
+    consolidate().dropDuplicates() could merge rows from different operators
+    that agree on the remaining columns. Files without OPERADORA null-fill
+    it at union time (``unionByName(allowMissingColumns=True)``)."""
     ids = [(c, n) for c, n in zip(cols, names) if _is_id(n)]
     months = [(c, n) for c, n in zip(cols, names) if _is_month(n)]
     if not ids or not months:
@@ -444,27 +445,6 @@ def _format_escape(text: str) -> str:
     return text.replace("{", "{{").replace("}", "}}")
 
 
-def to_long(df: DataFrame, service: str) -> DataFrame:
-    """R1-R4: unpivot month columns into (REFERENCIA_MES, VALOR), parse the
-    month to DateType and the value through the Brazilian-number normalizer,
-    and tag the source service. Falls back to pass-through + SERVICO when no
-    id/date columns exist (main.py:505-508).
-
-    ALL id columns survive the unpivot (main.py:499 keeps OPERADORA through
-    the melt): files keyed by operator would otherwise lose that column and
-    consolidate().dropDuplicates() could merge rows from different operators
-    that agree on the remaining columns. Files without OPERADORA null-fill
-    it at union time (``unionByName(allowMissingColumns=True)``).
-
-    The raw cells are unpivoted first and parsed after, so the plan holds
-    one copy of the BR-number expression, not one per month."""
-    cols = df.columns
-    long = _to_long_sql(df, cols, cols, service)
-    if long is None:
-        return df.withColumn("SERVICO", F.lit(service))
-    return long
-
-
 def transform_wide(raw: DataFrame, service: str) -> DataFrame:
     """The full P5-P10 + R1-R4 transform chain over an already-read raw
     frame: discover header -> drop metadata/blank rows -> positional
@@ -479,7 +459,8 @@ def transform_wide(raw: DataFrame, service: str) -> DataFrame:
     the row filter is one expression, and the rename (P9) and label
     normalization (P10) are name edits on the driver that land in the
     one unpivot statement. Only the pass-through branch (no id or month
-    column) renames the frame and tidies decimal strings (P11)."""
+    column, main.py:505-508) renames the frame, tidies decimal strings
+    (P11) and tags SERVICO."""
     data, header = _find_header(raw, HEADER_MARKERS)
     cols = raw.columns
     names = _header_names(header)
@@ -491,8 +472,9 @@ def transform_wide(raw: DataFrame, service: str) -> DataFrame:
     long = _to_long_sql(data, cols, names, service)
     if long is not None:
         return long
-    id_cols, _ = classify_columns(names)
-    return to_long(tidy_decimal_strings(data.toDF(*names), skip_cols=id_cols), service)
+    return tidy_decimal_strings(
+        data.toDF(*names), skip_cols=[n for n in names if _is_id(n)]
+    ).withColumn("SERVICO", F.lit(service))
 
 
 def ingest_wide_file(

@@ -66,14 +66,16 @@ def test_round8_fixed_sites_still_protected():
     zero findings file-by-file (a regression would reintroduce the
     exact bug class the audit cleared)."""
     fixed_files = [
-        "queries_extensions.py",   # embedding_stats mean_norm
-        "queries_round5.py",       # BM25 / DSIR llr / PMI / label balance
-        "queries_round8.py",       # class-separation distance sums
+        "queries/dedup.py",        # embedding_stats mean_norm
+        "queries/text.py",         # BM25 / DSIR llr / PMI / label balance
+        "queries/statistics.py",   # class-separation distance sums
         "operators/normalize.py",  # temperature_weights pow
     ]
     findings = lint_decimal_casts(PKG)
     flagged = {f.detail.split(":")[0] for f in findings}
     for rel in fixed_files:
+        # a renamed file would leave ``rel not in flagged`` true vacuously
+        assert os.path.isfile(os.path.join(PKG, rel)), rel
         assert rel not in flagged
 
 

@@ -404,6 +404,27 @@ def test_to_long_keeps_operadora(spark, tmp_path):
     assert consolidate([df]).count() == 2
 
 
+def test_file_without_month_columns_passes_through(spark, tmp_path):
+    """No ``YYYY-MM`` column: nothing to unpivot (main.py:505-508). The
+    rows below the header keep their columns, renamed, with the
+    trailing-zero tidy on every non-id column, plus SERVICO."""
+    content = (
+        "SERVIÇO: SMP\t\t\t\n"
+        "GRUPO ECONÔMICO\tVARIAVEL\tTOTAL\tMEDIA\n"
+        "CLARO\t1.50\t15.00\t15.50\n"
+        "VIVO\tIDA\t2,5\tND\n"
+    )
+    p = tmp_path / "ida_no_months.csv"
+    p.write_text(content, encoding="utf-8")
+    df = ingest_wide_file(spark, str(p), service="SMP")
+    assert df.columns == ["GRUPO_ECONOMICO", "VARIAVEL", "TOTAL", "MEDIA", "SERVICO"]
+    assert sorted(tuple(r) for r in df.collect()) == [
+        # VARIAVEL is an id column: its '1.50' is not tidied
+        ("CLARO", "1.50", "15", "15.5", "SMP"),
+        ("VIVO", "IDA", "2,5", "ND", "SMP"),
+    ]
+
+
 def _make_ods(rows: list[list[str | None]]) -> bytes:
     """Minimal valid ODS: zip with mimetype + content.xml (first sheet),
     exercising number-columns-repeated RLE and empty cells."""

@@ -34,10 +34,7 @@ def _median(vals):
 def scored_docs(spark):
     """(source, lang, n_chars, q6) per document — q6 exactly as the
     queries compute it (stable-rounded DECIMAL(18,6))."""
-    # registry first: importing queries_round9 directly would re-enter
-    # the partially-initialized queries_extensions module (circular)
-    import be_analytic_etl_spark.registry  # noqa: F401
-    from be_analytic_etl_spark.queries_round9 import _q6
+    from be_analytic_etl_spark.queries.statistics import _q6
     from be_analytic_etl_spark.sources import load_table
 
     rows = (
@@ -50,7 +47,7 @@ def scored_docs(spark):
 
 @pytest.fixture(scope="module")
 def daily(spark):
-    from be_analytic_etl_spark.queries_round8 import _daily_cents
+    from be_analytic_etl_spark.queries._shared import _daily_cents
 
     return [(r["day"], r["c"]) for r in _daily_cents(spark, SF_DIR).collect()]
 

@@ -63,8 +63,7 @@ def test_kruskal_wallis_on_random_corpus(spark, tmp_path, seed):
     sf_dir = str(tmp_path / f"sf_kw{seed}")
     _write_documents_langs(spark, sf_dir, rows)
 
-    import be_analytic_etl_spark.registry  # noqa: F401
-    from be_analytic_etl_spark.queries_round9 import _q6
+    from be_analytic_etl_spark.queries.statistics import _q6
     from be_analytic_etl_spark.sources import load_table
 
     scored = [
@@ -185,9 +184,7 @@ def test_jonckheere_on_random_corpus(spark, tmp_path, seed):
         "doc_id long, text string, lang string, source string, n_chars long",
     ).coalesce(1).write.mode("overwrite").parquet(f"{sf_dir}/documents.parquet")
 
-    import be_analytic_etl_spark.registry  # noqa: F401
-    from be_analytic_etl_spark.queries_round9 import _q6
-    from be_analytic_etl_spark.queries_round10 import _JT_LEN_DIV, _JT_LEN_MAX
+    from be_analytic_etl_spark.queries.statistics import _JT_LEN_DIV, _JT_LEN_MAX, _q6
     from be_analytic_etl_spark.sources import load_table
 
     scored = [
@@ -365,8 +362,7 @@ def test_cramers_v_on_random_corpus(spark, tmp_path, seed):
     sf_dir = str(tmp_path / f"sf_cv{seed}")
     _write_documents_langs(spark, sf_dir, rows)
 
-    import be_analytic_etl_spark.registry  # noqa: F401
-    from be_analytic_etl_spark.queries_round9 import _q6
+    from be_analytic_etl_spark.queries.statistics import _q6
     from be_analytic_etl_spark.sources import load_table
 
     scored = [

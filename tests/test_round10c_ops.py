@@ -111,8 +111,7 @@ def test_growth_accounting_identity_and_bruteforce(spark):
 
 
 def test_permutation_test_matches_bruteforce(spark):
-    import be_analytic_etl_spark.registry  # noqa: F401
-    from be_analytic_etl_spark.queries_round9 import _q6
+    from be_analytic_etl_spark.queries.statistics import _q6
     from be_analytic_etl_spark.sources import load_table
 
     scored = [

@@ -1,4 +1,5 @@
-"""Round-13 queries (queries_round13.py): each matches its DuckDB
+"""Two-proportion, two-changepoint and Benjamini-Hochberg queries
+(queries/statistics.py, queries/events.py): each matches its DuckDB
 oracle at sf0.001, plus brute-force checks of the statistics."""
 
 from __future__ import annotations
@@ -8,18 +9,17 @@ from collections import defaultdict
 
 import hashlib
 
-# registry first (circular-import discipline)
-from be_analytic_etl_spark import registry  # noqa: F401
-
 SF_DIR = "/root/testdata/sf0.001"
 
 
 def test_staged_candidates_match_their_oracles(spark, duck):
     from tests.conftest import assert_matches_oracle
 
-    from be_analytic_etl_spark.queries_round13 import (
+    from be_analytic_etl_spark.queries.events import (
         binseg2_changepoint,
         binseg2_changepoint_oracle,
+    )
+    from be_analytic_etl_spark.queries.statistics import (
         fdr_bh_panel,
         fdr_bh_panel_oracle,
         two_proportion_panel,
@@ -37,9 +37,7 @@ def test_staged_candidates_match_their_oracles(spark, duck):
 def test_two_proportion_matches_python_fold(spark):
     """Exact day-0-conversion counts + the z formula recomputed from
     raw rows with the same portable hash bucketing."""
-    from be_analytic_etl_spark.queries_round13 import (
-        two_proportion_panel,
-    )
+    from be_analytic_etl_spark.queries.statistics import two_proportion_panel
     from be_analytic_etl_spark.sources import load_table
 
     rows = (
@@ -90,9 +88,7 @@ def test_two_proportion_matches_python_fold(spark):
 def test_binseg2_beats_or_ties_single_split(spark):
     """Adding a second changepoint can only explain MORE variance than
     the registered single-split query's best (nested models)."""
-    from be_analytic_etl_spark.queries_round13 import (
-        binseg2_changepoint,
-    )
+    from be_analytic_etl_spark.queries.events import binseg2_changepoint
     from be_analytic_etl_spark.registry import QUERIES
 
     (two,) = binseg2_changepoint(spark, SF_DIR).collect()
@@ -106,9 +102,7 @@ def test_binseg2_matches_exhaustive_python(spark):
     """Exhaustive (t1, t2) search over the exact daily-cents series."""
     import duckdb
 
-    from be_analytic_etl_spark.queries_round13 import (
-        binseg2_changepoint,
-    )
+    from be_analytic_etl_spark.queries.events import binseg2_changepoint
 
     daily = duckdb.sql(f"""
         SELECT CAST(ts AS DATE) AS day,
@@ -147,7 +141,7 @@ def test_binseg2_matches_exhaustive_python(spark):
 def test_fdr_bh_matches_python_stepup(spark):
     """The BH step-up recomputed from the panel's own (already oracle-
     checked) p-values: sort, threshold (i/m)q, reject ranks <= k."""
-    from be_analytic_etl_spark.queries_round13 import fdr_bh_panel
+    from be_analytic_etl_spark.queries.statistics import fdr_bh_panel
 
     rows = fdr_bh_panel(spark, SF_DIR).collect()
     ps = sorted(
@@ -181,9 +175,7 @@ def test_fdr_p_approximation_accuracy(spark):
     p (math.erfc reference)."""
     from pyspark.sql import functions as F
 
-    from be_analytic_etl_spark.queries_round13 import (
-        P_TWO_SIDED_EXPR,
-    )
+    from be_analytic_etl_spark.queries.statistics import P_TWO_SIDED_EXPR
 
     zs = [0.0, 0.1, 0.5, 1.0, 1.5, 1.96, 2.5, 3.0, 4.0, 5.0]
     df = spark.createDataFrame([(z,) for z in zs], "az double").select(

@@ -316,7 +316,6 @@ def test_mad_outliers_fence_resists_a_wild_value(spark):
     property that breaks mean/stddev z-scores."""
     rows = [("a", float(i % 10)) for i in range(100)] + [("a", 1e9)]
     df = spark.createDataFrame(rows, "event_type string, value double")
-    from be_analytic_etl_spark.registry import QUERIES  # noqa: F401  (style parity)
     from pyspark.sql import functions as F2
 
     med = df.groupBy("event_type").agg(F2.expr("percentile(value, 0.5)").alias("med"))

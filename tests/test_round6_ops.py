@@ -181,9 +181,9 @@ def test_mixture_kl_zero_when_source_is_the_corpus(tmp_path, spark):
     )
     d = str(tmp_path / "kl")
     one.coalesce(1).write.parquet(f"{d}/documents.parquet")
-    import be_analytic_etl_spark.queries_round6 as R
+    from be_analytic_etl_spark.queries.text import q_ext_mixture_kl
 
-    rows = R.q_ext_mixture_kl(spark, d).collect()
+    rows = q_ext_mixture_kl(spark, d).collect()
     assert len(rows) == 1
     assert rows[0]["kl_bits"] == 0.0
     assert rows[0]["n_tokens"] == 6

@@ -353,7 +353,7 @@ def test_hill_tail_matches_sorted_definition(spark):
     import duckdb
 
     from be_analytic_etl_spark.registry import QUERIES  # noqa: F401 (registers modules)
-    from be_analytic_etl_spark.queries_round7 import _HILL_K
+    from be_analytic_etl_spark.queries.statistics import _HILL_K
 
     sf = "/root/testdata/sf0.001"
     got = QUERIES["ext_hill_tail"](spark, sf).collect()[0]
@@ -380,7 +380,7 @@ def test_gpd_tail_matches_sorted_definition(spark):
     import duckdb
 
     from be_analytic_etl_spark.registry import QUERIES  # noqa: F401 (registers modules)
-    from be_analytic_etl_spark.queries_round7 import _POT_K
+    from be_analytic_etl_spark.queries.statistics import _POT_K
 
     sf = "/root/testdata/sf0.001"
     got = QUERIES["ext_gpd_tail"](spark, sf).collect()[0]

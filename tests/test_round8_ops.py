@@ -162,8 +162,7 @@ def test_cusum_constant_series_degenerate(spark):
 # terms) on a synthetic binned frame — a source distributed like the
 # corpus must score ~0 and a concentrated source must rank far higher.
 def test_psi_orders_sources_by_drift(spark):
-    from be_analytic_etl_spark.registry import QUERIES  # noqa: F401 (registers modules)
-    from be_analytic_etl_spark.queries_round8 import _PSI_BINS, psi_from_binned
+    from be_analytic_etl_spark.queries.statistics import _PSI_BINS, psi_from_binned
 
     rows = []
     # "flat": 200 docs in every bin — dominates the pool, so it sits
@@ -209,8 +208,7 @@ def test_kmins_merged_label_collision_raises(spark):
 # per-rank discounts, both exact decimals) and ndcg bounded by 1 on the
 # registered query's own data path at sf0.001.
 def test_ndcg_tables_consistent():
-    from be_analytic_etl_spark.registry import QUERIES  # noqa: F401 (registers modules)
-    from be_analytic_etl_spark.queries_round8 import _NDCG_PREFIX, _NDCG_W6
+    from be_analytic_etl_spark.queries.statistics import _NDCG_PREFIX, _NDCG_W6
 
     acc = Decimal(0)
     for w, p in zip(_NDCG_W6, _NDCG_PREFIX):
@@ -222,8 +220,7 @@ def test_ndcg_tables_consistent():
 
 def test_ndcg_bounded(spark):
     sf_dir = "/root/testdata/sf0.001"
-    from be_analytic_etl_spark.registry import QUERIES  # noqa: F401 (registers modules)
-    from be_analytic_etl_spark.queries_round8 import q_ext_ndcg
+    from be_analytic_etl_spark.queries.statistics import q_ext_ndcg
 
     rows = q_ext_ndcg(spark, sf_dir).collect()
     assert rows
@@ -239,8 +236,7 @@ def test_ndcg_bounded(spark):
 # rate (lift exactly 1 at full coverage).
 def test_lift_full_coverage_is_base_rate(spark):
     sf_dir = "/root/testdata/sf0.001"
-    from be_analytic_etl_spark.registry import QUERIES  # noqa: F401 (registers modules)
-    from be_analytic_etl_spark.queries_round8 import q_ext_lift_curve
+    from be_analytic_etl_spark.queries.statistics import q_ext_lift_curve
 
     rows = sorted(
         q_ext_lift_curve(spark, sf_dir).collect(), key=lambda r: r["bin"]
@@ -255,8 +251,7 @@ def test_lift_full_coverage_is_base_rate(spark):
 # Benford: digit table covers 1..9 exactly and freqs sum to 1.
 def test_benford_digit_table(spark):
     sf_dir = "/root/testdata/sf0.001"
-    from be_analytic_etl_spark.registry import QUERIES  # noqa: F401 (registers modules)
-    from be_analytic_etl_spark.queries_round8 import q_ext_benford_digits
+    from be_analytic_etl_spark.queries.statistics import q_ext_benford_digits
 
     rows = q_ext_benford_digits(spark, sf_dir).collect()
     assert [r["digit"] for r in rows] == list(range(1, 10))
@@ -270,9 +265,8 @@ def test_benford_digit_table(spark):
 # the salt injects is counted.
 def test_pii_audit_ground_truth(spark):
     sf_dir = "/root/testdata/sf0.001"
-    from be_analytic_etl_spark.registry import QUERIES  # noqa: F401 (registers modules)
-    from be_analytic_etl_spark.queries_round8 import q_ext_pii_audit
-    from be_analytic_etl_spark.queries_extensions import _t  # after registry
+    from be_analytic_etl_spark.queries.text import q_ext_pii_audit
+    from be_analytic_etl_spark.queries._shared import _t
 
     docs = _t(spark, sf_dir, "documents")
     want = {
@@ -293,8 +287,7 @@ def test_pii_audit_ground_truth(spark):
 def test_mann_kendall_detects_trend(spark, tmp_path):
     """A strictly increasing series has S = n(n-1)/2 and a large
     positive z; a constant series has S = 0 and var_num = 0."""
-    from be_analytic_etl_spark.registry import QUERIES  # noqa: F401
-    from be_analytic_etl_spark.queries_round8 import q_ext_mann_kendall
+    from be_analytic_etl_spark.queries.events import q_ext_mann_kendall
 
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -322,8 +315,7 @@ def test_mann_kendall_detects_trend(spark, tmp_path):
 def test_acf_periodic_series(spark, tmp_path):
     """A period-2 alternating series has strongly negative acf at lag 1
     and strongly positive at lag 2."""
-    from be_analytic_etl_spark.registry import QUERIES  # noqa: F401
-    from be_analytic_etl_spark.queries_round8 import q_ext_acf
+    from be_analytic_etl_spark.queries.events import q_ext_acf
 
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -351,8 +343,7 @@ def test_anova_f_between_vs_within(spark):
     """ANOVA identity on the real data path: SS_between + SS_within must
     equal the total sum of squares (up to the 6dp quantization), and F
     is nonnegative."""
-    from be_analytic_etl_spark.registry import QUERIES  # noqa: F401
-    from be_analytic_etl_spark.queries_round8 import q_ext_anova_f
+    from be_analytic_etl_spark.queries.statistics import q_ext_anova_f
 
     out = q_ext_anova_f(spark, "/root/testdata/sf0.001").collect()[0]
     assert out["k"] > 1 and out["n"] > out["k"]
@@ -365,8 +356,7 @@ def test_anova_f_between_vs_within(spark):
 def test_dow_index_averages_to_one(spark):
     """The weighted mean of dow_index over days is exactly 1 (it is a
     ratio of shares), and dows cover only 0..6."""
-    from be_analytic_etl_spark.registry import QUERIES  # noqa: F401
-    from be_analytic_etl_spark.queries_round8 import q_ext_dow_seasonality
+    from be_analytic_etl_spark.queries.events import q_ext_dow_seasonality
 
     rows = q_ext_dow_seasonality(spark, "/root/testdata/sf0.001").collect()
     assert all(0 <= r["dow"] <= 6 for r in rows)
@@ -384,7 +374,7 @@ def test_tdigest_read_error_bounded_by_cluster_span(spark):
     inside [v_min, v_max]), and the exact values must be the true order
     statistics at the requested ranks."""
     from be_analytic_etl_spark.registry import QUERIES
-    from be_analytic_etl_spark.queries_round11 import _TD_READ_Q
+    from be_analytic_etl_spark.queries.statistics import _TD_READ_Q
 
     sf_dir = "/root/testdata/sf0.001"
     rows = QUERIES["ext_tdigest_panel"](spark, sf_dir).collect()
@@ -410,8 +400,7 @@ def test_tdigest_read_error_bounded_by_cluster_span(spark):
 
 def test_zipf_slope_negative(spark):
     """Natural-ish token frequencies must fit a negative Zipf slope."""
-    from be_analytic_etl_spark.registry import QUERIES  # noqa: F401
-    from be_analytic_etl_spark.queries_round8 import q_ext_zipf_fit
+    from be_analytic_etl_spark.queries.text import q_ext_zipf_fit
 
     out = q_ext_zipf_fit(spark, "/root/testdata/sf0.001").collect()[0]
     assert out["k"] >= 2
@@ -421,9 +410,8 @@ def test_zipf_slope_negative(spark):
 def test_burstiness_vmr_identity(spark):
     """VMR must equal the brute-force variance/mean over per-doc counts
     (zeros included) for a spot-checked token."""
-    from be_analytic_etl_spark.registry import QUERIES  # noqa: F401
-    from be_analytic_etl_spark.queries_round8 import q_ext_burstiness
-    from be_analytic_etl_spark.queries_extensions import _t
+    from be_analytic_etl_spark.queries.text import q_ext_burstiness
+    from be_analytic_etl_spark.queries._shared import _t
     from be_analytic_etl_spark.operators import textstats as T
 
     sf_dir = "/root/testdata/sf0.001"
@@ -450,8 +438,7 @@ def test_burstiness_vmr_identity(spark):
 def test_fertility_bpe_at_least_words(spark):
     """BPE-ish subword count can never be below the whitespace word
     count on space-separated text, so fertility >= 1 per language."""
-    from be_analytic_etl_spark.registry import QUERIES  # noqa: F401
-    from be_analytic_etl_spark.queries_round8 import q_ext_token_fertility
+    from be_analytic_etl_spark.queries.text import q_ext_token_fertility
 
     rows = q_ext_token_fertility(spark, "/root/testdata/sf0.001").collect()
     assert rows

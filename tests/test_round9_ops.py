@@ -88,7 +88,7 @@ def test_seasonal_decompose_additivity(spark):
 
 def test_theil_sen_matches_bruteforce(spark):
     out = _q(spark, "ext_theil_sen").collect()[0]
-    from be_analytic_etl_spark.queries_round8 import _daily_cents
+    from be_analytic_etl_spark.queries._shared import _daily_cents
 
     daily = sorted(
         (r["day"], r["c"]) for r in _daily_cents(spark, SF_DIR).collect()
@@ -165,8 +165,7 @@ def test_brier_decomposition_matches_bruteforce(spark):
     # holds only for DISCRETE forecasts; with continuous scores binned
     # there is a nonnegative within-bin variance residual (Stephenson
     # et al. 2008), so we check components, not the identity.
-    from be_analytic_etl_spark.queries_round7 import _scored
-    from be_analytic_etl_spark.queries_round9 import _BRIER_BINS
+    from be_analytic_etl_spark.queries.statistics import _BRIER_BINS, _scored
 
     rows = [(float(r["score"]), r["pos"]) for r in _scored(spark, SF_DIR).collect()]
     n = len(rows)
@@ -199,7 +198,7 @@ def test_brier_decomposition_matches_bruteforce(spark):
 
 def test_runs_test_matches_bruteforce(spark):
     out = _q(spark, "ext_runs_test").collect()[0]
-    from be_analytic_etl_spark.queries_round8 import _daily_cents
+    from be_analytic_etl_spark.queries._shared import _daily_cents
 
     daily = sorted(
         (r["day"], r["c"]) for r in _daily_cents(spark, SF_DIR).collect()

@@ -200,8 +200,7 @@ def _collected_scores(spark, sf_dir):
     expression the registered queries use — the brute force below then
     checks the RANK ALGEBRA (pair counting vs the bounded-histogram
     trick), which is the identity the r9 verdict asked to pin."""
-    import be_analytic_etl_spark.registry  # noqa: F401  (load order)
-    from be_analytic_etl_spark.queries_round9 import _q6
+    from be_analytic_etl_spark.queries.statistics import _q6
     from be_analytic_etl_spark.sources import load_table
 
     return [

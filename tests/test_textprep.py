@@ -10,7 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from be_analytic_etl_spark.operators import normalize as N
-from be_analytic_etl_spark.queries_textprep import _CLEAN_FRAGMENT, _DIRTY_FRAGMENT
+from be_analytic_etl_spark.queries.text import _CLEAN_FRAGMENT, _DIRTY_FRAGMENT
 from be_analytic_etl_spark.registry import QUERIES
 
 SF_DIR = "/root/testdata/sf0.001"
